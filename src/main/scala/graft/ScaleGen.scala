@@ -44,14 +44,7 @@ object ScaleGen {
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-scalegen")
     try run(spark, src, dst, factor) finally spark.stop()
   }
 

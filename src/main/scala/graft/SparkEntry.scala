@@ -38,7 +38,7 @@ object SparkEntry {
     * the real StreamExecution engine (checkpoints, RocksDB state) or an
     * embedded-Derby JDBC round-trip. Shared by SqlParitySpec (their
     * batch oracle SQL replays nothing the streaming specs don't already
-    * gate end-to-end) and tools/PlanAudit (no static batch plan exists
+    * gate end-to-end) and `Dev census` (no static batch plan exists
     * to census). One list so the two consumers cannot drift when the
     * next streaming query lands. */
   val nonRelationalLifecycle: Set[String] = Set(

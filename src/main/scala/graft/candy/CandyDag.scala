@@ -51,12 +51,7 @@ object CandyDag {
   /** CLI: CandyDag <productsCsv> <transactionsGlob> <outputDir> */
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: CandyDag <productsCsv> <txnsGlob> <outDir>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("candy-dag")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("candy-dag")
     try {
       val results = build(spark, args(0), args(1), args(2)).run()
       results.foreach { case (name, r) => println(s"stage $name: $r") }

@@ -25,12 +25,7 @@ import graft.forecast.Forecaster
 object CandyMain {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("candy-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("candy-pipeline")
     try run(spark, args.toList) finally spark.stop()
   }
 

@@ -11,13 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * is censused-or-excluded).
   *
   * This is the inverse completeness check, run against the committed
-  * PLANS.md instead of inside the generator (PlanAudit already censuses
-  * `queries.keySet` by construction — the thing that rots is the
-  * artifact, so the artifact is what the gate reads): every
+  * PLANS.md instead of inside the generator (`Dev census` already
+  * censuses `queries.keySet` by construction — the thing that rots is
+  * the artifact, so the artifact is what the gate reads): every
   * `SparkEntry.queries` key must appear as a census row or in the
   * exclusion section, and every censused row must still be a declared
   * query. Adding a query without regenerating PLANS.md
-  * (`tools/run.sh graft.tools.PlanAudit /root/testdata/sf0.001
+  * (`tools/run.sh graft.tools.Dev census <sf0.001 fixture dir>
   * PLANS.md`) now fails the suite instead of aging silently.
   *
   * SCALING.md gets the same two-sided pin against its four-decade

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * matter of course (preemption, spot loss, straggler kill); an
   * operator whose answer changes under a retried task is wrong at
   * scale no matter what it scores on a clean local run. The session
-  * runs local[8,2] (one retry), and the injector fails partition 0's
+  * runs local[N,2] (one retry), and the injector fails partition 0's
   * FIRST attempt — so the map-side work of the aggregation under test
   * really executes twice and the discarded attempt must leave no
   * trace.

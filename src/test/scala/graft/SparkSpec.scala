@@ -11,25 +11,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      // local[8,2]: 8 threads, spark.task.maxFailures=2 — one task
-      // RETRY, matching any real cluster (local[8]'s fail-fast
-      // maxFailures=1 exists nowhere in production). Lets
-      // RetryInvarianceSpec inject fail-once tasks and pin that
-      // results are unchanged; inert for every other suite (a test
-      // that deliberately fails a job still fails it, one attempt
-      // later).
-      .master("local[8,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tests run under the same extensions Verify/Bench deploy with
-      // (SQL function registry + conf-gated optimizer rules)
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions().apply(_))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // graft.Session's settings unchanged: tests run the plans Bench times,
+  // and local[N,2]'s one task retry lets RetryInvarianceSpec inject
+  // fail-once tasks (inert for every other suite: a test that
+  // deliberately fails a job still fails it, one attempt later)
+  lazy val session: SparkSession = Session("graft-test")
 }

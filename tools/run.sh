@@ -2,6 +2,7 @@
 # Dev helper: run a graft main class directly on the compiled classes,
 # skipping sbt JVM spin-up. Usage: tools/run.sh graft.Verify <args...>
 set -e
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 CLS="$1"; shift
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -13,7 +14,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $OPENS ${GRAFT_JVM_EXTRA:-} \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"

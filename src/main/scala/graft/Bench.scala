@@ -354,14 +354,14 @@ object Bench {
       // streaming first-touch: engine class loading / state-store init
       "q71_streaming_daily",
       // q92/q95 stage their own source copies (doubled / sentinel'd)
-      // once per JVM
+      // once per application
       "q92_streaming_dedup",
       "q95_streaming_sessions",
       "q96_stream_stream_join",
-      // q115/q118 share one split-3 staged source copy per JVM
+      // q115/q118 share one split-3 staged source copy per app
       "q115_streaming_running_totals",
       "q118_streaming_foreachbatch",
-      // q200 stages its own time-split + sentinel source copy per JVM
+      // q200 stages its own time-split + sentinel source copy per app
       "q200_streaming_timers")
     staged.foreach { name =>
       step(name)(SparkEntry.queries(name)(spark, sfDir).count())

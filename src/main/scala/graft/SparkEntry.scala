@@ -3,9 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Aggregates the per-module query registries; every entry in `queries`
-  * that is ANSI-SQL-expressible has a DuckDB oracle in `oracleSql`.
+/** One declared-query module: its queries, and for each one that is
+  * ANSI-SQL-expressible an equivalent DuckDB oracle SQL. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracle: Map[String, String]
+}
+
+/** Entry contract (SURVEY.md §7): every query module's registry in one
+  * map, and every ANSI-SQL-expressible entry's DuckDB oracle in another.
   */
 object SparkEntry {
 
@@ -13,26 +19,36 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.multiJoin(spark, "/root/testdata/sf0.001")
 
+  private val modules: Seq[QueryModule] = Seq(
+    RelationalQueries, CandyQueries, TextQueries,
+    AnalyticsQueries, Analytics2Queries, Analytics3Queries,
+    Tpch2Queries, Tpch3Queries,
+    CdcOps, DedupOps, SimilarityOps, AnnIndex,
+    graft.multimodal.MultimodalOps, graft.sources.LayoutQueries,
+    graft.sources.v2.RangeSourceQueries, graft.sources.v2.MergeQueries,
+    graft.sources.v2.LakeOps, graft.sources.v2.LakeLifecycle,
+    graft.sources.v2.MorQueries, graft.sources.v2.LakeTxn,
+    graft.sources.v2.EqUpsertQueries, graft.sources.v2.SpecEvolutionQueries,
+    graft.sources.v2.CtasQueries,
+    BpeQueries, QualityOps,
+    graft.sources.BucketedQueries, graft.sources.ZOrderQueries,
+    graft.sources.CboQueries, graft.sources.CompactionQueries,
+    graft.sources.JdbcQueries, graft.streaming.StreamingQueries)
+
+  /** One map of `part` over `modules`; a name declared by two modules
+    * fails instead of one silently replacing the other. */
+  private[graft] def union[V](modules: Seq[QueryModule])(
+      part: QueryModule => Map[String, V]): Map[String, V] =
+    modules.map(part).foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val twice = acc.keySet.intersect(m.keySet)
+      require(twice.isEmpty,
+        s"query names declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ CandyQueries.queries ++ TextQueries.queries ++
-      AnalyticsQueries.queries ++ Analytics2Queries.queries ++ Analytics3Queries.queries ++
-      Tpch2Queries.queries ++ Tpch3Queries.queries ++
-      CdcOps.queries ++ DedupOps.queries ++ SimilarityOps.queries ++ AnnIndex.queries ++
-      graft.multimodal.MultimodalOps.queries ++ graft.sources.LayoutQueries.queries ++
-      graft.sources.v2.RangeSourceQueries.queries ++
-      graft.sources.v2.MergeQueries.queries ++
-      graft.sources.v2.LakeOps.queries ++ graft.sources.v2.LakeLifecycle.queries ++
-      graft.sources.v2.MorQueries.queries ++
-      graft.sources.v2.LakeTxn.queries ++
-      graft.sources.v2.EqUpsertQueries.queries ++
-      graft.sources.v2.SpecEvolutionQueries.queries ++
-      graft.sources.v2.CtasQueries.queries ++
-      BpeQueries.queries ++
-      QualityOps.queries ++
-      graft.sources.BucketedQueries.queries ++ graft.sources.ZOrderQueries.queries ++
-      graft.sources.CboQueries.queries ++ graft.sources.CompactionQueries.queries ++
-      graft.sources.JdbcQueries.queries ++ graft.streaming.StreamingQueries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    union(modules)(_.queries)
 
   /** Queries whose DataFrame side spins a non-relational LIFECYCLE —
     * the real StreamExecution engine (checkpoints, RocksDB state) or an
@@ -62,23 +78,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops →
     * driver records a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracle ++ CandyQueries.oracle ++ TextQueries.oracle ++
-      AnalyticsQueries.oracle ++ Analytics2Queries.oracle ++ Analytics3Queries.oracle ++
-      Tpch2Queries.oracle ++ Tpch3Queries.oracle ++
-      CdcOps.oracle ++ DedupOps.oracle ++ SimilarityOps.oracle ++ AnnIndex.oracle ++
-      graft.multimodal.MultimodalOps.oracle ++ graft.sources.LayoutQueries.oracle ++
-      graft.sources.v2.RangeSourceQueries.oracle ++
-      graft.sources.v2.MergeQueries.oracle ++
-      graft.sources.v2.LakeOps.oracle ++ graft.sources.v2.LakeLifecycle.oracle ++
-      graft.sources.v2.MorQueries.oracle ++
-      graft.sources.v2.LakeTxn.oracle ++
-      graft.sources.v2.EqUpsertQueries.oracle ++
-      graft.sources.v2.SpecEvolutionQueries.oracle ++
-      graft.sources.v2.CtasQueries.oracle ++
-      BpeQueries.oracle ++
-      QualityOps.oracle ++
-      graft.sources.BucketedQueries.oracle ++ graft.sources.ZOrderQueries.oracle ++
-      graft.sources.CboQueries.oracle ++ graft.sources.CompactionQueries.oracle ++
-      graft.sources.JdbcQueries.oracle ++ graft.streaming.StreamingQueries.oracle
+  lazy val oracleSql: Map[String, String] = union(modules)(_.oracle)
 }

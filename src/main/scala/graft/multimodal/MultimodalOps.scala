@@ -39,7 +39,7 @@ case class MediaFeatures(
   * handling, batch shape, skew-aware partitioning, frame-row
   * explosion — is exercised on every payload either way.
   */
-object MultimodalOps {
+object MultimodalOps extends graft.QueryModule {
 
   /** Declared media schema (string/binary nullable — matching the
     * case-class Encoder's view, where only primitives are non-null). */

@@ -21,7 +21,7 @@ import graft.Tables
   * expression evaluated identically by Spark and DuckDB, and every
   * output carries a total-order ORDER BY.
   */
-object Analytics2Queries {
+object Analytics2Queries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

@@ -18,7 +18,7 @@ import graft.Tables
   * identically by Spark and DuckDB (rounded to 6dp where a ratio of
   * exact integers closes the query), every output totally ordered.
   */
-object Analytics3Queries {
+object Analytics3Queries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

@@ -13,7 +13,7 @@ import graft.Tables
   * (total-order sort, exact integer money, one-shot IEEE closings) and
   * carries a DuckDB oracle.
   */
-object AnalyticsQueries {
+object AnalyticsQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

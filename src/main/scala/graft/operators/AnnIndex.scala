@@ -32,15 +32,15 @@ import graft.functions.{functions => gfn}
   * persisting the index must change where bytes live, never the
   * answer.
   */
-object AnnIndex {
+object AnnIndex extends graft.QueryModule {
 
   private val nlist = 16
   private val iters = 2
   private val nprobe = 4
 
-  /** index root per (application, source dir) — BucketedQueries'
-    * memo-key reasoning; the build itself is guarded by the meta file,
-    * not the map, so staleness can force a rebuild within one app. */
+  /** index root per (application, source dir) — graft.Staged's key
+    * reasoning; the build itself is guarded by the meta file, not the
+    * map, so staleness can force a rebuild within one app. */
   private val roots = new ConcurrentHashMap[String, String]()
 
   /** Visible to the specs: how many times the expensive build ran. */

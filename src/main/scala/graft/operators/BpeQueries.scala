@@ -21,7 +21,7 @@ import graft.functions.BpeTokenizer
   * replays the identical sanitize + merge chain as literal SQL
   * (BpeTokenizer.tokenCountSql), so the tokenizer itself is
   * oracle-gated, not just the aggregation around it. */
-object BpeQueries {
+object BpeQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)

@@ -14,7 +14,7 @@ import graft.Tables
   * graft.candy.CandyPipeline; these queries pin the distributed
   * formulations of its operators against DuckDB.
   */
-object CandyQueries {
+object CandyQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

@@ -16,7 +16,7 @@ import graft.Tables
   * non-matched paths under the hood: one co-partitioned shuffle of base
   * and changes, no driver-side state, scales linearly at 100 TB.
   */
-object CdcOps {
+object CdcOps extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

@@ -25,7 +25,7 @@ import graft.functions.{functions => gfn}
   * hash-free (exact gram Jaccard) and is checked against a DuckDB
   * brute-force all-pairs oracle.
   */
-object DedupOps {
+object DedupOps extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

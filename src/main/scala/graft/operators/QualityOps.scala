@@ -35,7 +35,7 @@ import graft.Tables
   * validation pass anywhere in src/data_processor.py) — this is
   * capability-rounding a production pipeline cannot ship without.
   */
-object QualityOps {
+object QualityOps extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

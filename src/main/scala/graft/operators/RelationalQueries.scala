@@ -19,7 +19,7 @@ import graft.Tables
   *  - aggregations are partial (map-side combine) by construction —
   *    plain groupBy/agg, no driver-side loops anywhere.
   */
-object RelationalQueries {
+object RelationalQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

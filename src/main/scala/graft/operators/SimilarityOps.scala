@@ -19,7 +19,7 @@ import graft.functions.{functions => gfn}
   * neighbors), turning an O(N·d) scan into an O(N/2^B)-ish bucket read;
   * on a cluster the bucket id is the shuffle/partition key.
   */
-object SimilarityOps {
+object SimilarityOps extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
@@ -28,9 +28,8 @@ object SimilarityOps {
     * is metadata-cheap but still one Spark job per call without the
     * cache (the source tables are immutable for a JVM's lifetime —
     * same assumption as the staged-layout caches elsewhere). */
-  private val embCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[operators] def embCount(s: SparkSession, dir: String): Long =
-    embCounts.computeIfAbsent(dir, d => t(s, d, "embeddings").count())
+    graft.Staged.once(s, dir, "embeddings.count")(t(s, dir, "embeddings").count())
 
   /** Cosine via the native CosineSimF expression: one codegen'd pass
     * over the float arrays with double accumulation, fold order

@@ -11,7 +11,7 @@ import graft.Tables
   * from codegen'd `functions._` — no UDFs — so they stay inside
   * whole-stage codegen and scale linearly with the corpus.
   */
-object TextQueries {
+object TextQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

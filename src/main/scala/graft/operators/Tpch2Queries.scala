@@ -25,7 +25,7 @@ import graft.Tables
   * IEEE division rounded to 6dp, counts as longs, every output totally
   * ordered.
   */
-object Tpch2Queries {
+object Tpch2Queries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

@@ -51,7 +51,7 @@ import graft.Tables
   * can't know; the 2×-average form keeps the HAVING-over-scalar-
   * subquery shape AND stays non-degenerate at every fixture scale).
   */
-object Tpch3Queries {
+object Tpch3Queries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Bucketed-table layout: the storage-side answer to the fact-fact join
@@ -19,25 +17,15 @@ import graft.operators.Exact
   * JOIN keys instead of range predicates. Plan shape (zero
   * ShuffleExchange under the join) is pinned by BucketedJoinSpec.
   */
-object BucketedQueries {
-
-  /** One bucketed write per (application, source dir); external tables
-    * under a fresh per-process temp dir (same race reasoning as
-    * LayoutQueries), deleted on JVM exit. Keyed by applicationId, NOT
-    * just dir: the table names live in the SparkContext's in-memory
-    * catalog, so a stop()/getOrCreate() cycle in the same JVM gets a
-    * fresh empty catalog and must re-write — a dir-only key would hand
-    * back names that no longer resolve. */
-  private val written = new ConcurrentHashMap[String, (String, String)]()
+object BucketedQueries extends graft.QueryModule {
 
   private val nextId = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Returns the catalog table names (orders, customer) of bucketed
     * copies keyed on custkey, writing them if this application hasn't
-    * yet. */
-  private[sources] def bucketedTables(s: SparkSession, dir: String): (String, String) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    val names = written.computeIfAbsent(key, { _ =>
+    * yet, as external tables under a per-process temp dir. */
+  private[sources] def bucketedTables(s: SparkSession, dir: String): (String, String) =
+    Staged.once(s, dir, "bucketed") {
       val root = graft.util.TempDirs.create("graft_bucketed_").toString
       val id = nextId.incrementAndGet()
       val (ot, ct) = (s"graft_orders_bkt_$id", s"graft_customer_bkt_$id")
@@ -50,9 +38,7 @@ object BucketedQueries {
         .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
         .option("path", s"$root/customer").saveAsTable(ct)
       (ot, ct)
-    })
-    names
-  }
+    }
 
   /** The co-located join itself, exposed for plan tests. MERGE hint:
     * at test scale Spark would broadcast the small side, which hides

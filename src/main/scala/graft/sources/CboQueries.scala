@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Cost-based-optimizer surface: ANALYZE TABLE statistics driving plan
@@ -28,23 +26,14 @@ import graft.operators.Exact
   * its DuckDB oracle computes the same aggregate over the raw parquet
   * tables: statistics must change the plan, never the answer.
   */
-object CboQueries {
-
-  /** One staged write + ANALYZE per (application, source dir) — the
-    * BucketedQueries device: catalog entries live in the context's
-    * in-memory catalog, so the memo key includes applicationId (a
-    * stop()/getOrCreate() cycle gets a fresh catalog and must
-    * re-stage); external tables under a per-process temp dir so
-    * repeated runs don't accumulate. */
-  private val written = new ConcurrentHashMap[String, (String, String)]()
+object CboQueries extends graft.QueryModule {
 
   private val nextId = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Returns catalog table names (orders, customer) with full table +
-    * column statistics computed. */
-  private[sources] def analyzedTables(s: SparkSession, dir: String): (String, String) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    written.computeIfAbsent(key, { _ =>
+    * column statistics computed, staged once per (app, source dir). */
+  private[sources] def analyzedTables(s: SparkSession, dir: String): (String, String) =
+    Staged.once(s, dir, "cbo") {
       val root = graft.util.TempDirs.create("graft_cbo_").toString
       val id = nextId.incrementAndGet()
       val (ot, ct) = (s"graft_orders_cbo_$id", s"graft_customer_cbo_$id")
@@ -59,8 +48,7 @@ object CboQueries {
       s.sql(s"ANALYZE TABLE $ot COMPUTE STATISTICS FOR ALL COLUMNS")
       s.sql(s"ANALYZE TABLE $ct COMPUTE STATISTICS FOR ALL COLUMNS")
       (ot, ct)
-    })
-  }
+    }
 
   /** The declared join, built against the analyzed catalog tables with
     * an explicit CBO setting. The CBO confs are set on a SESSION CLONE

@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Small-file compaction — the storage-ops primitive next to Z-order
@@ -32,7 +30,7 @@ import graft.operators.Exact
   * CompactionSpec; the DuckDB oracle aggregates the ORIGINAL table —
   * compaction must change the layout, never the answer.
   */
-object CompactionQueries {
+object CompactionQueries extends graft.QueryModule {
 
   /** Fixture-scale target file size. A production run would pass
     * ~1 GiB; 128 KiB keeps the staged layout multi-file at sf0.001+
@@ -45,12 +43,9 @@ object CompactionQueries {
   final case class Layout(smallDir: String, compactDir: String,
       nSmallFiles: Int, nBins: Int)
 
-  /** One staged fragment-then-compact per (application, source dir) —
-    * the BucketedQueries memo device. */
-  private val staged = new ConcurrentHashMap[String, Layout]()
-
+  /** One staged fragment-then-compact per (application, source dir). */
   private[sources] def layout(s: SparkSession, dir: String): Layout =
-    staged.computeIfAbsent(s.sparkContext.applicationId + ":" + dir, { _ =>
+    Staged.once(s, dir, "compaction") {
       val root = graft.util.TempDirs.create("graft_compact_").toString
       val (small, out) = (s"$root/small", s"$root/compacted")
       Tables(s, dir, "lineitem").repartition(smallFileCount)
@@ -62,7 +57,7 @@ object CompactionQueries {
       val nBins = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
       s.read.parquet(small).repartition(nBins).write.parquet(out)
       Layout(small, out, files.length, nBins)
-    })
+    }
 
   /** q205: pricing rollup answered from the COMPACTED layout. */
   def compactedAgg(s: SparkSession, dir: String): DataFrame =

@@ -1,11 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Declared query over the JDBC source/sink (SURVEY §2.1 S1/S2),
@@ -17,39 +14,24 @@ import graft.operators.Exact
   * cluster bottleneck), and aggregated. The oracle runs on the
   * original parquet: a database round-trip must never change the data.
   */
-object JdbcQueries {
+object JdbcQueries extends graft.QueryModule {
 
-  /** One Derby database + load per (jvm, source dir); the database
+  /** One Derby database + load per (app, source dir); the database
     * directory is deleted on JVM exit so repeated runs don't
     * accumulate copies in /tmp. */
-  private val loaded = new ConcurrentHashMap[String, Jdbc.JdbcConfig]()
-  private val dbDirs = new ConcurrentHashMap[String, String]()
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    import scala.jdk.CollectionConverters._
-    dbDirs.values.asScala.foreach { dir =>
-      try {
-        Files.walk(java.nio.file.Paths.get(dir))
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      } catch { case _: Throwable => }
-    }
-  }))
-
   private def derbyFor(s: SparkSession, dir: String): Jdbc.JdbcConfig =
-    loaded.computeIfAbsent(dir, { d =>
-      val db = Files.createTempDirectory("graft_derby")
-      dbDirs.put(dir, db.toString)
+    Staged.once(s, dir, "jdbc.derby") {
+      val db = graft.util.TempDirs.create("graft_derby")
       val cfg = Jdbc.JdbcConfig(
         url = s"jdbc:derby:$db/graftdb;create=true",
         user = "", password = "",
         driver = "org.apache.derby.jdbc.EmbeddedDriver")
       Jdbc.write(
-        Tables(s, d, "customer")
+        Tables(s, dir, "customer")
           .select("c_custkey", "c_nationkey", "c_acctbal"),
         cfg, "customer_rt", SaveMode.Overwrite)
       cfg
-    })
+    }
 
   def jdbcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val cfg = derbyFor(s, dir)

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Declared queries over ParquetLayout-written physical layouts — the
@@ -19,25 +17,23 @@ import graft.operators.Exact
   * 3 the query asks about; the write itself is the one-off layout cost
   * a fact table pays to make every later time-range query cheap.
   */
-object LayoutQueries {
+object LayoutQueries extends graft.QueryModule {
 
-  /** One write per (jvm, source dir). The directory is a fresh
+  /** One write per (app, source dir). The directory is a fresh
     * per-process temp dir — a path shared across JVMs would race:
-    * this map can only guard within one process, and another JVM's
+    * this memo can only guard within one process, and another JVM's
     * mode("overwrite") would delete files out from under an in-flight
     * scan here. TempDirs deletes whatever this process created, so
     * repeated Verify/Bench runs don't accumulate copies in /tmp. */
-  private val written = new ConcurrentHashMap[String, String]()
-
   private def monthlyOrdersPath(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(s"orders:$dir", { _ =>
+    Staged.once(s, dir, "layout.orders_by_month") {
       val p = graft.util.TempDirs.create("graft_orders_by_month_").toString
       ParquetLayout.writePartitioned(
         Tables(s, dir, "orders")
           .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")),
         p, Seq("o_month"))
       p
-    })
+    }
 
   /** The partition-pruned read: only the 1995-01..1995-03 directories
     * are listed and scanned. */
@@ -67,7 +63,7 @@ object LayoutQueries {
     // constant-folded into literal rows at plan time, the selective
     // Filter node disappears, and the DPP rule never fires. Fresh
     // per-process temp dir for the same race reason as monthlyOrdersPath.
-    val calPath = written.computeIfAbsent("calendar", { _ =>
+    val calPath = Staged.once(s, dir, "layout.calendar") {
       val p = graft.util.TempDirs.create("graft_calendar_dim_").toString
       val months = (1992 to 1998).flatMap { y =>
         (1 to 12).map(m => (f"$y-$m%02d", s"$y-Q${(m - 1) / 3 + 1}"))
@@ -75,7 +71,7 @@ object LayoutQueries {
       months.toDF("o_month", "quarter").coalesce(1)
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     val calendar = s.read.parquet(calPath)
     val fact = s.read.parquet(monthlyOrdersPath(s, dir))
     fact

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Z-order (Morton-curve) clustering — multi-column data skipping.
@@ -27,7 +25,7 @@ import graft.operators.Exact
   * stats-box intersects the predicate box, z-order vs single-key sort);
   * q104 gates the answer against DuckDB over the original table.
   */
-object ZOrderQueries {
+object ZOrderQueries extends graft.QueryModule {
 
   /** Morton code of N ≥ 2 non-negative integer columns, `bits` bits
     * each: bit i of column j lands at position i·N + j (round-robin
@@ -50,19 +48,17 @@ object ZOrderQueries {
   def zvalue(a: Column, b: Column, bits: Int = 21): Column =
     zvalueN(Seq(a, b), bits)
 
-  private val written = new ConcurrentHashMap[String, String]()
-
-  /** One z-ordered copy of lineitem per (jvm, source dir), clustered on
+  /** One z-ordered copy of lineitem per (app, source dir), clustered on
     * (l_partkey, l_suppkey). ~48 files so footer stats stay granular at
     * test scale; at 100 TB the same write runs with the default 128 MB
     * row groups and the file count follows the data. */
   private[sources] def zorderedLineitemPath(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(s"lineitem:$dir", { _ =>
+    Staged.once(s, dir, "zorder.lineitem") {
       val p = graft.util.TempDirs.create("graft_lineitem_zorder_").toString
       writeZOrdered(Tables(s, dir, "lineitem"),
         col("l_partkey"), col("l_suppkey"), p)
       p
-    })
+    }
 
   /** Cluster `df` by the Morton code of (a, b) and write parquet with
     * per-file stats granularity. The two keys are first min-max

@@ -1,13 +1,12 @@
 package graft.sources.v2
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Atomic CTAS / RTAS (q241) and declared write sort order (q242) —
@@ -35,18 +34,15 @@ import graft.operators.Exact
   * tables, src/data_processor.py:237-269) — capability-rounding on
   * the lake surface.
   */
-object CtasQueries {
+object CtasQueries extends graft.QueryModule {
 
-  private val stagedCtas = new ConcurrentHashMap[String, String]()
-  private val stagedSorted = new ConcurrentHashMap[String, String]()
   private val nextId = new AtomicInteger()
 
   /** Staging for q241: atomic CTAS of the per-customer projection,
     * a poisoned CTAS proving all-or-nothing, then an RTAS swap to the
     * per-market rollup. */
-  private[v2] def ensureCtasTable(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedCtas.computeIfAbsent(key, { _ =>
+  private[v2] def ensureCtasTable(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.ctas") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"lake.ctas$id"
@@ -93,8 +89,7 @@ object CtasQueries {
           Files.exists(h.tableDir.resolve(f.path))),
         "RTAS preserves history: every pre-replace data file stays readable")
       s"graft_lake.$tbl"
-    })
-  }
+    }
 
   /** q241: the post-RTAS rollup UNION'd with a `VERSION AS OF 1` read
     * of the pre-replace projection — one answer gating that the CTAS
@@ -124,9 +119,8 @@ object CtasQueries {
     * what restores locality. Pins the layout contract (files' price
     * ranges pairwise disjoint) and replans the band predicate through
     * the REAL scan-pruning path, requiring it to skip most files. */
-  private[v2] def ensureSortedTable(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedSorted.computeIfAbsent(key, { _ =>
+  private[v2] def ensureSortedTable(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.sorted") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"lake.sorted$id"
@@ -171,8 +165,7 @@ object CtasQueries {
         s"stats skipping over disjoint ranges must prune the band to its " +
           s"covering file(s): planned $planned of ${files.size}")
       s"graft_lake.$tbl"
-    })
-  }
+    }
 
   /** q242: the band rollup over the sorted table — stats skipping
     * (pinned in staging) must change NOTHING about the answer the
@@ -187,8 +180,6 @@ object CtasQueries {
          |WHERE price_cents >= $BandLo AND price_cents < $BandHi""".stripMargin)
   }
 
-  private val stagedSj = new ConcurrentHashMap[String, (String, String)]()
-
   /** Staging for q244: orders fact + customer dim both `bucket(16,
     * ckey)` WITH `write.sort-order = ckey` — the fully-indexed layout:
     * the clustered write gives one file per bucket, the within-task
@@ -201,9 +192,8 @@ object CtasQueries {
     * at 100 TB, the join that touches neither the network nor the
     * sorter. */
   private[v2] def ensureSortedJoinTables(s: SparkSession,
-      dir: String): (String, String) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedSj.computeIfAbsent(key, { _ =>
+      dir: String): (String, String) =
+    Staged.once(s, dir, "lake.sorted_join") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val fact = s"lake.ord_sbf$id"
@@ -254,8 +244,7 @@ object CtasQueries {
         s"q244 layout probe: want SMJ with zero exchanges and zero sorts, " +
           s"got smj=$nSmj exchanges=$nEx sorts=$nSort")
       (s"graft_lake.$fact", s"graft_lake.$dim")
-    })
-  }
+    }
 
   /** q244: the fully-indexed join — per-customer rollup over the
     * sorted bucket pair (staging probe pins zero-exchange zero-sort;

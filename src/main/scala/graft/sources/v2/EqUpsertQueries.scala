@@ -1,7 +1,6 @@
 package graft.sources.v2
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -9,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 import GraftLakeStore.{PendingEq, TableHandle}
 
@@ -36,9 +35,8 @@ import GraftLakeStore.{PendingEq, TableHandle}
   * which is why compaction purges equality deletes (INSERT OVERWRITE
   * resets them — LakeMorSpec pins it).
   */
-object EqUpsertQueries {
+object EqUpsertQueries extends graft.QueryModule {
 
-  private val staged = new ConcurrentHashMap[String, String]()
   private val nextId = new AtomicInteger()
 
   /** Stage a DF of key values as equality-delete parquets in the
@@ -72,9 +70,8 @@ object EqUpsertQueries {
 
   /** Staging: CREATE + seed customer (v1), then q97's change-set as one
     * equality-delete upsert commit (v2) — no table read, no rewrite. */
-  private[v2] def ensureEqUpsert(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    staged.computeIfAbsent(key, { _ =>
+  private[v2] def ensureEqUpsert(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.eq_upsert") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"lake.customer_eq$id"
@@ -131,8 +128,7 @@ object EqUpsertQueries {
           .subsetOf(snap.files.map(f => (f.id, f.path)).toSet),
         "equality upsert must rewrite no data file")
       s"graft_lake.$tbl"
-    })
-  }
+    }
 
   /** q233: the post-upsert table — must equal q97/q208/q225's answer
     * to the byte (one oracle, four write shapes). */

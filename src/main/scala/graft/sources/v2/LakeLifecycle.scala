@@ -1,12 +1,11 @@
 package graft.sources.v2
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Second wave of lake-table lifecycle operators, all over the
@@ -47,16 +46,9 @@ import graft.operators.Exact
   *    files (LakeDmlSpec pins the split count) and must answer exactly
   *    what the unpartitioned base answers (q65's oracle).
   */
-object LakeLifecycle {
+object LakeLifecycle extends graft.QueryModule {
 
-  private val staged = new ConcurrentHashMap[String, String]()
   private val nextId = new AtomicInteger()
-
-  private def memo(s: SparkSession, dir: String, what: String)(
-      build: (SparkSession, Int) => String): String =
-    staged.computeIfAbsent(
-      s"${s.sparkContext.applicationId}:$dir:$what",
-      { _ => build(MergeQueries.lakeSession(s), nextId.incrementAndGet()) })
 
   // ---- q216: change-feed consumer ----------------------------------
 
@@ -64,7 +56,8 @@ object LakeLifecycle {
     * accumulating each micro-batch as `b<batchId>` parquet dirs
     * (overwrite-by-batchId: the q118/q214 idempotent-replay guard). */
   private def ensureFeedAcc(s: SparkSession, dir: String): String =
-    memo(s, dir, "feed") { (ss, id) =>
+    Staged.once(s, dir, "lake.feed") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = MergeQueries.ensureStaged(s, dir).stripPrefix("graft_lake.")
       val acc = graft.util.TempDirs.create(s"graft_lake_feed$id" + "_").toString
       val feed = ss.readStream
@@ -105,7 +98,8 @@ object LakeLifecycle {
     * The staging itself asserts the expiration CONTRACT loudly — a
     * declared query must not depend on a silently-broken invariant. */
   private def ensureExpired(s: SparkSession, dir: String): String =
-    memo(s, dir, "expire") { (ss, id) =>
+    Staged.once(s, dir, "lake.expire") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.customer_exp$id"
       ss.sql(s"CREATE TABLE $tbl (c_custkey BIGINT, c_name STRING, bal_cents BIGINT)")
       Tables(ss, dir, "customer")
@@ -140,7 +134,8 @@ object LakeLifecycle {
   // ---- q218: compaction as a snapshot ------------------------------
 
   private def ensureCompacted(s: SparkSession, dir: String): String =
-    memo(s, dir, "compact") { (ss, id) =>
+    Staged.once(s, dir, "lake.compact") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.li_comp$id"
       ss.sql(s"CREATE TABLE $tbl " +
         "(l_returnflag STRING, qty BIGINT, price_cents BIGINT)")
@@ -178,7 +173,8 @@ object LakeLifecycle {
   // ---- q219: schema evolution ---------------------------------------
 
   private def ensureEvolved(s: SparkSession, dir: String): String =
-    memo(s, dir, "evolve") { (ss, id) =>
+    Staged.once(s, dir, "lake.evolve") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.nation_evo$id"
       ss.sql(s"CREATE TABLE $tbl (n_nationkey BIGINT, n_name STRING)")
       val nation = Tables(ss, dir, "nation")
@@ -203,7 +199,8 @@ object LakeLifecycle {
   // ---- q220: partitioned lake table ---------------------------------
 
   private def ensurePartitioned(s: SparkSession, dir: String): String =
-    memo(s, dir, "partitioned") { (ss, id) =>
+    Staged.once(s, dir, "lake.partitioned") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.orders_bym$id"
       ss.sql(s"CREATE TABLE $tbl " +
         "(o_orderkey BIGINT, o_month STRING, price_cents BIGINT) " +
@@ -240,7 +237,8 @@ object LakeLifecycle {
     * stats usable (random placement gives every file the full range
     * and skips nothing). */
   private def ensureClustered(s: SparkSession, dir: String): String =
-    memo(s, dir, "clustered") { (ss, id) =>
+    Staged.once(s, dir, "lake.clustered") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.orders_rng$id"
       ss.sql(s"CREATE TABLE $tbl (o_orderkey BIGINT, price_cents BIGINT)")
       val src = Tables(ss, dir, "orders")
@@ -286,7 +284,8 @@ object LakeLifecycle {
   /** Stage the events source as three files so maxFilesPerTrigger=1
     * yields three genuine micro-batches (the q115 split-3 device). */
   private def ensureEventsSplit(s: SparkSession, dir: String): String =
-    memo(s, dir, "evsplit") { (ss, id) =>
+    Staged.once(s, dir, "lake.events_split") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val out = graft.util.TempDirs.create(s"graft_lake_evsplit$id" + "_")
       val ev = ss.read.parquet(s"$dir/events.parquet")
@@ -308,15 +307,12 @@ object LakeLifecycle {
     * epochId) txn marker, so a replayed epoch appends nothing twice
     * (LakeFeedSpec pins the dedup and the 3-epoch history). With the
     * change-feed source (q216) this closes the loop: streams in and
-    * out of the lake, both through the real engine. */
-  private def ensureStreamSink(s: SparkSession, dir: String): String = {
-    // resolved BEFORE entering the memo: both keys live in ONE
-    // ConcurrentHashMap, and a nested computeIfAbsent throws
-    // IllegalStateException("Recursive update") whenever the keys
-    // collide into a hash bin (applicationId-dependent, intermittent —
-    // the exact failure the round-9 ADVICE flagged on MorQueries)
-    val src = ensureEventsSplit(s, dir)
-    memo(s, dir, "streamsink") { (ss, id) =>
+    * out of the lake, both through the real engine. The stream's source
+    * is the three-file events split, staged first. */
+  private def ensureStreamSink(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.stream_sink") {
+      val src = ensureEventsSplit(s, dir)
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.events_sink$id"
       ss.sql(s"CREATE TABLE $tbl (event_id BIGINT, user_id BIGINT, value_cents BIGINT)")
       ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -334,7 +330,6 @@ object LakeLifecycle {
       q.awaitTermination()
       tbl
     }
-  }
 
   /** q223: the streamed-in table's rollup — must equal the batch
     * aggregate over raw events (ingestion was append-only and
@@ -362,7 +357,8 @@ object LakeLifecycle {
     * layout plans strictly fewer files under a box predicate than the
     * random layout did. */
   private def ensureZOrdered(s: SparkSession, dir: String): String =
-    memo(s, dir, "zorder") { (ss, id) =>
+    Staged.once(s, dir, "lake.zorder") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.li_z$id"
       ss.sql(s"CREATE TABLE $tbl " +
         "(l_partkey BIGINT, l_suppkey BIGINT, price_cents BIGINT)")
@@ -403,7 +399,8 @@ object LakeLifecycle {
     * holds v1), both through Spark's DSv2 procedure protocol. The
     * staging asserts the CALL outputs loudly. */
   private def ensureCalled(s: SparkSession, dir: String): String =
-    memo(s, dir, "called") { (ss, id) =>
+    Staged.once(s, dir, "lake.called") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.customer_prc$id"
       ss.sql(s"CREATE TABLE $tbl (c_custkey BIGINT, c_name STRING, bal_cents BIGINT)")
       Tables(ss, dir, "customer")
@@ -469,7 +466,8 @@ object LakeLifecycle {
     * loudly), which is how a production table keeps a release readable
     * under nightly GC. */
   private def ensureTagged(s: SparkSession, dir: String): String =
-    memo(s, dir, "tagged") { (ss, id) =>
+    Staged.once(s, dir, "lake.tagged") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.customer_tag$id"
       ss.sql(s"CREATE TABLE $tbl (c_custkey BIGINT, c_name STRING, bal_cents BIGINT)")
       Tables(ss, dir, "customer")
@@ -528,7 +526,8 @@ object LakeLifecycle {
     * data must NOT resurrect). All four schema changes are metadata-
     * only commits — no file is rewritten. */
   private def ensureMapped(s: SparkSession, dir: String): String =
-    memo(s, dir, "colmap") { (ss, id) =>
+    Staged.once(s, dir, "lake.column_mapping") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.nation_map$id"
       ss.sql(s"CREATE TABLE $tbl (n_nationkey BIGINT, n_name STRING, tag STRING)")
       val nation = Tables(ss, dir, "nation")

@@ -1,11 +1,10 @@
 package graft.sources.v2
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Lake-table LIFECYCLE operators on top of [[GraftLakeCatalog]] — the
@@ -43,11 +42,8 @@ import graft.operators.Exact
   * overwrites whole tables every run (src/data_processor.py:237-269);
   * all three are capability-rounding on top of its surface.
   */
-object LakeOps {
+object LakeOps extends graft.QueryModule {
 
-  private val stagedMv = new ConcurrentHashMap[String, String]()
-  private val stagedRb = new ConcurrentHashMap[String, String]()
-  private val stagedWap = new ConcurrentHashMap[String, (String, String)]()
   private val nextId = new AtomicInteger()
 
   /** Month key both engines render identically: 'yyyy-MM' via plain
@@ -67,9 +63,8 @@ object LakeOps {
     * "existing" MV), v2 = MERGE of the delta's partial aggregate.
     * Memoized per (application, dir) — every declared call then just
     * reads. */
-  private[v2] def ensureMv(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedMv.computeIfAbsent(key, { _ =>
+  private[v2] def ensureMv(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.mv") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"graft_lake.lake.orders_mv$id"
@@ -99,8 +94,7 @@ object LakeOps {
            |  INSERT (ym, cnt, sum_cents) VALUES (d.ym, d.cnt, d.sum_cents)
            |""".stripMargin)
       tbl
-    })
-  }
+    }
 
   /** q210: the incrementally-refreshed MV; oracle = full recompute. */
   def mvIncremental(s: SparkSession, dir: String): DataFrame = {
@@ -140,9 +134,8 @@ object LakeOps {
   /** Rollback staging: v1 = seed (customer, cents), v2 = a DELETE
     * statement (every third key), v3 = the rollback — INSERT OVERWRITE
     * from the v1 time-travel read. */
-  private[v2] def ensureRollback(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedRb.computeIfAbsent(key, { _ =>
+  private[v2] def ensureRollback(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.rollback") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"graft_lake.lake.customer_rb$id"
@@ -159,8 +152,7 @@ object LakeOps {
            |SELECT c_custkey, c_name, bal_cents FROM $tbl VERSION AS OF 1
            |""".stripMargin)
       tbl
-    })
-  }
+    }
 
   /** q213: the post-rollback table — must equal the seed byte-for-byte
     * (q209's oracle), with the deletion still visible at v2. */
@@ -191,9 +183,8 @@ object LakeOps {
     * this replaced would have re-written the published copy. A failed
     * audit leaves `main` bit-identical and the branch GC-able
     * (LakeBranchSpec pins both). */
-  private[v2] def ensureWap(s: SparkSession, dir: String): (String, String) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedWap.computeIfAbsent(key, { _ =>
+  private[v2] def ensureWap(s: SparkSession, dir: String): (String, String) =
+    Staged.once(s, dir, "lake.wap") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val pub = s"graft_lake.lake.li_published$id"
@@ -243,8 +234,7 @@ object LakeOps {
       ss.sql(s"CALL graft_lake.system.fast_forward(" +
         s"table => 'lake.li_published$id', to => 'main', from => 'audit')")
       (pub, quar)
-    })
-  }
+    }
 
   /** q215: the audit-gated ingestion result — per-destination row
     * count and value total, read back from the two committed tables;

@@ -1,7 +1,6 @@
 package graft.sources.v2
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 import java.util.concurrent.atomic.AtomicInteger
@@ -9,7 +8,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 import GraftLakeStore.{PendingFile, TableHandle}
 
@@ -39,9 +38,8 @@ import GraftLakeStore.{PendingFile, TableHandle}
   * O(data). Reference analog: none — capability-rounding on the lake
   * (the reference overwrites single tables, src/data_processor.py:237-269).
   */
-object LakeTxn {
+object LakeTxn extends graft.QueryModule {
 
-  private val staged = new ConcurrentHashMap[String, (String, String)]()
   private val nextId = new AtomicInteger()
 
   /** Write `df` as parquet files DIRECTLY INTO `handle`'s data dir
@@ -69,9 +67,8 @@ object LakeTxn {
 
   /** Staging: CREATE facts + daily tables, then ONE transaction commits
     * both fills — all-or-nothing by the decision marker. */
-  private[v2] def ensureTxnIngest(s: SparkSession, dir: String): (String, String) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    staged.computeIfAbsent(key, { _ =>
+  private[v2] def ensureTxnIngest(s: SparkSession, dir: String): (String, String) =
+    Staged.once(s, dir, "lake.txn") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val facts = s"lake.ord_facts$id"
@@ -93,8 +90,7 @@ object LakeTxn {
       require(versions.values.forall(_ == 1),
         s"transactional ingest expected both tables at v1, got $versions")
       (s"graft_lake.$facts", s"graft_lake.$daily")
-    })
-  }
+    }
 
   /** q232: the transactionally-committed daily summary, cross-checked
     * against a recompute over the fact table — consistent by

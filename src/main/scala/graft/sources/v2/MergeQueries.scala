@@ -1,11 +1,10 @@
 package graft.sources.v2
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** SQL DML front door: a real `MERGE INTO` statement executed against a
@@ -34,9 +33,8 @@ import graft.operators.Exact
   * hand. The catalog confs live on a session clone; nothing leaks into
   * the caller's session.
   */
-object MergeQueries {
+object MergeQueries extends graft.QueryModule {
 
-  private val staged = new ConcurrentHashMap[String, String]()
   private val nextId = new AtomicInteger()
 
   private val catalogConf = "spark.sql.catalog.graft_lake"
@@ -94,17 +92,15 @@ object MergeQueries {
 
   /** Returns the staged table's fully qualified name; first caller per
     * (application, dir) runs CREATE → seed INSERT → MERGE INTO. */
-  private[v2] def ensureStaged(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    staged.computeIfAbsent(key, { _ =>
+  private[v2] def ensureStaged(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.merge") {
       val ss = lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"graft_lake.lake.customer_m$id"
       ss.sql(s"CREATE TABLE $tbl (c_custkey BIGINT, c_name STRING, bal_cents BIGINT)")
       seedAndMerge(ss, dir, tbl, id)
       tbl
-    })
-  }
+    }
 
   /** q208: the post-MERGE table, read back through the catalog. */
   def sqlMergeInto(s: SparkSession, dir: String): DataFrame = {
@@ -125,8 +121,6 @@ object MergeQueries {
          |FROM $tbl VERSION AS OF 1 ORDER BY c_custkey""".stripMargin)
   }
 
-  private val stagedSync = new ConcurrentHashMap[String, String]()
-
   /** Staging for q243: dim-table SYNC — the canonical nightly
     * reconciliation a warehouse runs against an upstream system,
     * expressed as ONE MERGE carrying all three clause families
@@ -144,9 +138,8 @@ object MergeQueries {
     * position-deletes + insert files with ZERO data files rewritten
     * (staging-require'd) — at 100 TB a nightly sync touching 2% of a
     * dim writes KBs of deltas, not a table rewrite. */
-  private[v2] def ensureSynced(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedSync.computeIfAbsent(key, { _ =>
+  private[v2] def ensureSynced(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.sync") {
       val ss = lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"graft_lake.lake.customer_sync$id"
@@ -182,8 +175,7 @@ object MergeQueries {
       require(h.snapshot(1).files.map(_.path).forall(carried),
         "merge-on-read sync must rewrite NO data file")
       tbl
-    })
-  }
+    }
 
   /** q243: per-decile rollup of the synced dim — equals the raw source
     * rollup iff the updates landed, the inserts arrived, and the

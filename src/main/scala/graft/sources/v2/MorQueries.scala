@@ -1,11 +1,11 @@
 package graft.sources.v2
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Staged
 
 /** Merge-on-read DML as a declared surface (round 9, second wave):
   * the SAME q97 change-set MERGE that q208 runs copy-on-write, executed
@@ -31,22 +31,16 @@ import org.apache.spark.sql.streaming.Trigger
   *    offer: consumers see precise row changes, volume proportional to
   *    the DML, not to the touched files.
   */
-object MorQueries {
+object MorQueries extends graft.QueryModule {
 
-  private val staged = new ConcurrentHashMap[String, String]()
   private val nextId = new AtomicInteger()
-
-  private def memo(s: SparkSession, dir: String, what: String)(
-      build: (SparkSession, Int) => String): String =
-    staged.computeIfAbsent(
-      s"${s.sparkContext.applicationId}:$dir:$what",
-      { _ => build(MergeQueries.lakeSession(s), nextId.incrementAndGet()) })
 
   /** Staging: CREATE (merge-on-read) → seed → q97's MERGE — and the
     * loud contract that the MERGE rewrote NO data file: every seed
     * file must survive the delta commit by (id, path) reference. */
   private[v2] def ensureMorStaged(s: SparkSession, dir: String): String =
-    memo(s, dir, "mor") { (ss, id) =>
+    Staged.once(s, dir, "lake.mor") {
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.customer_mor$id"
       ss.sql(s"CREATE TABLE $tbl (c_custkey BIGINT, c_name STRING, bal_cents BIGINT) " +
         "TBLPROPERTIES ('write.dml.mode'='merge-on-read')")
@@ -75,17 +69,13 @@ object MorQueries {
   }
 
   /** Tail the merge-on-read table's change feed once per (app, dir),
-    * accumulating micro-batches as parquet (the q216 device).
-    *
-    * The 'mor' staging is resolved BEFORE entering the 'morfeed' memo:
-    * both keys live in the same ConcurrentHashMap, and a nested
-    * computeIfAbsent on one map throws IllegalStateException("Recursive
-    * update") whenever the two keys collide into a hash bin — an
-    * intermittent, applicationId-dependent failure. Hoisting the inner
-    * staging out of the memo body removes the nesting entirely. */
-  private def ensureMorFeed(s: SparkSession, dir: String): String = {
-    val tbl = ensureMorStaged(s, dir).stripPrefix("graft_lake.")
-    memo(s, dir, "morfeed") { (ss, id) =>
+    * accumulating micro-batches as parquet (the q216 device). The feed
+    * reads the commits of q225's staged table, so that staging runs
+    * first. */
+  private def ensureMorFeed(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.mor_feed") {
+      val tbl = ensureMorStaged(s, dir).stripPrefix("graft_lake.")
+      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val acc = graft.util.TempDirs.create(s"graft_mor_feed$id" + "_").toString
       val q = ss.readStream
         .format(classOf[LakeFeedProvider].getName)
@@ -102,7 +92,6 @@ object MorQueries {
       q.awaitTermination()
       acc
     }
-  }
 
   /** q226: the MERGE commit's delete stream — exactly the matched
     * pre-images, proving the feed is row-level over delete vectors. */

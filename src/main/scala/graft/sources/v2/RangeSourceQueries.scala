@@ -6,7 +6,7 @@ import graft.operators.Exact
 
 /** Declared query over the custom DSv2 source — the proof that the
   * connector's pushdown contracts actually fire in a real plan. */
-object RangeSourceQueries {
+object RangeSourceQueries extends graft.QueryModule {
 
   /** q101: aggregate over the DSv2 generated table with an id-range
     * predicate. The filter is PUSHED INTO THE SOURCE: the scan's

@@ -1,12 +1,11 @@
 package graft.sources.v2
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Exact
 
 /** Partition-spec evolution (q234) — the one lake-format migration a
@@ -35,14 +34,12 @@ import graft.operators.Exact
   * none (the reference overwrites whole unpartitioned tables,
   * src/data_processor.py:237-269) — capability-rounding on the lake.
   */
-object SpecEvolutionQueries {
+object SpecEvolutionQueries extends graft.QueryModule {
 
-  private val staged = new ConcurrentHashMap[String, String]()
   private val nextId = new AtomicInteger()
 
-  private[v2] def ensureSpecEvolution(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    staged.computeIfAbsent(key, { _ =>
+  private[v2] def ensureSpecEvolution(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.spec_evolution") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"lake.ord_spec$id"
@@ -77,8 +74,7 @@ object SpecEvolutionQueries {
           files.exists(_.partition.keySet == Set("prio")),
         "both eras must keep the partition values of their OWN spec")
       s"graft_lake.$tbl"
-    })
-  }
+    }
 
   /** q234: rollup across the spec boundary with a filter on the OLD
     * partition column — era A prunes it exactly by partition value,
@@ -93,16 +89,13 @@ object SpecEvolutionQueries {
          |GROUP BY status, prio ORDER BY status, prio""".stripMargin)
   }
 
-  private val stagedTf = new ConcurrentHashMap[String, String]()
-
   /** Staging for q237: orders H2-1995 into a HIDDEN-partitioned table —
     * `bucket(8, ckey)` for point lookups without value explosion,
     * `truncate(7, od)` for month partitioning straight off the ISO
     * string (no calendar in the manifest). Repartition(2) bounds the
     * file count to tasks × buckets × months at every sf. */
-  private[v2] def ensureTransformTable(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedTf.computeIfAbsent(key, { _ =>
+  private[v2] def ensureTransformTable(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.transform_spec") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"lake.ord_tf$id"
@@ -121,8 +114,7 @@ object SpecEvolutionQueries {
           _.partition.keySet == Set("ckey_bucket_8", "od_truncate_7")),
         "every file must carry both transform values")
       s"graft_lake.$tbl"
-    })
-  }
+    }
 
   /** q237: a month-range rollup (prunes by the truncate field — floor/
     * prefix transforms are monotone, so ranges prune) plus a key point
@@ -143,8 +135,6 @@ object SpecEvolutionQueries {
          |ORDER BY grp""".stripMargin)
   }
 
-  private val stagedCal = new ConcurrentHashMap[String, String]()
-
   /** Staging for q238: ALL orders into a `months(o_orderdate)`
     * hidden-partitioned table over a REAL DATE column — the canonical
     * 100 TB fact-table layout (Iceberg's month transform: partition
@@ -152,9 +142,8 @@ object SpecEvolutionQueries {
     * arithmetic shared between writer and planner; no string casts, no
     * calendar in the manifest). Repartition(2) bounds files to
     * tasks x months at every sf. */
-  private[v2] def ensureCalendarTable(s: SparkSession, dir: String): String = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedCal.computeIfAbsent(key, { _ =>
+  private[v2] def ensureCalendarTable(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "lake.calendar_spec") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val tbl = s"lake.ord_cal$id"
@@ -177,8 +166,7 @@ object SpecEvolutionQueries {
       require(ords.nonEmpty && ords.forall(o => o >= 300 && o <= 380),
         s"month ordinals out of the fixture window: ${ords.distinct.sorted}")
       s"graft_lake.$tbl"
-    })
-  }
+    }
 
   /** q238: the two access patterns a month-partitioned DATE fact table
     * exists for — a date-RANGE rollup (prunes through the monotone
@@ -200,17 +188,14 @@ object SpecEvolutionQueries {
          |ORDER BY grp""".stripMargin)
   }
 
-  private val stagedSpj = new ConcurrentHashMap[String, (String, String)]()
-
   /** Staging for q239: orders fact + customer dim BOTH partitioned
     * `bucket(16, ckey)` — the layout investment a 100 TB warehouse
     * makes once so every ckey-keyed join afterwards is exchange-free.
     * Each side's scan reports its persisted bucket layout
     * (SupportsReportPartitioning + the catalog's LakeFunctions) and
     * Spark groups splits by bucket value instead of shuffling. */
-  private[v2] def ensureSpjTables(s: SparkSession, dir: String): (String, String) = {
-    val key = s.sparkContext.applicationId + ":" + dir
-    stagedSpj.computeIfAbsent(key, { _ =>
+  private[v2] def ensureSpjTables(s: SparkSession, dir: String): (String, String) =
+    Staged.once(s, dir, "lake.spj") {
       val ss = MergeQueries.lakeSession(s)
       val id = nextId.incrementAndGet()
       val fact = s"lake.ord_spjf$id"
@@ -230,8 +215,7 @@ object SpecEvolutionQueries {
         .repartition(2)
         .writeTo(s"graft_lake.$dim").append()
       (s"graft_lake.$fact", s"graft_lake.$dim")
-    })
-  }
+    }
 
   /** q239: fact ⋈ dim on the bucketed key, rolled up per customer —
     * planned as a STORAGE-PARTITIONED JOIN: zero hash exchange on

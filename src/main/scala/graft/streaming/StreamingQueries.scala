@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Staged
 import graft.operators.Exact
 
 /** Declared queries that run through the REAL StreamExecution engine —
@@ -17,12 +18,8 @@ import graft.operators.Exact
   * the oracle is the equivalent batch SQL, and a streaming run over
   * bounded input MUST converge to it exactly.
   */
-object StreamingQueries {
+object StreamingQueries extends graft.QueryModule {
 
-  /** One staged copy of events.parquet per source dir (file streams
-    * read directories, and queries must be re-runnable); deleted on JVM
-    * exit (TempDirs) so repeated runs don't accumulate copies in /tmp. */
-  private val staged = new ConcurrentHashMap[String, String]()
   private val runId = new AtomicInteger()
 
   /** Copy $dir/events.parquet into a staging dir under `prefix` —
@@ -48,12 +45,15 @@ object StreamingQueries {
     } else Files.copy(src, dst.resolve(s"$prefix.parquet"))
   }
 
-  private def stageDir(dir: String): String =
-    staged.computeIfAbsent(dir, { d =>
+  /** One staged copy of events.parquet per source dir (file streams
+    * read directories, and queries must be re-runnable); deleted on JVM
+    * exit (TempDirs) so repeated runs don't accumulate copies in /tmp. */
+  private def stageDir(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "stream.events") {
       val p = graft.util.TempDirs.create("graft_stream_events")
-      copyEvents(d, p, "events")
+      copyEvents(dir, p, "events")
       p.toString
-    })
+    }
 
   /** Run a streaming query with an explicitly-sized state-store count.
     *
@@ -79,13 +79,13 @@ object StreamingQueries {
 
   /** Staging dir holding events.parquet TWICE (distinct file names) —
     * the at-least-once-delivery fixture for the streaming dedup query. */
-  private def stageDirDuplicated(dir: String): String =
-    staged.computeIfAbsent(dir + "#dup", { _ =>
+  private def stageDirDuplicated(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "stream.events_dup") {
       val p = graft.util.TempDirs.create("graft_stream_events_dup")
       copyEvents(dir, p, "events")
       copyEvents(dir, p, "events_redelivered")
       p.toString
-    })
+    }
 
   /** Daily rollup executed as a Structured Streaming job: micro-batched
     * file source, event-time tumbling window, exact integer-cents sums
@@ -102,7 +102,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     withStatePartitions(s, 8) {
-    val events = s.readStream.schema(schema).parquet(stageDir(dir))
+    val events = s.readStream.schema(schema).parquet(stageDir(s, dir))
       .transform(graft.Tables.normalizeEventTs)
     val agg = events
       .groupBy(window(col("ts"), "1 day").as("w"))
@@ -173,12 +173,12 @@ object StreamingQueries {
   }
 
   private def stageDirWithSentinel(s: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir + "#sentinel", { _ =>
+    Staged.once(s, dir, "stream.sentinel") {
       val p = graft.util.TempDirs.create("graft_stream_events_sn")
       copyEvents(dir, p, "events")
       writeSentinel(s, dir, p)
       p.toString
-    })
+    }
 
   /** Stage events as THREE time-ordered slices (equal event-time
     * thirds) plus the sentinel, with strictly increasing modification
@@ -191,7 +191,7 @@ object StreamingQueries {
     * exactly this: sessions idle by batch N's watermark must fire
     * their timers while later batches are still arriving. */
   private def stageDirTimeSplitWithSentinel(s: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir + "#timesplit", { _ =>
+    Staged.once(s, dir, "stream.timesplit") {
       val p = graft.util.TempDirs.create("graft_stream_events_tt")
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = s.read.parquet(s"$dir/events.parquet")
@@ -224,7 +224,7 @@ object StreamingQueries {
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() + 10000L))
       p.toString
-    })
+    }
 
   /** Gap-based sessionization through the REAL streaming engine:
     * session_window(ts, 30 min) per user with a 1-hour watermark,
@@ -281,7 +281,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     withStatePartitions(s, 8) {
-    val events = s.readStream.schema(schema).parquet(stageDirDuplicated(dir))
+    val events = s.readStream.schema(schema).parquet(stageDirDuplicated(s, dir))
       .transform(graft.Tables.normalizeEventTs)
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
@@ -344,7 +344,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     withStatePartitions(s, pairJoinStatePartitions(dir)) {
-    val stream = () => s.readStream.schema(schema).parquet(stageDir(dir))
+    val stream = () => s.readStream.schema(schema).parquet(stageDir(s, dir))
       .transform(graft.Tables.normalizeEventTs)
     val a = stream().select(col("event_id").as("a_id"), col("user_id").as("a_user"),
       col("ts").as("a_ts")).withWatermark("a_ts", "1 hour")
@@ -380,7 +380,7 @@ object StreamingQueries {
     * state machine would never resume). Split by event_id mod 3, each
     * slice coalesced to one file. */
   private def stageDirSplit(s: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir + "#split3", { _ =>
+    Staged.once(s, dir, "stream.split3") {
       val p = graft.util.TempDirs.create("graft_stream_events_3")
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = s.read.parquet(s"$dir/events.parquet")
@@ -396,7 +396,7 @@ object StreamingQueries {
         Files.move(f, Paths.get(s"$p/events_$i.parquet"))
       }
       p.toString
-    })
+    }
 
   /** Running per-user totals through mapGroupsWithState — the fifth
     * streaming pillar: an UPDATE-mode state machine whose state
@@ -482,7 +482,7 @@ object StreamingQueries {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     withStatePartitions(s, 8) {
-    val stream = s.readStream.schema(schema).parquet(stageDir(dir))
+    val stream = s.readStream.schema(schema).parquet(stageDir(s, dir))
     val dim = broadcast(graft.Tables(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment")))
     val agg = stream
@@ -697,7 +697,7 @@ object StreamingQueries {
     * the stream. Replay idempotence per batchId is owned by
     * [[StreamingOps.replayGuarded]], same contract as q118. */
   private[streaming] def ensureStreamingMv(s: SparkSession, dir: String): String =
-    staged.computeIfAbsent(dir + "#streaming_mv", { _ =>
+    Staged.once(s, dir, "stream.mv") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageDirSplit(s, dir)
       val schema = s.read.parquet(s"$dir/events.parquet").schema
@@ -745,7 +745,7 @@ object StreamingQueries {
         .start()
       q.awaitTermination()
       tbl
-    })
+    }
 
   /** q214: the streaming-maintained MV, read back through the catalog;
     * oracle = the batch per-day rollup over the whole source. */

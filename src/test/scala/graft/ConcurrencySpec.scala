@@ -15,7 +15,7 @@ import org.apache.spark.sql.DataFrame
   *
   *  - the memoized staging builders (bucketed tables, Z-order and
   *    date-partitioned layouts, compaction, CBO catalog tables, the
-  *    persisted ANN index): `computeIfAbsent` must hold concurrent
+  *    persisted ANN index): `graft.Staged.once` must hold concurrent
   *    first-touch callers until staging finishes, and a staleness
   *    rebuild must not double-build (AnnIndex re-checks freshness
   *    INSIDE its lock — the classic double-checked guard, pinned cold

@@ -45,7 +45,7 @@ object CandyMain {
         if (flags.nonEmpty)
           throw new IllegalArgumentException(
             s"forecast takes no flags (got $flags)")
-        forecast(spark, summaryCsv, out, rest.headOption.map(_.toInt).getOrElse(1))
+        forecast(spark, summaryCsv, out, horizon(rest))
       case "all" :: products :: txns :: out :: Nil =>
         process(spark, products, txns, out, cfg)
         forecast(spark, s"$out/daily_summary.csv", out, 1)
@@ -54,15 +54,25 @@ object CandyMain {
     }
   }
 
+  /** The forecast's optional trailing argument: a positive day count,
+    * default 1. Anything else is rejected before a file is read — a
+    * zero horizon would write a header-only forecast, and a dropped
+    * extra argument would go unnoticed. */
+  private def horizon(rest: List[String]): Int = rest match {
+    case Nil => 1
+    case h :: Nil if h.toIntOption.exists(_ > 0) => h.toInt
+    case _ => throw new IllegalArgumentException(
+      s"forecast takes one optional horizon, a positive day count (got $rest)")
+  }
+
   private def process(spark: SparkSession, products: String, txns: String,
       out: String, cfg: CandyConfig): Unit =
     CandyPipeline.save(CandyPipeline.run(spark, products, txns, cfg), out)
 
   private def forecast(spark: SparkSession, summaryCsv: String, out: String,
       horizon: Int): Unit = {
-    val summary = spark.read.option("header", "true")
-      .option("inferSchema", "true").csv(summaryCsv)
-    val r = Forecaster.forecastWithMetrics(summary, horizon)
+    val r = Forecaster.forecastWithMetrics(
+      CandySources.readDailySummary(spark, summaryCsv), horizon)
     SingleFileCsv.write(r.forecast, out, "sales_profit_forecast.csv")
     // in-sample fit metrics, reported per model like the reference's
     // training log (data_processor.py:118-142) and persisted next to

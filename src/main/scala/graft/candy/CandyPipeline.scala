@@ -69,11 +69,15 @@ object CandyPipeline {
   def build(spark: SparkSession, products: DataFrame, transactions: DataFrame,
             config: CandyConfig): CandyOutputs = {
 
+    // Reused by orders, summary, and the final snapshot. AQE never
+    // coalesces the final stage of a plan it caches, so every stage that
+    // reads this cache runs the replay shuffle's partition count —
+    // defaultParallelism, not spark.sql.shuffle.partitions.
     val lineItems = InventoryReplay.replay(
       InventoryReplay.itemEvents(transactions, products),
       config.reloadInventoryDaily)
       .toDF()
-      .cache() // reused by orders, summary, and the final snapshot
+      .cache()
 
     // A1 per-order rollup. total_amount folds line totals in item (pos)
     // order = the reference's accumulation order; cancelled items
@@ -103,8 +107,14 @@ object CandyPipeline {
         coalesce(col("num_line_items"), lit(0)).as("num_line_items"),
         col("day"), col("seq"))
 
+    // Cached for the daily summary and the orders output. Its plan ends
+    // in the transactions ⋈ per-order join's shuffle, which, cached, AQE
+    // would leave at spark.sql.shuffle.partitions: coalesce to the
+    // replay's count, defaultParallelism (spark.default.parallelism on a
+    // deployment).
     val orders =
       (if (config.skipEmptyOrders) ordersAll.filter(col("num_items") > 0) else ordersAll)
+        .coalesce(spark.sparkContext.defaultParallelism)
         .cache()
 
     // A2 daily summary. date = date of the day's first emitted order

@@ -17,6 +17,8 @@ import org.apache.spark.sql.types._
   *    from the file name. No per-day loop, no O(days) union chain
   *    (the reference's anti-pattern at data_processor.py:490-500):
   *    a single scan scales to any number of days/files.
+  *  - daily_summary.csv: the forecast stage's input, read back with the
+  *    same policy and its header checked against the schema.
   */
 object CandySources {
 
@@ -49,11 +51,26 @@ object CandySources {
       StructField("product_name", StringType),
       StructField("qty", IntegerType)))))))
 
+  /** The process stage's daily_summary.csv, as the forecast stage reads
+    * it back (CandyPipeline's dailySummary columns). */
+  val dailySummarySchema: StructType = StructType(Seq(
+    StructField("date", DateType),
+    StructField("num_orders", IntegerType),
+    StructField("total_sales", DoubleType),
+    StructField("total_profit", DoubleType)))
+
   def readProducts(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").schema(productSchema).csv(path)
 
   def readCustomers(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").schema(customerSchema).csv(path)
+
+  /** enforceSchema=false checks the header against the schema's names,
+    * so a file written with other columns fails instead of being read
+    * positionally. */
+  def readDailySummary(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("header", "true").option("enforceSchema", "false")
+      .schema(dailySummarySchema).csv(path)
 
   /** All daily transaction files in one scan, with replay-order keys:
     *  - `day`: YYYYMMDD from the file name (one file per day);

@@ -55,6 +55,16 @@ case class LineItem(
   * state never leaves the executors; partition sort spills to disk if
   * needed — this is the plan that survives 100 TB, unlike the
   * reference's driver-side dict or a collect-based replay.
+  *
+  * The shuffle hashes into `defaultParallelism` partitions (the
+  * session's task slots; `spark.default.parallelism` sets it on a
+  * deployment, e.g. under dynamic allocation), not into
+  * `spark.sql.shuffle.partitions`. The pipeline caches this output,
+  * and AQE never coalesces the final stage of a plan it caches, so a
+  * count-less repartition would freeze the session's shuffle
+  * partition count (200 by default) into every later stage over the
+  * cache: 36 products in 200 mostly empty tasks. The fold is per
+  * product, so more partitions than slots only adds empty tasks.
   */
 object InventoryReplay {
 
@@ -64,7 +74,7 @@ object InventoryReplay {
     val spark = items.sparkSession
     import spark.implicits._
     items
-      .repartition(col("product_id"))
+      .repartition(spark.sparkContext.defaultParallelism, col("product_id"))
       .sortWithinPartitions("product_id", "day", "seq", "pos")
       .mapPartitions { it =>
         var curProduct = Int.MinValue

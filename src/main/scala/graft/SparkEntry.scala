@@ -3,16 +3,33 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** One declared-query module: its queries, and for each one that is
-  * ANSI-SQL-expressible an equivalent DuckDB oracle SQL. */
+/** One declared operator (SURVEY.md §7): a named DataFrame query and,
+  * where it is ANSI-SQL-expressible, its DuckDB oracle SQL (None: the
+  * result gets a weaker rows-only check). `stage`: Bench's warmup
+  * runs it once untimed, because its first call builds through
+  * `graft.Staged` or starts the streaming engine. `lifecycle`: it spins
+  * a non-relational lifecycle (the StreamExecution engine or an
+  * embedded-Derby JDBC round-trip), so SqlParitySpec, AnsiSweepSpec and
+  * `Dev census` leave it out. */
+final case class QueryDef(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: Option[String],
+    stage: Boolean = false,
+    lifecycle: Boolean = false)
+
+/** One declared-query module: one def per query. `queries` maps each
+  * name to its run function, `oracle` each name that has one to its
+  * oracle SQL. */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracle: Map[String, String]
+  def defs: Seq[QueryDef]
+  final lazy val queries = defs.map(d => d.name -> d.run).toMap
+  final lazy val oracle = defs.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }
 
-/** Entry contract (SURVEY.md §7): every query module's registry in one
-  * map, and every ANSI-SQL-expressible entry's DuckDB oracle in another.
-  */
+/** Entry contract (SURVEY.md §7): every query module's defs in one
+  * registry, with the query map, the oracle map and the lifecycle set
+  * derived from it. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -35,48 +52,29 @@ object SparkEntry {
     graft.sources.CboQueries, graft.sources.CompactionQueries,
     graft.sources.JdbcQueries, graft.streaming.StreamingQueries)
 
-  /** One map of `part` over `modules`; a name declared by two modules
-    * fails instead of one silently replacing the other. */
-  private[graft] def union[V](modules: Seq[QueryModule])(
-      part: QueryModule => Map[String, V]): Map[String, V] =
-    modules.map(part).foldLeft(Map.empty[String, V]) { (acc, m) =>
-      val twice = acc.keySet.intersect(m.keySet)
-      require(twice.isEmpty,
-        s"query names declared twice: ${twice.toSeq.sorted.mkString(", ")}")
-      acc ++ m
-    }
+  /** Every module's defs in module order; a name declared twice, by two
+    * modules or within one, fails instead of one def silently replacing
+    * the other. */
+  private[graft] def fold(modules: Seq[QueryModule]): Seq[QueryDef] = {
+    val defs = modules.flatMap(_.defs)
+    val twice = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(twice.isEmpty,
+      s"query names declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    defs
+  }
+
+  final lazy val defs: Seq[QueryDef] = fold(modules)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    union(modules)(_.queries)
-
-  /** Queries whose DataFrame side spins a non-relational LIFECYCLE —
-    * the real StreamExecution engine (checkpoints, RocksDB state) or an
-    * embedded-Derby JDBC round-trip. Shared by SqlParitySpec (their
-    * batch oracle SQL replays nothing the streaming specs don't already
-    * gate end-to-end) and `Dev census` (no static batch plan exists
-    * to census). One list so the two consumers cannot drift when the
-    * next streaming query lands. */
-  val nonRelationalLifecycle: Set[String] = Set(
-    "q71_streaming_daily", "q92_streaming_dedup", "q95_streaming_sessions",
-    "q96_stream_stream_join", "q115_streaming_running_totals",
-    "q118_streaming_foreachbatch", "q131_stream_static_join",
-    "q184_transform_with_state", "q185_statestore_read",
-    "q200_streaming_timers", "q214_streaming_mv_refresh",
-    "q216_change_feed_consumer", "q223_streaming_lake_sink",
-    "q226_mor_change_audit",
-    "q72_jdbc_roundtrip")
-
-  // every excluded name must exist — the predecessor of this list
-  // carried four misspelled entries for a full round, silently turning
-  // the exclusions into no-ops (zeros in the plan census, streaming
-  // engines spun inside the SQL-parity replay)
-  require(nonRelationalLifecycle.subsetOf(queries.keySet),
-    s"nonRelationalLifecycle names not in queries: " +
-      (nonRelationalLifecycle -- queries.keySet).mkString(", "))
+  final lazy val queries = defs.map(d => d.name -> d.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops →
     * driver records a weaker rows-only check. */
-  lazy val oracleSql: Map[String, String] = union(modules)(_.oracle)
+  final lazy val oracleSql = defs.flatMap(d => d.oracle.map(d.name -> _)).toMap
+
+  /** The `lifecycle = true` defs: no static batch plan to census or
+    * replay, gated end-to-end in their own specs. */
+  final lazy val nonRelationalLifecycle: Set[String] =
+    defs.filter(_.lifecycle).map(_.name).toSet
 }

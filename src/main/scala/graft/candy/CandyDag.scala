@@ -26,8 +26,7 @@ import graft.util.{Dag, StageResult}
   */
 object CandyDag {
 
-  def build(spark: SparkSession, products: String, txns: String,
-      out: String, cfg: CandyConfig = CandyConfig()): Dag = {
+  def build(spark: SparkSession, products: String, txns: String, out: String): Dag = {
     new Dag(markerDir = Some(out))
       .stage("load_data") {
         // fail fast (before any compute) if inputs are missing/garbled
@@ -37,7 +36,7 @@ object CandyDag {
           s"no transactions matched $txns")
       }
       .stage("process_data", "load_data") {
-        CandyPipeline.save(CandyPipeline.run(spark, products, txns, cfg), out)
+        CandyPipeline.save(CandyPipeline.run(spark, products, txns, CandyConfig()), out)
       }
       .stage("generate_forecast", "process_data") {
         CandyMain.run(spark,

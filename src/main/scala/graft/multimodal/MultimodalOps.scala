@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** One media blob with typed metadata. `data` is an opaque byte
   * payload (image/audio/video container bytes); everything the engine
@@ -334,26 +334,18 @@ object MultimodalOps extends graft.QueryModule {
       .orderBy("w", "h")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q201_jpeg_roundtrip" -> ((s: SparkSession, d: String) => jpegRoundtrip(s, d)),
-    "q64_media_stats" -> ((s: SparkSession, d: String) => mediaStats(s, d)),
-    "q91_frame_sample" -> ((s: SparkSession, d: String) => frameSample(s, d)),
-    "q182_image_roundtrip" -> ((s: SparkSession, d: String) => imageRoundtrip(s, d)),
-    "q183_audio_roundtrip" -> ((s: SparkSession, d: String) => audioRoundtrip(s, d)),
-  )
-
   /** The payload is the document text's UTF-8 bytes, so DuckDB's byte
     * length (strlen) reproduces n_bytes exactly; kind = doc_id mod 3. */
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // lossy codec: the oracle predicts dimensions + counts and asserts
     // the container/color pins hold (see jpegRoundtrip scaladoc)
-    "q201_jpeg_roundtrip" ->
+    QueryDef("q201_jpeg_roundtrip", jpegRoundtrip(_, _), Some(
       """SELECT CAST(16 + doc_id % 8 AS INT) AS w,
         |       CAST(16 + doc_id % 5 AS INT) AS h,
         |       count(*) AS n_images,
         |       true AS container_ok, true AS color_ok
-        |FROM documents GROUP BY 1, 2 ORDER BY w, h""".stripMargin,
-    "q64_media_stats" ->
+        |FROM documents GROUP BY 1, 2 ORDER BY w, h""".stripMargin)),
+    QueryDef("q64_media_stats", mediaStats(_, _), Some(
       """SELECT CASE WHEN doc_id % 3 = 0 THEN 'image'
         |            WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
         | count(*) AS n_media,
@@ -361,30 +353,30 @@ object MultimodalOps extends graft.QueryModule {
         | CAST(min(strlen(text)) AS INT) AS min_bytes,
         | CAST(max(strlen(text)) AS INT) AS max_bytes,
         | CAST(sum(strlen(text)) AS DOUBLE) / count(*) AS avg_bytes
-        |FROM documents GROUP BY 1 ORDER BY kind""".stripMargin,
+        |FROM documents GROUP BY 1 ORDER BY kind""".stripMargin)),
     // video rows are doc_id % 3 = 2 with n_frames = 1 + doc_id % 100;
     // Spark's sequence(0, n-1, 7) and DuckDB's range(0, n, 7) generate
     // the same grid (inclusive vs exclusive upper bound)
-    "q91_frame_sample" ->
+    QueryDef("q91_frame_sample", frameSample(_, _), Some(
       """SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx
         |FROM documents, LATERAL unnest(range(0, 1 + doc_id % 100, 7)) AS t(i)
         |WHERE doc_id % 3 = 2
-        |ORDER BY media_id, frame_idx""".stripMargin,
+        |ORDER BY media_id, frame_idx""".stripMargin)),
     // a solid (w,h) image filled with (r,g,b) decodes to channel sums
     // w*h*r etc. — the oracle replays the generating arithmetic; any
     // codec mis-parse (dims, pixel values) breaks the group sums
-    "q182_image_roundtrip" ->
+    QueryDef("q182_image_roundtrip", imageRoundtrip(_, _), Some(
       """SELECT CAST(8 + doc_id % 8 AS INT) AS w,
         |       CAST(8 + doc_id % 5 AS INT) AS h,
         |       count(*) AS n_images,
         |       CAST(sum((8 + doc_id % 8) * (8 + doc_id % 5) * (doc_id % 256)) AS BIGINT) AS tot_r,
         |       CAST(sum((8 + doc_id % 8) * (8 + doc_id % 5) * ((doc_id * 7) % 256)) AS BIGINT) AS tot_g,
         |       CAST(sum((8 + doc_id % 8) * (8 + doc_id % 5) * ((doc_id * 13) % 256)) AS BIGINT) AS tot_b
-        |FROM documents GROUP BY 1, 2 ORDER BY w, h""".stripMargin,
+        |FROM documents GROUP BY 1, 2 ORDER BY w, h""".stripMargin)),
     // the decoded header fields are asserted as constants (16000 Hz /
     // mono / 16-bit — what the engine encoded); the per-length sample
     // sums replay the generating formula sample_i = (id*31+i*17)%2003-1001
-    "q183_audio_roundtrip" ->
+    QueryDef("q183_audio_roundtrip", audioRoundtrip(_, _), Some(
       """WITH per_doc AS (
         |  SELECT d.doc_id,
         |         32 + d.doc_id % 32 AS n_samples,
@@ -397,8 +389,7 @@ object MultimodalOps extends graft.QueryModule {
         |       CAST(n_samples AS INT) AS n_samples,
         |       count(*) AS n_clips,
         |       CAST(sum(s_sum) AS BIGINT) AS tot_amp
-        |FROM per_doc GROUP BY 1, 2, 3, 4 ORDER BY n_samples""".stripMargin,
-  )
+        |FROM per_doc GROUP BY 1, 2, 3, 4 ORDER BY n_samples""".stripMargin)))
 
   /** Deterministic synthetic media table (no external fixtures in the
     * container): payload bytes derived from media_id. */

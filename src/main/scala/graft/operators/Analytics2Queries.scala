@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Round-4 surface extensions, part 2: TPC-H-depth decorrelation
   * (Q21/Q13/Q20 shapes), robust statistics (MAD outliers, chi-square
@@ -786,42 +786,8 @@ object Analytics2Queries extends graft.QueryModule {
       .orderBy("day")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q136_lone_returner_suppliers" -> (loneReturnerSuppliers _),
-    "q137_order_count_distribution" -> (orderCountDistribution _),
-    "q138_big_volume_suppliers" -> (bigVolumeSuppliers _),
-    "q139_mad_outliers" -> (madOutliers _),
-    "q140_chisq_weekday" -> (chisqWeekday _),
-    "q141_group_ols_trend" -> (groupOlsTrend _),
-    "q142_markov_transitions" -> (markovTransitions _),
-    "q143_interevent_gaps" -> (interEventGaps _),
-    "q144_last_touch_attribution" -> (lastTouchAttribution _),
-    "q145_deterministic_sample" -> (deterministicSample _),
-    "q146_fk_orphan_audit" -> (fkOrphanAudit _),
-    "q147_mom_growth" -> (momGrowth _),
-    "q148_time_rollup" -> (timeRollup _),
-    "q149_spearman_corr" -> (spearmanCorr _),
-    "q150_skew_audit" -> (skewAudit _),
-    "q151_value_histogram" -> (valueHistogram _),
-    "q152_array_hof" -> (arrayHof _),
-    "q153_regex_token_mine" -> (regexTokenMine _),
-    "q154_windowed_dedup" -> (windowedDedup _),
-    "q155_conversion_window" -> (conversionWindow _),
-    "q156_tpch_q3" -> (tpchQ3 _),
-    "q157_tpch_q6" -> (tpchQ6 _),
-    "q158_tpch_q14" -> (tpchQ14 _),
-    "q159_event_trigrams" -> (eventTrigrams _),
-    "q160_sketch_quantiles" -> (sketchQuantiles _),
-    "q161_gap_burstiness" -> (gapBurstiness _),
-    "q162_source_overlap" -> (sourceOverlap _),
-    "q163_weighted_sample" -> (weightedSample _),
-    "q164_share_of_parent" -> (shareOfParent _),
-    "q165_rolling_wau" -> (rollingWau _),
-    "q166_new_vs_returning" -> (newVsReturning _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q136_lone_returner_suppliers" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q136_lone_returner_suppliers", loneReturnerSuppliers, Some(
       """SELECT s_name, count(*) AS numwait
         |FROM supplier JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
         |JOIN orders ON o_orderkey = l1.l_orderkey
@@ -833,23 +799,23 @@ object Analytics2Queries extends graft.QueryModule {
         |    SELECT 1 FROM lineitem l3
         |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
         |      AND l3.l_returnflag = 'R')
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-    "q137_order_count_distribution" ->
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)),
+    QueryDef("q137_order_count_distribution", orderCountDistribution, Some(
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT OUTER JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey) cc
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q138_big_volume_suppliers" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    QueryDef("q138_big_volume_suppliers", bigVolumeSuppliers, Some(
       """SELECT s_name, s_acctbal FROM supplier
         |WHERE s_suppkey IN (
         |  SELECT l_suppkey FROM lineitem
         |  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size >= 40)
         |    AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         |  GROUP BY l_suppkey HAVING sum(l_quantity) > 2300)
-        |ORDER BY s_name""".stripMargin,
-    "q139_mad_outliers" ->
+        |ORDER BY s_name""".stripMargin)),
+    QueryDef("q139_mad_outliers", madOutliers, Some(
       """WITH c AS (SELECT event_type, CAST(round(value*100) AS BIGINT) AS c FROM events),
         |med AS (SELECT event_type, quantile_cont(c, 0.5) AS med_c FROM c GROUP BY event_type),
         |mad AS (SELECT c.event_type AS event_type, med_c,
@@ -860,8 +826,8 @@ object Analytics2Queries extends graft.QueryModule {
         | round(mad_c/100.0, 3) AS mad_value,
         | count(*) FILTER (WHERE abs(c - med_c) > (3.5/0.6745) * mad_c) AS n_outliers
         |FROM c JOIN mad m ON c.event_type = m.event_type
-        |GROUP BY m.event_type, med_c, mad_c ORDER BY event_type""".stripMargin,
-    "q140_chisq_weekday" ->
+        |GROUP BY m.event_type, med_c, mad_c ORDER BY event_type""".stripMargin)),
+    QueryDef("q140_chisq_weekday", chisqWeekday, Some(
       """WITH cells AS (
         |  SELECT event_type, isodow(ts) - 1 AS dow, count(*) AS obs
         |  FROM events GROUP BY 1, 2),
@@ -874,8 +840,8 @@ object Analytics2Queries extends graft.QueryModule {
         | round(CAST(rt AS DOUBLE) * ct / n, 6) AS expected,
         | round(power(obs - CAST(rt AS DOUBLE) * ct / n, 2)
         |   / (CAST(rt AS DOUBLE) * ct / n), 6) AS chi2_part
-        |FROM tot ORDER BY event_type, dow""".stripMargin,
-    "q141_group_ols_trend" ->
+        |FROM tot ORDER BY event_type, dow""".stripMargin)),
+    QueryDef("q141_group_ols_trend", groupOlsTrend, Some(
       """WITH daily AS (
         |  SELECT c_nationkey AS nationkey,
         |   CAST((epoch(CAST(o_orderdate AS DATE)) - epoch(DATE '1995-01-01')) / 86400 AS BIGINT) AS x,
@@ -888,8 +854,8 @@ object Analytics2Queries extends graft.QueryModule {
         |SELECT nationkey, n AS n_days,
         | round(CAST(n*sxy - sx*sy AS DOUBLE)
         |   / CAST(n*sxx - sx*sx AS DOUBLE) / 100.0, 6) AS slope_per_day
-        |FROM s ORDER BY nationkey""".stripMargin,
-    "q142_markov_transitions" ->
+        |FROM s ORDER BY nationkey""".stripMargin)),
+    QueryDef("q142_markov_transitions", markovTransitions, Some(
       """WITH nx AS (
         |  SELECT event_type AS src,
         |   lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
@@ -897,8 +863,8 @@ object Analytics2Queries extends graft.QueryModule {
         |cnt AS (SELECT src, dst, count(*) AS n FROM nx WHERE dst IS NOT NULL GROUP BY 1, 2)
         |SELECT src, dst, n,
         | round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY src), 6) AS prob
-        |FROM cnt ORDER BY src, dst""".stripMargin,
-    "q143_interevent_gaps" ->
+        |FROM cnt ORDER BY src, dst""".stripMargin)),
+    QueryDef("q143_interevent_gaps", interEventGaps, Some(
       """WITH g AS (
         |  SELECT event_type,
         |   lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -907,8 +873,8 @@ object Analytics2Queries extends graft.QueryModule {
         |SELECT event_type, count(gap) AS n_gaps,
         | round(CAST(sum(gap) AS DOUBLE) / count(gap) / 1e6, 6) AS avg_gap_s,
         | round(CAST(max(gap) AS DOUBLE) / 1e6, 6) AS max_gap_s
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q144_last_touch_attribution" ->
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QueryDef("q144_last_touch_attribution", lastTouchAttribution, Some(
       """WITH t AS (
         |  SELECT event_type, value,
         |   max(CASE WHEN event_type = 'click' THEN ts END)
@@ -918,16 +884,16 @@ object Analytics2Queries extends graft.QueryModule {
         |SELECT CAST(last_click AS DATE) AS touch_day, count(*) AS n_purchases,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100.0 AS attributed_revenue
         |FROM t WHERE event_type = 'purchase'
-        |GROUP BY touch_day ORDER BY touch_day NULLS FIRST""".stripMargin,
-    "q145_deterministic_sample" ->
+        |GROUP BY touch_day ORDER BY touch_day NULLS FIRST""".stripMargin)),
+    QueryDef("q145_deterministic_sample", deterministicSample, Some(
       """WITH r AS (
         |  SELECT event_type, event_id, value,
         |   row_number() OVER (PARTITION BY event_type
         |     ORDER BY md5(CAST(event_id AS STRING) || ':s145'), event_id) AS rn
         |  FROM events)
         |SELECT event_type, rn, event_id, round(value, 2) AS value
-        |FROM r WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin,
-    "q146_fk_orphan_audit" ->
+        |FROM r WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin)),
+    QueryDef("q146_fk_orphan_audit", fkOrphanAudit, Some(
       """SELECT * FROM (
         |SELECT 'lineitem->orders' AS fk, (SELECT count(*) FROM lineitem) AS n_child,
         | (SELECT count(*) FROM lineitem l ANTI JOIN orders o
@@ -944,8 +910,8 @@ object Analytics2Queries extends graft.QueryModule {
         |UNION ALL
         |SELECT 'customer->nation', (SELECT count(*) FROM customer),
         | (SELECT count(*) FROM customer c ANTI JOIN nation n ON c.c_nationkey = n.n_nationkey)
-        |) ORDER BY fk""".stripMargin,
-    "q147_mom_growth" ->
+        |) ORDER BY fk""".stripMargin)),
+    QueryDef("q147_mom_growth", momGrowth, Some(
       """WITH m AS (
         |  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
         |   sum(CAST(round(o_totalprice*100) AS BIGINT)) AS rev_c, count(*) AS n_orders
@@ -954,16 +920,16 @@ object Analytics2Queries extends graft.QueryModule {
         | CAST(rev_c - lag(rev_c) OVER (ORDER BY month) AS DOUBLE)/100.0 AS mom_delta,
         | round(CAST(rev_c - lag(rev_c) OVER (ORDER BY month) AS DOUBLE)
         |   / CAST(lag(rev_c) OVER (ORDER BY month) AS DOUBLE), 6) AS mom_pct
-        |FROM m ORDER BY month""".stripMargin,
-    "q148_time_rollup" ->
+        |FROM m ORDER BY month""".stripMargin)),
+    QueryDef("q148_time_rollup", timeRollup, Some(
       """SELECT grouping(yr) + grouping(qtr)*2 + grouping(mon)*4 AS gid,
         | yr, qtr, mon, count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/100.0 AS revenue
         |FROM (SELECT year(o_orderdate) AS yr, quarter(o_orderdate) AS qtr,
         |      month(o_orderdate) AS mon, o_totalprice FROM orders) t
         |GROUP BY ROLLUP(yr, qtr, mon)
-        |ORDER BY gid, yr NULLS FIRST, qtr NULLS FIRST, mon NULLS FIRST""".stripMargin,
-    "q149_spearman_corr" ->
+        |ORDER BY gid, yr NULLS FIRST, qtr NULLS FIRST, mon NULLS FIRST""".stripMargin)),
+    QueryDef("q149_spearman_corr", spearmanCorr, Some(
       """WITH j AS (
         |  SELECT p_brand, l_quantity AS x, l_extendedprice AS y
         |  FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -982,8 +948,8 @@ object Analytics2Queries extends graft.QueryModule {
         | round(CAST(n*sxy - sx*sy AS DOUBLE)
         |  / sqrt(CAST(n*sxx - sx*sx AS DOUBLE) * CAST(n*syy - sy*sy AS DOUBLE)), 6)
         |  AS spearman_rho
-        |FROM s ORDER BY p_brand""".stripMargin,
-    "q150_skew_audit" ->
+        |FROM s ORDER BY p_brand""".stripMargin)),
+    QueryDef("q150_skew_audit", skewAudit, Some(
       """WITH f AS (
         |  SELECT col, cnt FROM (
         |    SELECT 'l_partkey' AS col, l_partkey AS k, count(*) AS cnt
@@ -995,15 +961,15 @@ object Analytics2Queries extends graft.QueryModule {
         | round(quantile_cont(cnt, 0.5), 1) AS p50_freq,
         | round(CAST(max(cnt) AS DOUBLE) / sum(cnt), 6) AS top1_share,
         | round(CAST(max(cnt) AS DOUBLE) / quantile_cont(cnt, 0.5), 6) AS skew_ratio
-        |FROM f GROUP BY col ORDER BY col""".stripMargin,
-    "q151_value_histogram" ->
+        |FROM f GROUP BY col ORDER BY col""".stripMargin)),
+    QueryDef("q151_value_histogram", valueHistogram, Some(
       """WITH b AS (
         |  SELECT least(CAST(floor(CAST(round(value*100) AS BIGINT) / 1000) AS BIGINT), 19) AS bin FROM events)
         |SELECT bin, CAST(bin*10.0 AS DOUBLE) AS lo,
         | CASE WHEN bin = 19 THEN NULL ELSE CAST(bin*10.0+10 AS DOUBLE) END AS hi,
         | count(*) AS n
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    "q152_array_hof" ->
+        |FROM b GROUP BY bin ORDER BY bin""".stripMargin)),
+    QueryDef("q152_array_hof", arrayHof, Some(
       """SELECT vec_id,
         | round(sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))), 6)
         |  AS l2_norm,
@@ -1012,14 +978,14 @@ object Analytics2Queries extends graft.QueryModule {
         |  AS max_abs,
         | round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))
         |   / len(embedding), 6) AS mean
-        |FROM embeddings ORDER BY vec_id LIMIT 100""".stripMargin,
-    "q153_regex_token_mine" ->
+        |FROM embeddings ORDER BY vec_id LIMIT 100""".stripMargin)),
+    QueryDef("q153_regex_token_mine", regexTokenMine, Some(
       """WITH e AS (
         |  SELECT doc_id, unnest(regexp_extract_all(text, '\bs[a-z]+', 0)) AS tok
         |  FROM documents)
         |SELECT tok, count(*) AS n, count(DISTINCT doc_id) AS n_docs
-        |FROM e GROUP BY tok ORDER BY n DESC, tok""".stripMargin,
-    "q154_windowed_dedup" ->
+        |FROM e GROUP BY tok ORDER BY n DESC, tok""".stripMargin)),
+    QueryDef("q154_windowed_dedup", windowedDedup, Some(
       """WITH w AS (
         |  SELECT event_type,
         |   row_number() OVER (PARTITION BY user_id, event_type, CAST(floor(epoch_us(ts) / 600000000) AS BIGINT)
@@ -1028,8 +994,8 @@ object Analytics2Queries extends graft.QueryModule {
         |SELECT event_type, count(*) AS n_events,
         | count(*) FILTER (WHERE rn = 1) AS n_kept,
         | count(*) FILTER (WHERE rn > 1) AS n_dropped
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q155_conversion_window" ->
+        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    QueryDef("q155_conversion_window", conversionWindow, Some(
       """WITH clicks AS (
         |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
         |conv AS (
@@ -1042,8 +1008,8 @@ object Analytics2Queries extends graft.QueryModule {
         | count(*) FILTER (WHERE converted) AS n_converted,
         | round(CAST(count(*) FILTER (WHERE converted) AS DOUBLE) / count(*), 6)
         |  AS conv_rate
-        |FROM conv GROUP BY day ORDER BY day""".stripMargin,
-    "q156_tpch_q3" ->
+        |FROM conv GROUP BY day ORDER BY day""".stripMargin)),
+    QueryDef("q156_tpch_q3", tpchQ3, Some(
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority,
         | CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
         |   AS DOUBLE)/100.0 AS revenue
@@ -1052,15 +1018,15 @@ object Analytics2Queries extends graft.QueryModule {
         |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-03-15'
         |  AND l_shipdate > TIMESTAMP '1998-03-15'
         |GROUP BY o_orderkey, orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q157_tpch_q6" ->
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin)),
+    QueryDef("q157_tpch_q6", tpchQ6, Some(
       """SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 100) AS BIGINT))
         |   AS DOUBLE)/100.0 AS revenue,
         | count(*) AS n_lines
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q158_tpch_q14" ->
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)),
+    QueryDef("q158_tpch_q14", tpchQ14, Some(
       """SELECT round(100.0 * CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
         |   THEN CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
         |   ELSE 0 END) AS DOUBLE)
@@ -1068,8 +1034,8 @@ object Analytics2Queries extends graft.QueryModule {
         |   AS DOUBLE), 6) AS promo_revenue_pct
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1997-09-01'
-        |  AND l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin,
-    "q159_event_trigrams" ->
+        |  AND l_shipdate < TIMESTAMP '1997-10-01'""".stripMargin)),
+    QueryDef("q159_event_trigrams", eventTrigrams, Some(
       """WITH seq AS (
         |  SELECT event_type AS a,
         |   lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS b,
@@ -1077,8 +1043,8 @@ object Analytics2Queries extends graft.QueryModule {
         |  FROM events)
         |SELECT a, b, c, count(*) AS n
         |FROM seq WHERE b IS NOT NULL AND c IS NOT NULL
-        |GROUP BY a, b, c ORDER BY n DESC, a, b, c LIMIT 20""".stripMargin,
-    "q160_sketch_quantiles" ->
+        |GROUP BY a, b, c ORDER BY n DESC, a, b, c LIMIT 20""".stripMargin)),
+    QueryDef("q160_sketch_quantiles", sketchQuantiles, Some(
       """WITH b AS (
         |  SELECT event_type, CAST(floor(CAST(round(value*100) AS BIGINT) / 500) AS BIGINT) AS bin,
         |   count(*) AS cnt
@@ -1100,8 +1066,8 @@ object Analytics2Queries extends graft.QueryModule {
         |SELECT event_type, p,
         | round((qbin * 500 + 500.0 * (p * n - (cum - cnt)) / cnt) / 100.0, 6)
         |  AS est_value
-        |FROM est ORDER BY event_type, p""".stripMargin,
-    "q161_gap_burstiness" ->
+        |FROM est ORDER BY event_type, p""".stripMargin)),
+    QueryDef("q161_gap_burstiness", gapBurstiness, Some(
       """WITH g AS (
         |  SELECT event_type,
         |   CAST(floor((lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1116,8 +1082,8 @@ object Analytics2Queries extends graft.QueryModule {
         | round(s1 / n, 6) AS mean_gap_s,
         | round(sqrt((s2 - s1*s1/n) / (n - 1.0)), 6) AS sd_gap_s,
         | round(sqrt((s2 - s1*s1/n) / (n - 1.0)) / (s1 / n), 6) AS cv
-        |FROM m ORDER BY event_type""".stripMargin,
-    "q162_source_overlap" ->
+        |FROM m ORDER BY event_type""".stripMargin)),
+    QueryDef("q162_source_overlap", sourceOverlap, Some(
       """WITH g AS (
         |  SELECT DISTINCT source, md5(substr(t, CAST(i AS INT), 5)) AS h
         |  FROM (SELECT source, text AS t FROM documents WHERE len(text) >= 5) d,
@@ -1130,8 +1096,8 @@ object Analytics2Queries extends graft.QueryModule {
         |SELECT src_a, src_b, n_common, sa.n AS n_a, sb.n AS n_b,
         | round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6) AS jaccard
         |FROM ix JOIN sz sa ON src_a = sa.source JOIN sz sb ON src_b = sb.source
-        |ORDER BY src_a, src_b""".stripMargin,
-    "q163_weighted_sample" ->
+        |ORDER BY src_a, src_b""".stripMargin)),
+    QueryDef("q163_weighted_sample", weightedSample, Some(
       """WITH w AS (
         |  SELECT doc_id, n_chars AS wt,
         |   sum(n_chars) OVER (ORDER BY doc_id) AS cum,
@@ -1143,8 +1109,8 @@ object Analytics2Queries extends graft.QueryModule {
         |     - floor(CAST(cum - wt AS DOUBLE) / (CAST(total AS DOUBLE) / 100)) AS hits
         |  FROM w)
         |SELECT doc_id, wt, CAST(hits AS BIGINT) AS n_hits
-        |FROM sel WHERE hits >= 1 ORDER BY doc_id""".stripMargin,
-    "q164_share_of_parent" ->
+        |FROM sel WHERE hits >= 1 ORDER BY doc_id""".stripMargin)),
+    QueryDef("q164_share_of_parent", shareOfParent, Some(
       """WITH m AS (
         |  SELECT year(o_orderdate) AS yr, quarter(o_orderdate) AS qtr,
         |   month(o_orderdate) AS mon,
@@ -1155,8 +1121,8 @@ object Analytics2Queries extends graft.QueryModule {
         |  AS share_of_quarter,
         | round(CAST(rev AS DOUBLE) / sum(rev) OVER (PARTITION BY yr), 6)
         |  AS share_of_year
-        |FROM m ORDER BY yr, mon""".stripMargin,
-    "q165_rolling_wau" ->
+        |FROM m ORDER BY yr, mon""".stripMargin)),
+    QueryDef("q165_rolling_wau", rollingWau, Some(
       """WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |days AS (SELECT DISTINCT day FROM act),
         |sup AS (
@@ -1168,8 +1134,8 @@ object Analytics2Queries extends graft.QueryModule {
         |  FROM sup WHERE CAST(d AS DATE) IN (SELECT day FROM days) GROUP BY 1),
         |dau AS (SELECT day, count(*) AS dau FROM act GROUP BY day)
         |SELECT day, dau, wau, round(CAST(dau AS DOUBLE) / wau, 6) AS stickiness
-        |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin,
-    "q166_new_vs_returning" ->
+        |FROM dau JOIN wau USING (day) ORDER BY day""".stripMargin)),
+    QueryDef("q166_new_vs_returning", newVsReturning, Some(
       """WITH first AS (
         |  SELECT user_id, min(CAST(ts AS DATE)) AS first_day FROM events
         |  GROUP BY user_id),
@@ -1178,6 +1144,5 @@ object Analytics2Queries extends graft.QueryModule {
         | count(*) FILTER (WHERE day = first_day) AS new_users,
         | count(*) FILTER (WHERE day > first_day) AS returning_users
         |FROM act JOIN first USING (user_id)
-        |GROUP BY day ORDER BY day""".stripMargin,
-  )
+        |GROUP BY day ORDER BY day""".stripMargin)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Round-4 surface extensions, part 4: graph analytics (triangle
   * enumeration over the co-purchase graph), distribution primitives
@@ -611,24 +611,8 @@ object Analytics3Queries extends graft.QueryModule {
       .orderBy("event_type", "p_a", "p_b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q202_kmv_difference" -> ((s: SparkSession, d: String) => kmvDifference(s, d)),
-    "q199_kmv_intersect" -> ((s: SparkSession, d: String) => kmvIntersect(s, d)),
-    "q193_hll_distinct" -> (hllDistinct _),
-    "q167_triangle_count" -> (triangleCount _),
-    "q168_equidepth_histogram" -> (equidepthHistogram _),
-    "q169_melt_profile" -> (columnProfile _),
-    "q170_ab_welch_t" -> (abWelchT _),
-    "q171_rrf_fusion" -> (rrfFusion _),
-    "q173_bfs_distances" -> ((s: SparkSession, d: String) => bfsDistances(s, d)),
-    "q174_tpch_q19" -> (tpchQ19 _),
-    "q175_tpch_q15" -> (tpchQ15 _),
-    "q176_tpch_q18" -> (tpchQ18 _),
-    "q177_tpch_q22" -> (tpchQ22 _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q202_kmv_difference" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q202_kmv_difference", kmvDifference(_, _), Some(
       """WITH seg AS (
         |  SELECT DISTINCT event_type, user_id,
         |   CASE WHEN day(ts) <= 10 THEN 0 WHEN day(ts) <= 20 THEN 1 ELSE 2 END AS p
@@ -646,8 +630,8 @@ object Analytics3Queries extends graft.QueryModule {
         |FROM ints i
         | JOIN per pa ON pa.event_type = i.event_type AND pa.p = i.p_a
         | JOIN per pb ON pb.event_type = i.event_type AND pb.p = i.p_b
-        |ORDER BY i.event_type, p_a, p_b""".stripMargin,
-    "q199_kmv_intersect" ->
+        |ORDER BY i.event_type, p_a, p_b""".stripMargin)),
+    QueryDef("q199_kmv_intersect", kmvIntersect(_, _), Some(
       """WITH tu AS (SELECT DISTINCT event_type, user_id FROM events),
         |per AS (SELECT event_type, count(*) AS n FROM tu GROUP BY event_type),
         |pairs AS (
@@ -662,8 +646,8 @@ object Analytics3Queries extends graft.QueryModule {
         |FROM pairs p
         | JOIN per pa ON pa.event_type = p.type_a
         | JOIN per pb ON pb.event_type = p.type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-    "q193_hll_distinct" ->
+        |ORDER BY type_a, type_b""".stripMargin)),
+    QueryDef("q193_hll_distinct", hllDistinct, Some(
       """SELECT event_type, count(DISTINCT user_id) AS n_exact,
         |       true AS within_5pct
         |FROM events WHERE event_type IS NOT NULL AND event_type <> '_ALL_'
@@ -672,8 +656,8 @@ object Analytics3Queries extends graft.QueryModule {
         |SELECT '_ALL_' AS event_type, count(DISTINCT user_id) AS n_exact,
         |       true AS within_5pct
         |FROM events WHERE event_type IS NOT NULL AND event_type <> '_ALL_'
-        |ORDER BY event_type""".stripMargin,
-    "q167_triangle_count" ->
+        |ORDER BY event_type""".stripMargin)),
+    QueryDef("q167_triangle_count", triangleCount, Some(
       """WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
         |e AS (
         |  SELECT a.p AS pa, b.p AS pb FROM items a JOIN items b
@@ -688,8 +672,8 @@ object Analytics3Queries extends graft.QueryModule {
         |      UNION ALL SELECT b FROM tri
         |      UNION ALL SELECT c FROM tri)
         |GROUP BY p_partkey
-        |ORDER BY n_triangles DESC, p_partkey LIMIT 20""".stripMargin,
-    "q168_equidepth_histogram" ->
+        |ORDER BY n_triangles DESC, p_partkey LIMIT 20""".stripMargin)),
+    QueryDef("q168_equidepth_histogram", equidepthHistogram, Some(
       """SELECT CAST(decile AS BIGINT) AS decile, count(*) AS n,
         | CAST(min(c) AS DOUBLE)/100.0 AS lo, CAST(max(c) AS DOUBLE)/100.0 AS hi
         |FROM (
@@ -697,8 +681,8 @@ object Analytics3Queries extends graft.QueryModule {
         |   ntile(10) OVER (ORDER BY CAST(round(l_extendedprice*100) AS BIGINT),
         |                   l_orderkey, l_linenumber) AS decile
         |  FROM lineitem)
-        |GROUP BY decile ORDER BY decile""".stripMargin,
-    "q169_melt_profile" ->
+        |GROUP BY decile ORDER BY decile""".stripMargin)),
+    QueryDef("q169_melt_profile", columnProfile, Some(
       """SELECT col, count(*) AS n_rows,
         | count(*) - count(v) AS n_nulls,
         | count(DISTINCT v) AS n_distinct,
@@ -709,7 +693,7 @@ object Analytics3Queries extends graft.QueryModule {
         |  UNION ALL SELECT 'n_chars', CAST(n_chars AS STRING) FROM documents
         |  UNION ALL SELECT 'source', source FROM documents
         |  UNION ALL SELECT 'text_len', CAST(length(text) AS STRING) FROM documents)
-        |GROUP BY col ORDER BY col""".stripMargin,
+        |GROUP BY col ORDER BY col""".stripMargin)),
     // portable spelling: arm parity comes from the LAST hex nibble
     // alone ((16a+b) % 2 = b % 2), read via position() instead of the
     // hex-string cast Spark lacks; the sums ride DECIMAL instead of
@@ -718,7 +702,7 @@ object Analytics3Queries extends graft.QueryModule {
     // the cross products cap at 13+25 = 19+19 = 38 digits, the exact
     // upper bound BOTH engines multiply without rounding. All integer
     // algebra, so t_stat is bit-identical across engines
-    "q170_ab_welch_t" ->
+    QueryDef("q170_ab_welch_t", abWelchT, Some(
       """WITH o AS (
         |  SELECT (position(substr(md5(CAST(o_custkey AS STRING) || ':ab170'), 4, 1)
         |          IN '0123456789abcdef') - 1) % 2 AS arm,
@@ -745,65 +729,25 @@ object Analytics3Queries extends graft.QueryModule {
         |   / sqrt(CAST(CAST(n1 AS DECIMAL(13,0))*CAST(ss1 AS DECIMAL(25,0)) - CAST(s1 AS DECIMAL(19,0))*CAST(s1 AS DECIMAL(19,0)) AS DOUBLE)/CAST(n1 AS DOUBLE)/(CAST(n1 AS DOUBLE)-1.0)/CAST(n1 AS DOUBLE)/10000.0
         |        + CAST(CAST(n0 AS DECIMAL(13,0))*CAST(ss0 AS DECIMAL(25,0)) - CAST(s0 AS DECIMAL(19,0))*CAST(s0 AS DECIMAL(19,0)) AS DOUBLE)/CAST(n0 AS DOUBLE)/(CAST(n0 AS DOUBLE)-1.0)/CAST(n0 AS DOUBLE)/10000.0), 6)
         |  AS t_stat
-        |FROM p""".stripMargin,
-    "q174_tpch_q19" ->
-      """SELECT count(*) AS n_lines,
-        | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |           * (100 - CAST(round(l_discount*100) AS BIGINT))) AS DOUBLE)
-        |   / 10000.0 AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity >= 1 AND l_quantity <= 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity >= 10 AND l_quantity <= 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-        |       AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin,
-    "q175_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey AS suppkey,
-        |   sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |       * (100 - CAST(round(l_discount*100) AS BIGINT))) AS total_cp
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name,
-        | CAST(total_cp AS DOUBLE) / 10000.0 AS total_revenue
-        |FROM supplier JOIN rev ON s_suppkey = suppkey
-        |WHERE total_cp = (SELECT max(total_cp) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q176_tpch_q18" ->
-      """SELECT c_name, c_custkey, o_orderkey,
-        | CAST(o_orderdate AS DATE) AS o_date,
-        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem
-        |  GROUP BY l_orderkey HAVING sum(CAST(l_quantity AS BIGINT)) > 270)
-        |GROUP BY c_name, c_custkey, o_orderkey, o_date
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q177_tpch_q22" ->
-      """WITH pool AS (
-        |  SELECT c_custkey, c_nationkey,
-        |   CAST(round(c_acctbal*100) AS BIGINT) AS bal_c
-        |  FROM customer
-        |  WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)),
-        |thr AS (
-        |  SELECT sum(bal_c) AS s, count(*) AS n FROM pool WHERE bal_c > 0)
-        |SELECT c_nationkey AS nation, count(*) AS numcust,
-        | CAST(sum(bal_c) AS DOUBLE) / 100.0 AS totacctbal
-        |FROM pool, thr
-        |WHERE bal_c * n > s
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |      AND o_orderdate >= TIMESTAMP '2000-07-01')
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
+        |FROM p""".stripMargin)),
+    QueryDef("q171_rrf_fusion", rrfFusion, Some(
+      """WITH agg AS (
+        |  SELECT l_partkey AS p_partkey,
+        |   sum(CAST(l_quantity AS BIGINT)) AS units,
+        |   sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS rev_cents
+        |  FROM lineitem GROUP BY 1),
+        |r AS (
+        |  SELECT p_partkey,
+        |   row_number() OVER (ORDER BY units DESC, p_partkey) AS r_units,
+        |   row_number() OVER (ORDER BY rev_cents DESC, p_partkey) AS r_rev
+        |  FROM agg)
+        |SELECT p_partkey, r_units, r_rev,
+        | round(1.0/(60.0 + r_units) + 1.0/(60.0 + r_rev), 6) AS rrf
+        |FROM r ORDER BY rrf DESC, p_partkey LIMIT 25""".stripMargin)),
     // q173: the recursive CTE carries the same depth cap as the Spark
     // loop, so both engines bound the identical wave; UNION (distinct)
     // dedupes (id, dist) states and min(dist) is the first-visit depth
-    "q173_bfs_distances" ->
+    QueryDef("q173_bfs_distances", bfsDistances(_, _), Some(
       """WITH RECURSIVE items AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
         |pairs AS (
@@ -818,20 +762,59 @@ object Analytics3Queries extends graft.QueryModule {
         |  WHERE bfs.dist < 12)
         |SELECT id, min(dist) AS dist FROM bfs
         |WHERE id IS NOT NULL
-        |GROUP BY id ORDER BY id""".stripMargin,
-    "q171_rrf_fusion" ->
-      """WITH agg AS (
-        |  SELECT l_partkey AS p_partkey,
-        |   sum(CAST(l_quantity AS BIGINT)) AS units,
-        |   sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS rev_cents
-        |  FROM lineitem GROUP BY 1),
-        |r AS (
-        |  SELECT p_partkey,
-        |   row_number() OVER (ORDER BY units DESC, p_partkey) AS r_units,
-        |   row_number() OVER (ORDER BY rev_cents DESC, p_partkey) AS r_rev
-        |  FROM agg)
-        |SELECT p_partkey, r_units, r_rev,
-        | round(1.0/(60.0 + r_units) + 1.0/(60.0 + r_rev), 6) AS rrf
-        |FROM r ORDER BY rrf DESC, p_partkey LIMIT 25""".stripMargin,
-  )
+        |GROUP BY id ORDER BY id""".stripMargin)),
+    QueryDef("q174_tpch_q19", tpchQ19, Some(
+      """SELECT count(*) AS n_lines,
+        | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
+        |           * (100 - CAST(round(l_discount*100) AS BIGINT))) AS DOUBLE)
+        |   / 10000.0 AS revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity >= 1 AND l_quantity <= 11)
+        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+        |       AND l_quantity >= 10 AND l_quantity <= 20)
+        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
+        |       AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin)),
+    QueryDef("q175_tpch_q15", tpchQ15, Some(
+      """WITH rev AS (
+        |  SELECT l_suppkey AS suppkey,
+        |   sum(CAST(round(l_extendedprice*100) AS BIGINT)
+        |       * (100 - CAST(round(l_discount*100) AS BIGINT))) AS total_cp
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name,
+        | CAST(total_cp AS DOUBLE) / 10000.0 AS total_revenue
+        |FROM supplier JOIN rev ON s_suppkey = suppkey
+        |WHERE total_cp = (SELECT max(total_cp) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin)),
+    QueryDef("q176_tpch_q18", tpchQ18, Some(
+      """SELECT c_name, c_custkey, o_orderkey,
+        | CAST(o_orderdate AS DATE) AS o_date,
+        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE o_orderkey IN (
+        |  SELECT l_orderkey FROM lineitem
+        |  GROUP BY l_orderkey HAVING sum(CAST(l_quantity AS BIGINT)) > 270)
+        |GROUP BY c_name, c_custkey, o_orderkey, o_date
+        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin)),
+    QueryDef("q177_tpch_q22", tpchQ22, Some(
+      """WITH pool AS (
+        |  SELECT c_custkey, c_nationkey,
+        |   CAST(round(c_acctbal*100) AS BIGINT) AS bal_c
+        |  FROM customer
+        |  WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)),
+        |thr AS (
+        |  SELECT sum(bal_c) AS s, count(*) AS n FROM pool WHERE bal_c > 0)
+        |SELECT c_nationkey AS nation, count(*) AS numcust,
+        | CAST(sum(bal_c) AS DOUBLE) / 100.0 AS totacctbal
+        |FROM pool, thr
+        |WHERE bal_c * n > s
+        |  AND NOT EXISTS (
+        |    SELECT 1 FROM orders WHERE o_custkey = c_custkey
+        |      AND o_orderdate >= TIMESTAMP '2000-07-01')
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)))
 }

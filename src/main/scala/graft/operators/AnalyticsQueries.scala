@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Round-4 analytics surface extensions: the SQL features an analytics
   * engine's users reach for next after joins/windows/subqueries —
@@ -369,39 +369,23 @@ object AnalyticsQueries extends graft.QueryModule {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q122_recursive_hierarchy" -> (recursiveHierarchy _),
-    "q123_bloom_pruned_join" -> (bloomPrunedJoin _),
-    "q124_scd2_build" -> (scd2Build _),
-    "q125_sliding_window" -> (slidingWindow _),
-    "q126_column_profile" -> (columnProfile _),
-    "q127_lateral_topk" -> (lateralTopPerGroup _),
-    "q128_zscore_outliers" -> (zscoreOutliers _),
-    "q129_pagerank_nations" -> (pagerankNations _),
-    "q130_curriculum_bins" -> (curriculumBins _),
-    "q132_bm25_search" -> ((s: SparkSession, d: String) => bm25Search(s, d)),
-    "q133_activity_streaks" -> (activityStreaks _),
-    "q134_winsorize" -> (winsorize _),
-    "q135_pit_join" -> (pitJoin _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q122_recursive_hierarchy" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q122_recursive_hierarchy", recursiveHierarchy, Some(
       """WITH RECURSIVE walk(custkey, node, depth) AS (
         |  SELECT c_custkey, c_custkey, 0 FROM customer
         |  UNION ALL
         |  SELECT custkey, CAST(floor(node / 10) AS BIGINT), depth + 1 FROM walk WHERE node >= 10)
         |SELECT custkey, max(depth) AS depth, min(node) AS root
-        |FROM walk GROUP BY custkey ORDER BY custkey""".stripMargin,
+        |FROM walk GROUP BY custkey ORDER BY custkey""".stripMargin)),
     // bloom filters have no false negatives: the oracle is the PLAIN join
-    "q123_bloom_pruned_join" ->
+    QueryDef("q123_bloom_pruned_join", bloomPrunedJoin, Some(
       """SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n_lines,
         | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE)/100.0
         |  AS urgent_revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |GROUP BY day ORDER BY day""".stripMargin,
-    "q124_scd2_build" ->
+        |GROUP BY day ORDER BY day""".stripMargin)),
+    QueryDef("q124_scd2_build", scd2Build, Some(
       """WITH marked AS (
         |  SELECT user_id, event_type, ts, event_id,
         |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
@@ -412,9 +396,9 @@ object AnalyticsQueries extends graft.QueryModule {
         |SELECT user_id, event_type, ts AS valid_from,
         | lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
         | lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-        |FROM changes ORDER BY user_id, valid_from""".stripMargin,
+        |FROM changes ORDER BY user_id, valid_from""".stripMargin)),
     // each event covers the two hourly-aligned starts in (ts-2h, ts]
-    "q125_sliding_window" ->
+    QueryDef("q125_sliding_window", slidingWindow, Some(
       """SELECT wstart AS win_start, count(*) AS n,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100.0 AS total_value
         |FROM (SELECT value,
@@ -422,8 +406,8 @@ object AnalyticsQueries extends graft.QueryModule {
         |                         date_trunc('hour', ts) - INTERVAL 1 HOUR))
         |        AS wstart
         |      FROM events)
-        |GROUP BY wstart ORDER BY wstart""".stripMargin,
-    "q126_column_profile" ->
+        |GROUP BY wstart ORDER BY wstart""".stripMargin)),
+    QueryDef("q126_column_profile", columnProfile, Some(
       """SELECT * FROM (
         |  SELECT 'o_custkey' AS column_name, count(o_custkey) AS non_null,
         |   count(DISTINCT o_custkey) AS n_distinct,
@@ -444,16 +428,16 @@ object AnalyticsQueries extends graft.QueryModule {
         |  SELECT 'o_orderpriority', count(o_orderpriority), count(DISTINCT o_orderpriority),
         |   NULL, NULL, min(o_orderpriority), max(o_orderpriority)
         |  FROM orders)
-        |ORDER BY column_name""".stripMargin,
-    "q127_lateral_topk" ->
+        |ORDER BY column_name""".stripMargin)),
+    QueryDef("q127_lateral_topk", lateralTopPerGroup, Some(
       """SELECT n.n_name, top.c_custkey, top.c_acctbal
         |FROM nation n,
         |LATERAL (
         |  SELECT c_custkey, c_acctbal FROM customer c
         |  WHERE c.c_nationkey = n.n_nationkey
         |  ORDER BY c_acctbal DESC, c_custkey LIMIT 2) top
-        |ORDER BY n.n_name, top.c_acctbal DESC, top.c_custkey""".stripMargin,
-    "q128_zscore_outliers" ->
+        |ORDER BY n.n_name, top.c_acctbal DESC, top.c_custkey""".stripMargin)),
+    QueryDef("q128_zscore_outliers", zscoreOutliers, Some(
       """WITH m AS (
         |  SELECT event_type, CAST(count(*) AS DOUBLE) AS n,
         |   CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE) AS s1,
@@ -468,9 +452,9 @@ object AnalyticsQueries extends graft.QueryModule {
         | round((CAST(round(e.value*100) AS BIGINT) - s.mean_c) / s.sd_c, 6) AS z
         |FROM events e JOIN stats s ON e.event_type = s.event_type
         |WHERE abs((CAST(round(e.value*100) AS BIGINT) - s.mean_c) / s.sd_c) > 3.0
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
     // identical recursion text; the graph build mirrored as CTEs
-    "q129_pagerank_nations" ->
+    QueryDef("q129_pagerank_nations", pagerankNations, Some(
       """WITH RECURSIVE edges AS (
         |  SELECT c_nationkey AS src, s_nationkey AS dst, CAST(count(*) AS DOUBLE) AS w
         |  FROM lineitem
@@ -492,15 +476,15 @@ object AnalyticsQueries extends graft.QueryModule {
         |  WHERE pr.it < 10
         |  GROUP BY pr.it + 1, e.dst)
         |SELECT node AS nationkey, r AS pagerank FROM pr WHERE it = 10
-        |ORDER BY pagerank DESC, nationkey""".stripMargin,
-    "q130_curriculum_bins" ->
+        |ORDER BY pagerank DESC, nationkey""".stripMargin)),
+    QueryDef("q130_curriculum_bins", curriculumBins, Some(
       """WITH b AS (
         |  SELECT doc_id, n_chars, ntile(10) OVER (ORDER BY n_chars, doc_id) AS bin
         |  FROM documents)
         |SELECT bin, count(*) AS n_docs, min(n_chars) AS min_chars,
         | max(n_chars) AS max_chars, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    "q132_bm25_search" ->
+        |FROM b GROUP BY bin ORDER BY bin""".stripMargin)),
+    QueryDef("q132_bm25_search", bm25Search(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |toks2 AS (SELECT * FROM toks WHERE tok <> ''),
@@ -515,8 +499,8 @@ object AnalyticsQueries extends graft.QueryModule {
         | round(sum(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
         |   * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))), 6) AS score
         |FROM tf JOIN dl USING (doc_id) JOIN idf USING (tok) CROSS JOIN corpus
-        |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 50""".stripMargin,
-    "q133_activity_streaks" ->
+        |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 50""".stripMargin)),
+    QueryDef("q133_activity_streaks", activityStreaks, Some(
       """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |isl AS (SELECT user_id, day,
         |  CAST(epoch(day) / 86400 AS BIGINT)
@@ -524,8 +508,8 @@ object AnalyticsQueries extends graft.QueryModule {
         | FROM days),
         |st AS (SELECT user_id, island, count(*) AS len FROM isl GROUP BY 1, 2)
         |SELECT user_id, max(len) AS longest_streak, count(*) AS n_streaks
-        |FROM st GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q134_winsorize" ->
+        |FROM st GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    QueryDef("q134_winsorize", winsorize, Some(
       """WITH st AS (
         |  SELECT event_type, count(*) AS n,
         |   round(quantile_cont(CAST(round(value*100) AS BIGINT), 0.05)) AS lo_c,
@@ -538,9 +522,9 @@ object AnalyticsQueries extends graft.QueryModule {
         | round(sum(least(greatest(CAST(round(value*100) AS BIGINT), lo_c), hi_c))
         |   / st.n / 100.0, 6) AS winsorized_mean
         |FROM events e JOIN st ON e.event_type = st.event_type
-        |GROUP BY e.event_type, st.n, lo_c, hi_c ORDER BY e.event_type""".stripMargin,
+        |GROUP BY e.event_type, st.n, lo_c, hi_c ORDER BY e.event_type""".stripMargin)),
     // the q124 SCD2 build mirrored as CTEs, then the interval lookup
-    "q135_pit_join" ->
+    QueryDef("q135_pit_join", pitJoin, Some(
       """WITH marked AS (
         |  SELECT user_id, event_type, ts, event_id,
         |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -554,6 +538,5 @@ object AnalyticsQueries extends graft.QueryModule {
         | s.event_type AS regime, s.valid_from
         |FROM events e JOIN scd s ON e.user_id = s.user_id
         | AND e.ts >= s.valid_from AND (s.valid_to IS NULL OR e.ts < s.valid_to)
-        |ORDER BY e.event_id""".stripMargin,
-  )
+        |ORDER BY e.event_id""".stripMargin)))
 }

@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 import graft.functions.{functions => gfn}
 
 /** Persisted ANN index lifecycle — the production similarity-search
@@ -140,11 +140,10 @@ object AnnIndex extends graft.QueryModule {
       .limit(k)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q204_ann_ivf_persisted" -> ((s: SparkSession, d: String) => probe(s, d)))
-
   /** Same oracle as q67: the persisted probe must answer exactly what
     * the inline trained-IVF build answers. */
-  val oracle: Map[String, String] = Map(
-    "q204_ann_ivf_persisted" -> SimilarityOps.oracle("q67_ann_ivf_trained"))
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the ANN index build the probe reads
+    QueryDef("q204_ann_ivf_persisted", probe(_, _),
+      Some(SimilarityOps.oracle("q67_ann_ivf_trained")), stage = true))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryDef, Tables}
 import graft.functions.BpeTokenizer
 
 /** Tokenizer-true token accounting over the documents table (q235,
@@ -86,26 +86,21 @@ object BpeQueries extends graft.QueryModule {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q235_bpe_token_count" -> ((s: SparkSession, d: String) => bpeTokenCount(s, d)),
-    "q236_bpe_pack_budget" -> ((s: SparkSession, d: String) => bpePackBudget(s, d)),
-    "q240_bpe_encode_native" -> ((s: SparkSession, d: String) => bpeEncodeNative(s, d)))
-
   private def tok = BpeTokenizer.tokenCountSql("text")
   private def enc = BpeTokenizer.encodeSql("text")
 
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // the oracle replays the TOKENIZER itself (sanitize + 48 literal
     // merge replays), not just the rollup — a drifted merge table or
     // replace semantics difference fails the hash
-    "q235_bpe_token_count" ->
+    QueryDef("q235_bpe_token_count", bpeTokenCount(_, _), Some(
       s"""SELECT lang, count(*) AS n_docs,
          | CAST(sum($tok) AS BIGINT) AS total_tokens,
          | CAST(max($tok) AS BIGINT) AS max_tokens,
          | CAST(sum(CAST(ceil(length(text)/4.0) AS BIGINT)) AS BIGINT)
          |  AS total_est_tokens
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q236_bpe_pack_budget" ->
+         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+    QueryDef("q236_bpe_pack_budget", bpePackBudget(_, _), Some(
       s"""WITH toks AS (
          |  SELECT lang, doc_id,
          |   CAST(floor(doc_id/100000.0) AS INT) AS shard,
@@ -117,15 +112,15 @@ object BpeQueries extends graft.QueryModule {
          |SELECT lang, shard, CAST(floor((cum - tok)/256.0) AS INT) AS example_ix,
          | count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS example_tokens
          |FROM cum GROUP BY lang, shard, example_ix
-         |ORDER BY lang, shard, example_ix""".stripMargin,
+         |ORDER BY lang, shard, example_ix""".stripMargin)),
     // the ENCODED CHARACTERS are gated, not just counts: the native
     // heap-walk encoder's output must hash-match the literal replace
     // chain (prefix bounded to 32 chars; full length + token count
     // cover the rest of the string)
-    "q240_bpe_encode_native" ->
+    QueryDef("q240_bpe_encode_native", bpeEncodeNative(_, _), Some(
       s"""SELECT doc_id, substr(e, 1, 32) AS enc_prefix,
          | CAST(length(e) AS INT) AS enc_len,
          | CAST(length(replace(e, ' ', '')) AS INT) AS n_tokens
          |FROM (SELECT doc_id, $enc AS e FROM documents)
-         |ORDER BY doc_id""".stripMargin)
+         |ORDER BY doc_id""".stripMargin)))
 }

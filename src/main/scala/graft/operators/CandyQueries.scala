@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** The candy pipeline's core semantics (SURVEY.md §2.4 A1-A4) re-expressed
   * over the testdata star schema so each step is oracle-checkable: lineitem
@@ -90,22 +90,15 @@ object CandyQueries extends graft.QueryModule {
       .orderBy("ship_date")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q40_order_rollup" -> (orderRollup _),
-    "q41_inventory_depletion" -> (inventoryDepletion _),
-    "q42_products_updated" -> (productsUpdated _),
-    "q43_daily_sales_profit" -> (dailySalesProfit _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q40_order_rollup" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q40_order_rollup", orderRollup, Some(
       """SELECT l_orderkey,
         | sum(CAST(round(l_extendedprice*100) AS BIGINT)
         |   * (100 - CAST(round(l_discount*100) AS BIGINT))
         |   * (100 + CAST(round(l_tax*100) AS BIGINT)))/1000000.0 AS total_amount,
         | count(*) AS num_items, sum(l_quantity) AS total_qty
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    "q41_inventory_depletion" ->
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin)),
+    QueryDef("q41_inventory_depletion", inventoryDepletion, Some(
       """SELECT l_partkey,
         | count(*) FILTER (WHERE fulfilled) AS n_fulfilled,
         | count(*) FILTER (WHERE NOT fulfilled) AS n_cancelled,
@@ -116,15 +109,15 @@ object CandyQueries extends graft.QueryModule {
         |     ORDER BY l_shipdate, l_orderkey, l_linenumber
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= p_size*10 AS fulfilled
         |  FROM lineitem JOIN part ON l_partkey = p_partkey)
-        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin,
-    "q42_products_updated" ->
+        |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin)),
+    QueryDef("q42_products_updated", productsUpdated, Some(
       """SELECT p_partkey, p_name,
         | p_size*1000 - coalesce(sold, 0) AS current_stock
         |FROM part LEFT JOIN
         | (SELECT l_partkey, sum(l_quantity) AS sold FROM lineitem GROUP BY l_partkey) s
         | ON p_partkey = l_partkey
-        |ORDER BY p_partkey""".stripMargin,
-    "q43_daily_sales_profit" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    QueryDef("q43_daily_sales_profit", dailySalesProfit, Some(
       """SELECT CAST(l_shipdate AS DATE) AS ship_date,
         | count(*) AS num_items, count(DISTINCT l_orderkey) AS num_orders,
         | sum(sales_u)/10000.0 AS total_sales,
@@ -134,6 +127,5 @@ object CandyQueries extends graft.QueryModule {
         |  CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) AS sales_u,
         |  CAST(l_quantity AS BIGINT) * CAST(round(p_retailprice*100) AS BIGINT) * 5 AS cost_u
         | FROM lineitem JOIN part ON l_partkey = p_partkey)
-        |GROUP BY ship_date ORDER BY ship_date""".stripMargin,
-  )
+        |GROUP BY ship_date ORDER BY ship_date""".stripMargin)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Change-data-capture and event-sequence operators.
   *
@@ -188,15 +188,8 @@ object CdcOps extends graft.QueryModule {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q97_cdc_merge" -> (cdcMerge _),
-    "q105_table_diff" -> (tableDiff _),
-    "q107_retention_cohorts" -> (retentionCohorts _),
-    "q108_moving_window" -> (movingWindow _),
-    "q100_funnel" -> (funnel _))
-
-  val oracle: Map[String, String] = Map(
-    "q97_cdc_merge" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q97_cdc_merge", cdcMerge, Some(
       """WITH upd AS (
         |  SELECT o_custkey AS k,
         |   CASE WHEN max(o_orderstatus) = 'F' THEN 'D' ELSE 'U' END AS op,
@@ -215,8 +208,8 @@ object CdcOps extends graft.QueryModule {
         |FROM customer c FULL OUTER JOIN chg g ON c.c_custkey = g.k
         |WHERE coalesce(g.op, '') <> 'D'
         |  AND NOT (c.c_custkey IS NULL AND g.op <> 'I')
-        |ORDER BY 1""".stripMargin,
-    "q105_table_diff" ->
+        |ORDER BY 1""".stripMargin)),
+    QueryDef("q105_table_diff", tableDiff, Some(
       """WITH upd AS (
         |  SELECT o_custkey AS k,
         |   CASE WHEN max(o_orderstatus) = 'F' THEN 'D' ELSE 'U' END AS op,
@@ -250,8 +243,8 @@ object CdcOps extends graft.QueryModule {
         |   o.old_bal, m.c_acctbal AS new_bal
         |  FROM oldv o FULL OUTER JOIN merged m ON o.k = m.c_custkey)
         |WHERE change_type IS NOT NULL
-        |ORDER BY c_custkey""".stripMargin,
-    "q107_retention_cohorts" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    QueryDef("q107_retention_cohorts", retentionCohorts, Some(
       """WITH cohort AS (
         |  SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
         |  FROM events WHERE event_type = 'signup' GROUP BY user_id)
@@ -260,15 +253,15 @@ object CdcOps extends graft.QueryModule {
         | count(DISTINCT e.user_id) AS n_active
         |FROM events e JOIN cohort USING (user_id)
         |WHERE (epoch(CAST(date_trunc('week', e.ts) AS DATE)) - epoch(cohort_week)) / 86400 BETWEEN 0 AND 56
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q108_moving_window" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    QueryDef("q108_moving_window", movingWindow, Some(
       """SELECT event_id, user_id,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) OVER (
         |   PARTITION BY user_id ORDER BY epoch_us(ts)
         |   RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW) / 100.0
         |  AS DOUBLE) AS trailing_7d_value
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q100_funnel" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    QueryDef("q100_funnel", funnel, Some(
       """WITH flagged AS (
         |  SELECT ts, event_type,
         |   min(CASE WHEN event_type = 'purchase' THEN ts END)
@@ -280,5 +273,5 @@ object CdcOps extends graft.QueryModule {
         | CAST(count(*) FILTER (WHERE next_purchase_ts IS NOT NULL
         |   AND next_purchase_ts <= ts + INTERVAL 30 MINUTE) AS BIGINT) AS n_converted
         |FROM flagged WHERE event_type = 'view'
-        |GROUP BY event_date ORDER BY event_date""".stripMargin)
+        |GROUP BY event_date ORDER BY event_date""".stripMargin)))
 }

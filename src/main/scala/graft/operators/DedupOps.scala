@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QueryDef, Tables}
 import graft.functions.{functions => gfn}
 
 /** Near-duplicate detection at corpus scale: MinHash+LSH and SimHash.
@@ -470,15 +470,6 @@ object DedupOps extends graft.QueryModule {
       .orderBy("a", "b")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q172_containment_join" -> ((s: SparkSession, d: String) => containmentJoin(s, d)),
-    "q83_neardup_clusters" -> ((s: SparkSession, d: String) => neardupClusters(s, d)),
-    "q56_minhash_pairs" -> ((s: SparkSession, d: String) => minhashPortablePairs(s, d)),
-    "q187_source_minhash_jaccard" -> ((s: SparkSession, d: String) => sourceMinhashJaccard(s, d)),
-    "q57_simhash" -> ((s: SparkSession, d: String) => simhash(s, d)),
-    "q58_neardup_verified" -> ((s: SparkSession, d: String) => neardupVerified(s, d)),
-  )
-
   /** q56 is the portable-hash LSH pipeline, so DuckDB replays it
     * end-to-end (signatures → bands → buckets → pairs) and the row is
     * fully hash-checked. q57 stays rows-only BY DESIGN: its value IS
@@ -488,8 +479,63 @@ object DedupOps extends graft.QueryModule {
     * q58's output is exact 5-gram Jaccard, recomputed brute-force by
     * DuckDB (feasible at the verify gate's sf0.01: 500 docs = 124,750
     * pairs). */
-  val oracle: Map[String, String] = Map(
-    "q56_minhash_pairs" -> {
+  val defs: Seq[QueryDef] = Seq(
+    // q172: brute-force containment truth over the same word-3-shingle
+    // sets — the prefix filter on the Spark side is candidate PRUNING
+    // only (provably lossless), so the oracle needs no knowledge of it.
+    // list_extract (1-based in BOTH engines once the DuckDialect shim
+    // maps it to try_element_at) replaces bracket subscripts, which are
+    // 1-based in DuckDB but 0-based AND bounds-throwing in Spark —
+    // range(0, len-2) with elements i+1 .. i+3 mirrors Spark's
+    // sequence(0, size-3) with subscripts i .. i+2 exactly.
+    QueryDef("q172_containment_join", containmentJoin(_, _), Some(
+      """WITH d AS (
+        |  SELECT doc_id,
+        |   string_split(trim(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'))), ' ') AS toks
+        |  FROM documents),
+        |sh AS (
+        |  SELECT DISTINCT doc_id,
+        |   list_extract(toks, CAST(i+1 AS INT)) || ' '
+        |    || list_extract(toks, CAST(i+2 AS INT)) || ' '
+        |    || list_extract(toks, CAST(i+3 AS INT)) AS g
+        |  FROM (SELECT doc_id, toks, unnest(range(0, len(toks) - 2)) AS i
+        |        FROM d WHERE len(toks) >= 3)),
+        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
+        |inter AS (
+        |  SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS isz
+        |  FROM sh s1 JOIN sh s2 ON s1.g = s2.g AND s1.doc_id < s2.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT a, b, isz AS intersect_size,
+        |       least(sa.sz, sb.sz) AS min_size,
+        |       CAST(isz AS DOUBLE) / least(sa.sz, sb.sz) AS containment
+        |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+        |WHERE isz * 10 >= least(sa.sz, sb.sz) * 8
+        |ORDER BY a, b""".stripMargin)),
+    QueryDef("q83_neardup_clusters", neardupClusters(_, _), Some(
+      """WITH RECURSIVE d AS (
+        |  SELECT doc_id, hex(encode(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')))) AS h,
+        |   octet_length(encode(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')))) AS nb
+        |  FROM documents WHERE length(text) >= 5),
+        |grams AS (
+        |  SELECT DISTINCT doc_id, substring(h, CAST(i*2+1 AS INT), 10) AS gram
+        |  FROM (SELECT doc_id, h, unnest(range(0, nb - 4)) AS i FROM d)),
+        |sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
+        |prs AS (
+        |  SELECT g1.doc_id AS a, g2.doc_id AS b, count(*) AS isz
+        |  FROM grams g1 JOIN grams g2 ON g1.gram = g2.gram AND g1.doc_id < g2.doc_id
+        |  GROUP BY 1, 2),
+        |nd AS (
+        |  SELECT a, b FROM prs
+        |   JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+        |  WHERE isz * 10 >= (sa.sz + sb.sz - isz) * 7),
+        |edges AS (SELECT a, b FROM nd UNION SELECT b, a FROM nd),
+        |reach(id, r) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, r.r FROM edges e JOIN reach r ON e.b = r.id)
+        |SELECT id AS doc_id, min(r) AS cluster
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin)),
+    QueryDef("q56_minhash_pairs", minhashPortablePairs(_, _), Some {
       // mechanical mirror of the Spark expressions: same md5 on the
       // same grams, same (a + i*b) mod 2^32 slot derivation
       val slotMins = (0 until 16).map(i =>
@@ -534,8 +580,8 @@ object DedupOps extends graft.QueryModule {
         |FROM m x JOIN m y ON x.band = y.band AND x.digest = y.digest
         |  AND x.doc_id < y.doc_id
         |ORDER BY a, b""".stripMargin
-    },
-    "q187_source_minhash_jaccard" -> {
+    }),
+    QueryDef("q187_source_minhash_jaccard", sourceMinhashJaccard(_, _), Some {
       // same hash device as q56, aggregated per SOURCE (min over the
       // union gram multiset == min over the set), then slot matching
       val slotMins = (0 until 16).map(i =>
@@ -578,32 +624,9 @@ object DedupOps extends graft.QueryModule {
         |SELECT source_a, source_b, n_match,
         |  CAST(n_match AS DOUBLE) / 16 AS est_jaccard
         |FROM p ORDER BY source_a, source_b""".stripMargin
-    },
-    "q83_neardup_clusters" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id, hex(encode(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')))) AS h,
-        |   octet_length(encode(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')))) AS nb
-        |  FROM documents WHERE length(text) >= 5),
-        |grams AS (
-        |  SELECT DISTINCT doc_id, substring(h, CAST(i*2+1 AS INT), 10) AS gram
-        |  FROM (SELECT doc_id, h, unnest(range(0, nb - 4)) AS i FROM d)),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        |prs AS (
-        |  SELECT g1.doc_id AS a, g2.doc_id AS b, count(*) AS isz
-        |  FROM grams g1 JOIN grams g2 ON g1.gram = g2.gram AND g1.doc_id < g2.doc_id
-        |  GROUP BY 1, 2),
-        |nd AS (
-        |  SELECT a, b FROM prs
-        |   JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-        |  WHERE isz * 10 >= (sa.sz + sb.sz - isz) * 7),
-        |edges AS (SELECT a, b FROM nd UNION SELECT b, a FROM nd),
-        |reach(id, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, r.r FROM edges e JOIN reach r ON e.b = r.id)
-        |SELECT id AS doc_id, min(r) AS cluster
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    "q58_neardup_verified" ->
+    }),
+    QueryDef("q57_simhash", simhash(_, _), None),
+    QueryDef("q58_neardup_verified", neardupVerified(_, _), Some(
       // byte 5-grams, like the Spark kernel (gram_set slides over UTF-8
       // bytes): hex(encode(t)) turns the text into its byte string, and
       // a 10-hex-char window is exactly one 5-byte gram — char-based
@@ -625,37 +648,5 @@ object DedupOps extends graft.QueryModule {
         |       CAST(isz AS DOUBLE) / (sa.sz + sb.sz - isz) AS jaccard
         |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
         |WHERE isz * 10 >= (sa.sz + sb.sz - isz) * 7
-        |ORDER BY a, b""".stripMargin,
-    // q172: brute-force containment truth over the same word-3-shingle
-    // sets — the prefix filter on the Spark side is candidate PRUNING
-    // only (provably lossless), so the oracle needs no knowledge of it.
-    // list_extract (1-based in BOTH engines once the DuckDialect shim
-    // maps it to try_element_at) replaces bracket subscripts, which are
-    // 1-based in DuckDB but 0-based AND bounds-throwing in Spark —
-    // range(0, len-2) with elements i+1 .. i+3 mirrors Spark's
-    // sequence(0, size-3) with subscripts i .. i+2 exactly.
-    "q172_containment_join" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |   string_split(trim(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'))), ' ') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |   list_extract(toks, CAST(i+1 AS INT)) || ' '
-        |    || list_extract(toks, CAST(i+2 AS INT)) || ' '
-        |    || list_extract(toks, CAST(i+3 AS INT)) AS g
-        |  FROM (SELECT doc_id, toks, unnest(range(0, len(toks) - 2)) AS i
-        |        FROM d WHERE len(toks) >= 3)),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT s1.doc_id AS a, s2.doc_id AS b, count(*) AS isz
-        |  FROM sh s1 JOIN sh s2 ON s1.g = s2.g AND s1.doc_id < s2.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a, b, isz AS intersect_size,
-        |       least(sa.sz, sb.sz) AS min_size,
-        |       CAST(isz AS DOUBLE) / least(sa.sz, sb.sz) AS containment
-        |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-        |WHERE isz * 10 >= least(sa.sz, sb.sz) * 8
-        |ORDER BY a, b""".stripMargin,
-  )
+        |ORDER BY a, b""".stripMargin)))
 }

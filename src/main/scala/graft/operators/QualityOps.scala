@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Declarative data-quality expectations — the audit gate a pipeline
   * runs before publishing a batch (dbt tests / Deequ checks / Delta
@@ -101,11 +101,8 @@ object QualityOps extends graft.QueryModule {
   def expectations(s: SparkSession, dir: String): DataFrame =
     audit(t(s, dir, "lineitem"), t(s, dir, "orders"), t(s, dir, "customer"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q211_expectations" -> (expectations _))
-
-  val oracle: Map[String, String] = Map(
-    "q211_expectations" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q211_expectations", expectations, Some(
       """SELECT * FROM (
         | SELECT 'lineitem_qty_le_30' AS check_name,
         |  CAST((SELECT coalesce(sum(CASE WHEN l_quantity > 30 THEN 1 ELSE 0 END), 0)
@@ -142,5 +139,5 @@ object QualityOps extends graft.QueryModule {
         |  CAST((SELECT count(*) FROM lineitem l WHERE NOT EXISTS (
         |         SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT),
         |  (SELECT count(*) FROM lineitem)
-        |) ORDER BY check_name""".stripMargin)
+        |) ORDER BY check_name""".stripMargin)))
 }

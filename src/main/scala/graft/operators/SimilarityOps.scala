@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 import graft.functions.{functions => gfn}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -402,26 +402,6 @@ object SimilarityOps extends graft.QueryModule {
     finally s.catalog.dropTempView(view)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q94_sql_cosine_topk" -> (sqlCosineTopK _),
-    "q90_hard_negatives" -> ((s: SparkSession, d: String) => hardNegatives(s, d)),
-    "q86_embedding_quantize" -> (embeddingQuantize _),
-    // 0.5 rather than q66's 0.35: on these weakly-clustered synthetic
-    // embeddings 0.35 chains most of the corpus into near-giant
-    // components (92/5000 survivors at sf0.1 — removal, not dedup) and
-    // label propagation pays the resulting diameter in shuffle rounds;
-    // 0.5 keeps ~40% and converges in the near-clique regime the
-    // operator is designed for
-    "q87_semdedup_corpus" -> ((s: SparkSession, d: String) => semdedupCorpus(s, d, 0.5)),
-    "q63_ann_ivf" -> ((s: SparkSession, d: String) => annIvf(s, d)),
-    "q59_embedding_neardup" -> ((s: SparkSession, d: String) => embeddingNeardup(s, d)),
-    "q60_cosine_topk" -> ((s: SparkSession, d: String) => cosineTopK(s, d)),
-    "q61_ann_lsh" -> ((s: SparkSession, d: String) => annLsh(s, d)),
-    "q62_embedding_stats" -> (embeddingStats _),
-    "q66_neardup_ivf_blocked" -> ((s: SparkSession, d: String) => neardupIvfBlocked(s, d)),
-    "q67_ann_ivf_trained" -> ((s: SparkSession, d: String) => annIvf(s, d, trainIters = 2)),
-  )
-
   /** Exact double cosine of two embedding columns in PORTABLE SQL —
     * fold order identical to the CosineSimF kernel. The dot product
     * walks 1-based subscripts through list_extract (= try_element_at
@@ -458,16 +438,16 @@ object SimilarityOps extends graft.QueryModule {
     * double left-to-right, mirrored exactly by list_zip/list_transform
     * (DuckDB's builtin list_cosine_similarity accumulates in float32 and
     * does NOT match). */
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // q94 shares q60's truth: the native cosine_sim fold order is the
     // same whether reached from the Column API or the SQL registry
-    "q94_sql_cosine_topk" ->
+    QueryDef("q94_sql_cosine_topk", sqlCosineTopK, Some(
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         |SELECT vec_id, label,
         | round(${cosSqlOf("embedding", "qv")}, 6) AS cos_sim
         |FROM embeddings, q WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 50""".stripMargin,
-    "q90_hard_negatives" ->
+        |ORDER BY cos_sim DESC, vec_id LIMIT 50""".stripMargin)),
+    QueryDef("q90_hard_negatives", hardNegatives(_, _), Some(
       s"""WITH q AS (
         |  SELECT vec_id AS query_id, label AS qlabel, embedding AS qv
         |  FROM embeddings WHERE vec_id < 10),
@@ -479,12 +459,57 @@ object SimilarityOps extends graft.QueryModule {
         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
         |  FROM scored)
         |SELECT query_id, CAST(rk AS INT) AS rank, vec_id, label, cos_sim
-        |FROM ranked WHERE rk <= 5 ORDER BY query_id, rank""".stripMargin,
+        |FROM ranked WHERE rk <= 5 ORDER BY query_id, rank""".stripMargin)),
+    // (dimension, value) pairs via a single-generator lateral +
+    // list_extract — portable to spark.sql, where DuckDB's two
+    // set-returning functions in one SELECT (lockstep expansion) can't
+    // be spelled
+    QueryDef("q86_embedding_quantize", embeddingQuantize, Some(
+      """WITH e AS (
+        |  SELECT CAST(t.d - 1 AS INT) AS dim,
+        |   CAST(list_extract(embedding, t.d) AS DOUBLE) AS x
+        |  FROM embeddings,
+        |   LATERAL unnest(range(1, len(embedding) + 1)) AS t(d)),
+        |st AS (SELECT dim, max(abs(x)) AS maxabs FROM e GROUP BY dim
+        |       HAVING max(abs(x)) > 0),
+        |q AS (
+        |  SELECT e.dim, st.maxabs, CAST(round(x / maxabs * 127) AS INT) AS q
+        |  FROM e JOIN st USING (dim))
+        |SELECT dim, round(maxabs, 6) AS maxabs, count(*) AS n,
+        | CAST(sum(q) AS BIGINT) AS sum_q,
+        | CAST(sum(CAST(q AS BIGINT) * q) AS BIGINT) AS sum_q2,
+        | CAST(count(*) FILTER (WHERE abs(q) = 127) AS BIGINT) AS n_sat
+        |FROM q GROUP BY dim, maxabs ORDER BY dim""".stripMargin)),
+    // 0.5 rather than q66's 0.35: on these weakly-clustered synthetic
+    // embeddings 0.35 chains most of the corpus into near-giant
+    // components (92/5000 survivors at sf0.1 — removal, not dedup) and
+    // label propagation pays the resulting diameter in shuffle rounds;
+    // 0.5 keeps ~40% and converges in the near-clique regime the
+    // operator is designed for
+    // q87: q66's verified pair set, then components via a recursive
+    // transitive-closure CTE, then drop every non-representative member
+    QueryDef("q87_semdedup_corpus", (s, d) => semdedupCorpus(s, d, 0.5), Some(
+      s"""WITH RECURSIVE $ivfCandSql,
+        |nd AS (
+        |  SELECT cand.a, cand.b
+        |  FROM cand
+        |   JOIN embeddings ea ON ea.vec_id = cand.a
+        |   JOIN embeddings eb ON eb.vec_id = cand.b
+        |  WHERE round($pairCosSql, 6) >= 0.5),
+        |edges AS (SELECT a, b FROM nd UNION SELECT b, a FROM nd),
+        |reach(id, r) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, r.r FROM edges e JOIN reach r ON e.b = r.id),
+        |lab AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)
+        |SELECT vec_id, label FROM embeddings
+        |WHERE vec_id NOT IN (SELECT id FROM lab WHERE cluster <> id)
+        |ORDER BY vec_id""".stripMargin)),
     // q63's sampled-centroid mode is fully deterministic and its cosine
     // fold is oracle-exact (proven by q59/q60), so even the ANN variant
     // gets a DuckDB oracle: same centroids, same struct-argmax cell
     // assignment, same nprobe cell probe.
-    "q63_ann_ivf" ->
+    QueryDef("q63_ann_ivf", annIvf(_, _), Some(
       """WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id BETWEEN 1 AND 16),
         |scored AS (
         |  SELECT e.vec_id, c.cid,
@@ -509,12 +534,12 @@ object SimilarityOps extends graft.QueryModule {
         | JOIN assigned a ON e.vec_id = a.vec_id
         | JOIN qcells ON a.cell = qcells.cell, q
         |WHERE e.vec_id <> 0
-        |ORDER BY cos_sim DESC, e.vec_id LIMIT 50""".stripMargin,
+        |ORDER BY cos_sim DESC, e.vec_id LIMIT 50""".stripMargin)),
     // q59: the bounded near-dup report — same CTE prefix as q66 (the
     // 16-centroid coarse quantizer holds at every gate scale), with the
     // candidate join additionally constrained to the label block,
     // mirrored to directed pairs, and cut to top-3 per doc
-    "q59_embedding_neardup" ->
+    QueryDef("q59_embedding_neardup", embeddingNeardup(_, _), Some(
       s"""WITH $ivfCandSql,
         |memb AS (
         |  SELECT r.vec_id, r.cid AS cell, e.label
@@ -536,8 +561,8 @@ object SimilarityOps extends graft.QueryModule {
         |   row_number() OVER (PARTITION BY a ORDER BY cos_sim DESC, b) AS rank
         |  FROM sc)
         |SELECT label, a, CAST(rank AS INT) AS rank, b, cos_sim
-        |FROM rk WHERE rank <= 3 ORDER BY a, rank""".stripMargin,
-    "q60_cosine_topk" ->
+        |FROM rk WHERE rank <= 3 ORDER BY a, rank""".stripMargin)),
+    QueryDef("q60_cosine_topk", cosineTopK(_, _), Some(
       """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         |SELECT vec_id, label,
         | round(
@@ -545,14 +570,33 @@ object SimilarityOps extends graft.QueryModule {
         |   / (sqrt(list_sum(list_transform(embedding, v -> CAST(v AS DOUBLE)*v)))
         |      * sqrt(list_sum(list_transform(qv, v -> CAST(v AS DOUBLE)*v)))), 6) AS cos_sim
         |FROM embeddings, q WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 50""".stripMargin,
+        |ORDER BY cos_sim DESC, vec_id LIMIT 50""".stripMargin)),
+    QueryDef("q61_ann_lsh", annLsh(_, _), None),
+    QueryDef("q62_embedding_stats", embeddingStats, Some(
+      """SELECT label, count(*) AS n,
+        | round(avg(l2), 4) AS avg_norm,
+        | round(min(l2), 4) AS min_norm,
+        | round(max(l2), 4) AS max_norm
+        |FROM (SELECT label,
+        |  sqrt(list_sum(list_transform(embedding, v -> CAST(v AS DOUBLE)*v))) AS l2
+        | FROM embeddings)
+        |GROUP BY label ORDER BY label""".stripMargin)),
+    QueryDef("q66_neardup_ivf_blocked", neardupIvfBlocked(_, _), Some(
+      s"""WITH $ivfCandSql
+        |SELECT cand.a, cand.b,
+        | round($pairCosSql, 6) AS cos_sim
+        |FROM cand
+        | JOIN embeddings ea ON ea.vec_id = cand.a
+        | JOIN embeddings eb ON eb.vec_id = cand.b
+        |WHERE round($pairCosSql, 6) >= 0.35
+        |ORDER BY a, b""".stripMargin)),
     // q67: the TRAINED coarse quantizer, oracle-checked end-to-end —
     // 2 Lloyd iterations unrolled as SQL. Possible because KMeansLite's
     // centroid update is an exact quantized-integer mean (bit-identical
     // across engines regardless of fold order); every other step (seed =
     // 16 lowest ids, argmax assignment, float32 centroid storage, probe)
     // is the same deterministic algebra both engines already agree on.
-    "q67_ann_ivf_trained" -> {
+    QueryDef("q67_ann_ivf_trained", (s, d) => annIvf(s, d, trainIters = 2), Some {
       // portable spellings throughout (the statement replays through
       // spark.sql as well as DuckDB): cosine via cosSqlOf's subscript
       // walk; per-vector argmax via a deterministic row_number window
@@ -598,63 +642,5 @@ object SimilarityOps extends graft.QueryModule {
          |FROM embeddings e JOIN fassigned a ON e.vec_id = a.vec_id JOIN qcells ON a.cell = qcells.cell, q
          |WHERE e.vec_id <> 0
          |ORDER BY cos_sim DESC, e.vec_id LIMIT 50""".stripMargin
-    },
-    "q66_neardup_ivf_blocked" ->
-      s"""WITH $ivfCandSql
-        |SELECT cand.a, cand.b,
-        | round($pairCosSql, 6) AS cos_sim
-        |FROM cand
-        | JOIN embeddings ea ON ea.vec_id = cand.a
-        | JOIN embeddings eb ON eb.vec_id = cand.b
-        |WHERE round($pairCosSql, 6) >= 0.35
-        |ORDER BY a, b""".stripMargin,
-    // q87: q66's verified pair set, then components via a recursive
-    // transitive-closure CTE, then drop every non-representative member
-    "q87_semdedup_corpus" ->
-      s"""WITH RECURSIVE $ivfCandSql,
-        |nd AS (
-        |  SELECT cand.a, cand.b
-        |  FROM cand
-        |   JOIN embeddings ea ON ea.vec_id = cand.a
-        |   JOIN embeddings eb ON eb.vec_id = cand.b
-        |  WHERE round($pairCosSql, 6) >= 0.5),
-        |edges AS (SELECT a, b FROM nd UNION SELECT b, a FROM nd),
-        |reach(id, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, r.r FROM edges e JOIN reach r ON e.b = r.id),
-        |lab AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)
-        |SELECT vec_id, label FROM embeddings
-        |WHERE vec_id NOT IN (SELECT id FROM lab WHERE cluster <> id)
-        |ORDER BY vec_id""".stripMargin,
-    // (dimension, value) pairs via a single-generator lateral +
-    // list_extract — portable to spark.sql, where DuckDB's two
-    // set-returning functions in one SELECT (lockstep expansion) can't
-    // be spelled
-    "q86_embedding_quantize" ->
-      """WITH e AS (
-        |  SELECT CAST(t.d - 1 AS INT) AS dim,
-        |   CAST(list_extract(embedding, t.d) AS DOUBLE) AS x
-        |  FROM embeddings,
-        |   LATERAL unnest(range(1, len(embedding) + 1)) AS t(d)),
-        |st AS (SELECT dim, max(abs(x)) AS maxabs FROM e GROUP BY dim
-        |       HAVING max(abs(x)) > 0),
-        |q AS (
-        |  SELECT e.dim, st.maxabs, CAST(round(x / maxabs * 127) AS INT) AS q
-        |  FROM e JOIN st USING (dim))
-        |SELECT dim, round(maxabs, 6) AS maxabs, count(*) AS n,
-        | CAST(sum(q) AS BIGINT) AS sum_q,
-        | CAST(sum(CAST(q AS BIGINT) * q) AS BIGINT) AS sum_q2,
-        | CAST(count(*) FILTER (WHERE abs(q) = 127) AS BIGINT) AS n_sat
-        |FROM q GROUP BY dim, maxabs ORDER BY dim""".stripMargin,
-    "q62_embedding_stats" ->
-      """SELECT label, count(*) AS n,
-        | round(avg(l2), 4) AS avg_norm,
-        | round(min(l2), 4) AS min_norm,
-        | round(max(l2), 4) AS max_norm
-        |FROM (SELECT label,
-        |  sqrt(list_sum(list_transform(embedding, v -> CAST(v AS DOUBLE)*v))) AS l2
-        | FROM embeddings)
-        |GROUP BY label ORDER BY label""".stripMargin,
-  )
+    }))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Text-analysis operators for large-scale training-data pipelines over
   * the `documents` table: exact dedup, fingerprinting, language ID,
@@ -693,36 +693,8 @@ object TextQueries extends graft.QueryModule {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q192_chunk_dedup" -> ((s: SparkSession, d: String) => chunkDedup(s, d)),
-    "q103_char_entropy" -> (charEntropy _),
-    "q99_vocab_coverage" -> ((s: SparkSession, d: String) => vocabCoverage(s, d)),
-    "q89_tfidf" -> ((s: SparkSession, d: String) => tfidfTopTerms(s, d)),
-    "q84_dup_gram_ratio" -> ((s: SparkSession, d: String) => dupGramRatio(s, d)),
-    "q85_mix_upsample" -> ((s: SparkSession, d: String) => mixUpsample(s, d)),
-    "q82_decontaminate" -> ((s: SparkSession, d: String) => decontaminate(s, d)),
-    "q81_unigram_logprob" -> (unigramLogProb _),
-    "q80_incremental_dedup" -> ((s: SparkSession, d: String) => incrementalDedup(s, d)),
-    "q79_pii_scrub" -> (piiScrub _),
-    "q78_simhash_portable" -> (simhashPortable _),
-    "q75_stratified_sample" -> ((s: SparkSession, d: String) => stratifiedSample(s, d)),
-    "q76_pack_sequences" -> ((s: SparkSession, d: String) => packSequences(s, d)),
-    "q74_chunk_documents" -> ((s: SparkSession, d: String) => chunkDocuments(s, d)),
-    "q73_heavy_hitters" -> ((s: SparkSession, d: String) => heavyHitterTokens(s, d)),
-    "q68_clean_corpus" -> (cleanCorpus _),
-    "q39_hash_split" -> (hashSplit _),
-    "q38_repetition" -> (repetition _),
-    "q50_dedup_exact" -> (dedupExact _),
-    "q51_text_stats" -> (textStats _),
-    "q52_lang_id" -> (langId _),
-    "q53_token_count" -> (tokenCount _),
-    "q54_fingerprint" -> (fingerprint _),
-    "q55_ngram_jaccard" -> (ngramJaccard _),
-    "q112_sql_gram_kernels" -> (sqlGramKernels _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q192_chunk_dedup" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q192_chunk_dedup", chunkDedup(_, _), Some(
       """WITH ch AS (
         |  SELECT doc_id, i AS ix,
         |         array_to_string(array_slice(ws, i*4+1, i*4+4), ' ') AS chunk
@@ -746,8 +718,8 @@ object TextQueries extends graft.QueryModule {
         |       coalesce(k.n_kept, 0) AS n_kept,
         |       coalesce(k.kept_md5, md5('')) AS kept_md5
         |FROM stats s LEFT JOIN kept k ON s.doc_id = k.k_doc
-        |ORDER BY s.doc_id""".stripMargin,
-    "q103_char_entropy" ->
+        |ORDER BY s.doc_id""".stripMargin)),
+    QueryDef("q103_char_entropy", charEntropy, Some(
       """WITH counts AS (
         |  SELECT doc_id, ch, count(*) AS cnt FROM (
         |    SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents)
@@ -758,8 +730,8 @@ object TextQueries extends graft.QueryModule {
         |SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars,
         | round(-sum((CAST(cnt AS DOUBLE) / n) * log2(CAST(cnt AS DOUBLE) / n)), 6)
         |  AS entropy_bits
-        |FROM wn GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q99_vocab_coverage" ->
+        |FROM wn GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QueryDef("q99_vocab_coverage", vocabCoverage(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, w FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
@@ -769,8 +741,8 @@ object TextQueries extends graft.QueryModule {
         | CAST(count(*) FILTER (WHERE v.w IS NULL) AS BIGINT) AS n_oov,
         | CAST(count(*) FILTER (WHERE v.w IS NULL) AS DOUBLE) / count(*) AS oov_ratio
         |FROM toks t LEFT JOIN vocab v ON t.w = v.w
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    "q89_tfidf" ->
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin)),
+    QueryDef("q89_tfidf", tfidfTopTerms(_, _), Some(
       """WITH toks AS (
         |  SELECT doc_id, w FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
@@ -787,8 +759,8 @@ object TextQueries extends graft.QueryModule {
         |  FROM scored)
         |SELECT doc_id, CAST(rk AS INT) AS rank, w AS term,
         | CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df, score
-        |FROM ranked WHERE rk <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q84_dup_gram_ratio" ->
+        |FROM ranked WHERE rk <= 3 ORDER BY doc_id, rank""".stripMargin)),
+    QueryDef("q84_dup_gram_ratio", dupGramRatio(_, _), Some(
       """WITH d AS (
         |  SELECT doc_id,
         |   list_filter(string_split(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')), ' '),
@@ -804,8 +776,8 @@ object TextQueries extends graft.QueryModule {
         | CAST(count(*) FILTER (WHERE n_docs >= 2) AS BIGINT) AS n_dup_grams,
         | CAST(count(*) FILTER (WHERE n_docs >= 2) AS DOUBLE) / count(*) AS dup_ratio
         |FROM grams JOIN freq USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q85_mix_upsample" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QueryDef("q85_mix_upsample", mixUpsample(_, _), Some(
       """WITH w AS (
         |  SELECT doc_id, lang,
         |   (CASE WHEN lang = 'en' THEN 2.5 ELSE 1.25 END) AS wt,
@@ -821,8 +793,8 @@ object TextQueries extends graft.QueryModule {
         |  FROM w)
         |SELECT doc_id, lang, CAST(i AS INT) AS copy_ix
         |FROM c, LATERAL unnest(range(0, n_copies)) AS t(i)
-        |ORDER BY doc_id, copy_ix""".stripMargin,
-    "q82_decontaminate" ->
+        |ORDER BY doc_id, copy_ix""".stripMargin)),
+    QueryDef("q82_decontaminate", decontaminate(_, _), Some(
       """WITH d AS (
         |  SELECT doc_id, lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')) AS t
         |  FROM documents),
@@ -834,8 +806,8 @@ object TextQueries extends graft.QueryModule {
         |SELECT doc_id, count(*) AS n_shared_grams
         |FROM (SELECT DISTINCT doc_id, g FROM grams WHERE doc_id >= 10) c
         | JOIN bench USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q81_unigram_logprob" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QueryDef("q81_unigram_logprob", unigramLogProb, Some(
       """WITH toks AS (
         |  SELECT doc_id, w FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
@@ -848,8 +820,8 @@ object TextQueries extends graft.QueryModule {
         |  FROM toks t JOIN freq USING (w), tot)
         |SELECT doc_id, count(*) AS n_tokens,
         | CAST(sum(lp) AS DOUBLE) / count(*) / 10000 AS mean_logprob
-        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q80_incremental_dedup" ->
+        |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    QueryDef("q80_incremental_dedup", incrementalDedup(_, _), Some(
       """WITH f AS (
         |  SELECT doc_id, md5(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fp
         |  FROM documents),
@@ -877,8 +849,8 @@ object TextQueries extends graft.QueryModule {
         |SELECT doc_id, fp FROM within
         |WHERE fp NOT IN (SELECT fp FROM f WHERE doc_id < 250)
         |  AND doc_id NOT IN (SELECT b FROM drop_near)
-        |ORDER BY doc_id""".stripMargin,
-    "q79_pii_scrub" ->
+        |ORDER BY doc_id""".stripMargin)),
+    QueryDef("q79_pii_scrub", piiScrub, Some(
       """WITH aug AS (
         |  SELECT doc_id, text ||
         |   (CASE WHEN doc_id % 3 = 0 THEN ' contact user' || doc_id || '@example.com' ELSE '' END) ||
@@ -900,11 +872,11 @@ object TextQueries extends graft.QueryModule {
         |  FROM aug)
         |SELECT * FROM scrub
         |WHERE n_emails + n_urls + n_phones > 0
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // q78's oracle is generated: 16 digit extractions, 64 bit-vote
     // sums, 16 hex reassemblies — mechanical SQL mirroring the Spark
     // expressions exactly (same md5 on the same UTF-8 gram bytes).
-    "q78_simhash_portable" -> {
+    QueryDef("q78_simhash_portable", simhashPortable, Some {
       val digitExprs = (0 until 16)
         .map(i => s"(instr('0123456789abcdef', substr(h, ${i + 1}, 1)) - 1) AS d$i")
         .mkString(", ")
@@ -928,8 +900,8 @@ object TextQueries extends graft.QueryModule {
          |sums AS (SELECT doc_id, $sumExprs FROM dig GROUP BY doc_id)
          |SELECT doc_id, $hexExprs AS simhash_hex
          |FROM sums ORDER BY doc_id""".stripMargin
-    },
-    "q75_stratified_sample" ->
+    }),
+    QueryDef("q75_stratified_sample", stratifiedSample(_, _), Some(
       """WITH h AS (
         |  SELECT doc_id, lang, substr(md5(CAST(doc_id AS STRING) || ':sample'), 1, 4) AS hx
         |  FROM documents)
@@ -941,8 +913,8 @@ object TextQueries extends graft.QueryModule {
         |   + (instr('0123456789abcdef', substr(hx, 4, 1)) - 1) AS v
         | FROM h)
         |WHERE v < (CASE lang WHEN 'en' THEN 0.5 ELSE 1.0 END) * 65536
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q76_pack_sequences" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin)),
+    QueryDef("q76_pack_sequences", packSequences(_, _), Some(
       """WITH chunks AS (
         |  SELECT doc_id, CAST(i AS INT) AS chunk_ix,
         |   CAST(ceil(length(c)/4.0) AS INT) AS tokens
@@ -958,8 +930,8 @@ object TextQueries extends graft.QueryModule {
         |SELECT doc_id, CAST(floor((cum - tokens)/100.0) AS INT) AS example_ix,
         | count(*) AS n_chunks, CAST(sum(tokens) AS BIGINT) AS example_tokens
         |FROM cum GROUP BY doc_id, example_ix
-        |ORDER BY doc_id, example_ix""".stripMargin,
-    "q74_chunk_documents" ->
+        |ORDER BY doc_id, example_ix""".stripMargin)),
+    QueryDef("q74_chunk_documents", chunkDocuments(_, _), Some(
       """SELECT doc_id, CAST(i AS INT) AS chunk_ix,
         | CAST(length(c) AS INTEGER) AS chunk_len, md5(c) AS chunk_md5
         |FROM (
@@ -967,16 +939,16 @@ object TextQueries extends graft.QueryModule {
         |  FROM documents,
         |   LATERAL unnest(range(0,
         |     greatest(CAST(ceil((length(text) - 200)/150.0) AS BIGINT), 0) + 1)) AS t(i))
-        |ORDER BY doc_id, chunk_ix""".stripMargin,
-    "q73_heavy_hitters" ->
+        |ORDER BY doc_id, chunk_ix""".stripMargin)),
+    QueryDef("q73_heavy_hitters", heavyHitterTokens(_, _), Some(
       """WITH words AS (
         |  SELECT w FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
         |  WHERE w <> ''),
         |tot AS (SELECT count(*) AS n FROM words)
         |SELECT w, count(*) AS cnt FROM words, tot
         |GROUP BY w, tot.n HAVING count(*) > tot.n/256.0
-        |ORDER BY cnt DESC, w""".stripMargin,
-    "q68_clean_corpus" ->
+        |ORDER BY cnt DESC, w""".stripMargin)),
+    QueryDef("q68_clean_corpus", cleanCorpus, Some(
       """WITH lang AS (
         |  SELECT doc_id FROM documents
         |  WHERE len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]', 0)) = 0
@@ -1026,8 +998,8 @@ object TextQueries extends graft.QueryModule {
         |        FROM deduped
         |        WHERE doc_id NOT IN (SELECT doc_id FROM removed))) keep
         | JOIN documents doc ON doc.doc_id = keep.doc_id
-        |ORDER BY doc.doc_id""".stripMargin,
-    "q39_hash_split" ->
+        |ORDER BY doc.doc_id""".stripMargin)),
+    QueryDef("q39_hash_split", hashSplit, Some(
       """SELECT split, count(*) AS n, min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM (
         |  SELECT doc_id,
@@ -1041,8 +1013,8 @@ object TextQueries extends graft.QueryModule {
         |     + (instr('0123456789abcdef', substr(hx, 4, 1)) - 1) AS v
         |   FROM (SELECT doc_id, substr(md5(CAST(doc_id AS STRING) || ':graft'), 1, 4) AS hx
         |         FROM documents)))
-        |GROUP BY split ORDER BY split""".stripMargin,
-    "q38_repetition" ->
+        |GROUP BY split ORDER BY split""".stripMargin)),
+    QueryDef("q38_repetition", repetition, Some(
       """SELECT doc_id,
         | CAST(length(t) - 2 AS INTEGER) AS total_grams,
         | CAST(len(list_distinct(list_transform(range(1, length(t) - 1),
@@ -1052,13 +1024,13 @@ object TextQueries extends graft.QueryModule {
         |FROM (SELECT doc_id, lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')) AS t
         |      FROM documents)
         |WHERE length(t) >= 3
-        |ORDER BY doc_id""".stripMargin,
-    "q50_dedup_exact" ->
+        |ORDER BY doc_id""".stripMargin)),
+    QueryDef("q50_dedup_exact", dedupExact, Some(
       """SELECT doc_id, h FROM (
         |  SELECT doc_id, md5(text) AS h,
         |   row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "q51_text_stats" ->
+        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+    QueryDef("q51_text_stats", textStats, Some(
       """SELECT doc_id,
         | CAST(length(text) AS INTEGER) AS n_chars,
         | CAST(len(string_split_regex(trim(text), '[ \t\n\x0b\f\r]+')) AS INTEGER) AS n_tokens,
@@ -1071,8 +1043,8 @@ object TextQueries extends graft.QueryModule {
         | round(CAST(len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|it)\b')) AS DOUBLE)
         |    / len(string_split_regex(trim(text), '[ \t\n\x0b\f\r]+')) * 0.5
         |  + CAST(len(regexp_extract_all(text, '[A-Za-z]', 0)) AS DOUBLE) / length(text) * 0.5, 6) AS quality_score
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q52_lang_id" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QueryDef("q52_lang_id", langId, Some(
       """SELECT doc_id, lang AS lang_label,
         | en_hits, de_hits, fr_hits, es_hits, cjk_hits,
         | CASE WHEN cjk_hits > 0 THEN 'zh'
@@ -1086,19 +1058,31 @@ object TextQueries extends graft.QueryModule {
         |  CAST(len(regexp_extract_all(lower(text), '\b(le|la|les|et|est|une)\b')) AS INTEGER) AS fr_hits,
         |  CAST(len(regexp_extract_all(lower(text), '\b(el|los|las|y|es|una)\b')) AS INTEGER) AS es_hits,
         |  CAST(len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]', 0)) AS INTEGER) AS cjk_hits
-        | FROM documents) ORDER BY doc_id""".stripMargin,
-    "q53_token_count" ->
+        | FROM documents) ORDER BY doc_id""".stripMargin)),
+    QueryDef("q53_token_count", tokenCount, Some(
       """SELECT doc_id,
         | CAST(len(string_split_regex(trim(text), '[ \t\n\x0b\f\r]+')) AS INTEGER) AS ws_tokens,
         | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]', 0)) AS INTEGER) AS bpe_tokens,
         | round(CAST(length(text) AS DOUBLE) / 4.0, 2) AS approx_llm_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q54_fingerprint" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QueryDef("q54_fingerprint", fingerprint, Some(
       """SELECT doc_id, md5(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    QueryDef("q55_ngram_jaccard", ngramJaccard, Some(
+      """WITH g AS (
+        |  SELECT doc_id,
+        |   list_distinct(list_transform(range(1, length(t) - 1), i -> substr(t, CAST(i AS INTEGER), 3))) AS grams
+        |  FROM (SELECT doc_id, lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')) AS t
+        |        FROM documents)
+        |  WHERE length(t) >= 3),
+        |r AS (SELECT grams AS ref_grams FROM g WHERE doc_id = 0)
+        |SELECT doc_id,
+        | round(CAST(len(list_intersect(grams, ref_grams)) AS DOUBLE)
+        |   / (len(grams) + len(ref_grams) - len(list_intersect(grams, ref_grams))), 6) AS jaccard
+        |FROM g, r ORDER BY doc_id""".stripMargin)),
     // q58's byte-gram machinery restricted to pairs against doc 0;
     // sig_k is 16 by construction (size of a k=16 signature)
-    "q112_sql_gram_kernels" ->
+    QueryDef("q112_sql_gram_kernels", sqlGramKernels, Some(
       """WITH d AS (
         |  SELECT doc_id, hex(encode(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')))) AS h,
         |   octet_length(encode(lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')))) AS nb
@@ -1118,18 +1102,5 @@ object TextQueries extends graft.QueryModule {
         | CAST(coalesce(i.isz, 0) AS DOUBLE)
         |   / (s.sz + r.rsz - coalesce(i.isz, 0)) AS jaccard
         |FROM sizes s CROSS JOIN rs r LEFT JOIN inter i ON i.doc_id = s.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
-    "q55_ngram_jaccard" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |   list_distinct(list_transform(range(1, length(t) - 1), i -> substr(t, CAST(i AS INTEGER), 3))) AS grams
-        |  FROM (SELECT doc_id, lower(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ', 'g')) AS t
-        |        FROM documents)
-        |  WHERE length(t) >= 3),
-        |r AS (SELECT grams AS ref_grams FROM g WHERE doc_id = 0)
-        |SELECT doc_id,
-        | round(CAST(len(list_intersect(grams, ref_grams)) AS DOUBLE)
-        |   / (len(grams) + len(ref_grams) - len(list_intersect(grams, ref_grams))), 6) AS jaccard
-        |FROM g, r ORDER BY doc_id""".stripMargin,
-  )
+        |ORDER BY s.doc_id""".stripMargin)))
 }

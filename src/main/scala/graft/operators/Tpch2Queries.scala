@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Round-5 surface extensions: the four remaining TPC-H idioms
   * expressible on these fixtures without a partsupp table — Q7 (volume
@@ -261,22 +261,11 @@ object Tpch2Queries extends graft.QueryModule {
       .limit(100)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q178_tpch_q7" -> ((s: SparkSession, d: String) => tpchQ7(s, d)),
-    "q179_tpch_q8" -> ((s: SparkSession, d: String) => tpchQ8(s, d)),
-    "q180_tpch_q10" -> (tpchQ10 _),
-    "q181_tpch_q12" -> (tpchQ12 _),
-    "q188_tpch_q4" -> (tpchQ4 _),
-    "q189_tpch_q13" -> (tpchQ13 _),
-    "q190_tpch_q17" -> ((s: SparkSession, d: String) => tpchQ17(s, d)),
-    "q191_tpch_q21" -> (tpchQ21 _),
-  )
-
   private val revenueSql =
     "sum(CAST(round(l_extendedprice*100) AS BIGINT)*(100 - CAST(round(l_discount*100) AS BIGINT)))/10000.0"
 
-  val oracle: Map[String, String] = Map(
-    "q178_tpch_q7" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q178_tpch_q7", tpchQ7(_, _), Some(
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         | year(l_shipdate) AS l_year, $revenueSql AS revenue
         |FROM lineitem
@@ -289,8 +278,8 @@ object Tpch2Queries extends graft.QueryModule {
         |  AND ((n1.n_name = 'NATION_11' AND n2.n_name = 'NATION_19')
         |    OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_11'))
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q179_tpch_q8" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
+    QueryDef("q179_tpch_q8", tpchQ8(_, _), Some(
       """WITH base AS (
         | SELECT year(o_orderdate) AS o_year, n1.n_name AS supp_nation,
         |  CAST(round(l_extendedprice*100) AS BIGINT)*(100 - CAST(round(l_discount*100) AS BIGINT)) AS volume
@@ -307,8 +296,8 @@ object Tpch2Queries extends graft.QueryModule {
         |SELECT o_year,
         | round(CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN volume ELSE 0 END) AS DOUBLE)
         |   / CAST(sum(volume) AS DOUBLE), 6) AS mkt_share
-        |FROM base GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q180_tpch_q10" ->
+        |FROM base GROUP BY o_year ORDER BY o_year""".stripMargin)),
+    QueryDef("q180_tpch_q10", tpchQ10, Some(
       s"""SELECT c_custkey, c_name, c_acctbal, n_name, $revenueSql AS revenue
         |FROM lineitem
         | JOIN orders ON l_orderkey = o_orderkey
@@ -317,8 +306,8 @@ object Tpch2Queries extends graft.QueryModule {
         |WHERE l_returnflag = 'R'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q181_tpch_q12" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
+    QueryDef("q181_tpch_q12", tpchQ12, Some(
       """SELECT l_returnflag,
         | count(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')) AS high_line_count,
         | count(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH')) AS low_line_count
@@ -326,23 +315,23 @@ object Tpch2Queries extends graft.QueryModule {
         |WHERE l_returnflag IN ('R', 'A')
         |  AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_shipdate >= o_orderdate + INTERVAL 90 DAY
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q188_tpch_q4" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    QueryDef("q188_tpch_q4", tpchQ4, Some(
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate >= o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q189_tpch_q13" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+    QueryDef("q189_tpch_q13", tpchQ13, Some(
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders
         |    ON c_custkey = o_custkey AND o_orderstatus <> 'P'
         |  GROUP BY c_custkey) t
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q190_tpch_q17" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    QueryDef("q190_tpch_q17", tpchQ17(_, _), Some(
       """WITH lb AS (
         |  SELECT l_partkey, CAST(round(l_quantity*100) AS BIGINT) AS qc,
         |         CAST(round(l_extendedprice*100) AS BIGINT) AS pc
@@ -354,8 +343,8 @@ object Tpch2Queries extends graft.QueryModule {
         |  FROM lb)
         |SELECT round(CAST(sum(pc) AS DOUBLE)/100.0/7.0, 2) AS avg_yearly,
         |       count(*) AS n_lines
-        |FROM w WHERE qc*5*nq < sq""".stripMargin,
-    "q191_tpch_q21" ->
+        |FROM w WHERE qc*5*nq < sq""".stripMargin)),
+    QueryDef("q191_tpch_q21", tpchQ21, Some(
       """SELECT n_name, s_name, count(*) AS numwait
         |FROM supplier
         | JOIN nation ON s_nationkey = n_nationkey
@@ -371,6 +360,5 @@ object Tpch2Queries extends graft.QueryModule {
         |                    AND l3.l_suppkey <> l1.l_suppkey
         |                    AND l3.l_shipdate >= o_orderdate + INTERVAL 90 DAY)
         |GROUP BY n_name, s_name
-        |ORDER BY numwait DESC, n_name, s_name LIMIT 100""".stripMargin,
-  )
+        |ORDER BY numwait DESC, n_name, s_name LIMIT 100""".stripMargin)))
 }

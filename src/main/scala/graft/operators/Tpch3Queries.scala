@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QueryDef, Tables}
 
 /** Round-6 closure of the last TPC-H idiom family: the five canonical
   * queries that need a PARTSUPP table (Q2, Q9, Q11, Q16, Q20), which the
@@ -243,14 +243,6 @@ object Tpch3Queries extends graft.QueryModule {
       .orderBy("s_name")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q194_tpch_q2" -> (tpchQ2 _),
-    "q195_tpch_q9" -> (tpchQ9 _),
-    "q196_tpch_q11" -> (tpchQ11 _),
-    "q197_tpch_q16" -> (tpchQ16 _),
-    "q198_tpch_q20" -> (tpchQ20 _),
-  )
-
   /** Shared oracle prefix: the partsupp generator as a CTE — identical
     * arithmetic to [[partsupp]], replayed by DuckDB from the same
     * parquet inputs (and by Spark's own parser in SqlParitySpec). */
@@ -268,8 +260,9 @@ object Tpch3Queries extends graft.QueryModule {
       |  FROM pskeys)
       |""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q194_tpch_q2" -> (psSql +
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q194_tpch_q2", tpchQ2, Some(
+      (psSql +
       """SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
         |       CAST(ps_costc AS DOUBLE)/100.0 AS ps_supplycost
         |FROM partsupp
@@ -284,8 +277,9 @@ object Tpch3Queries extends graft.QueryModule {
         |    JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
         |    WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin),
-    "q195_tpch_q9" -> (psSql +
+        |LIMIT 100""".stripMargin))),
+    QueryDef("q195_tpch_q9", tpchQ9, Some(
+      (psSql +
       """SELECT n_name AS nation, year(o_orderdate) AS o_year,
         | sum(CAST(round(l_extendedprice*100) AS BIGINT)*(100 - CAST(round(l_discount*100) AS BIGINT))
         |     - ps_costc * CAST(l_quantity AS BIGINT) * 100)/10000.0 AS sum_profit
@@ -297,8 +291,9 @@ object Tpch3Queries extends graft.QueryModule {
         | JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%red%'
         |GROUP BY 1, 2
-        |ORDER BY nation, o_year DESC""".stripMargin),
-    "q196_tpch_q11" -> (psSql.stripSuffix("\n") +
+        |ORDER BY nation, o_year DESC""".stripMargin))),
+    QueryDef("q196_tpch_q11", tpchQ11, Some(
+      (psSql.stripSuffix("\n") +
       """,
         |val AS (
         |  SELECT ps_partkey, sum(ps_costc * ps_availqty) AS v_c
@@ -312,16 +307,18 @@ object Tpch3Queries extends graft.QueryModule {
         |SELECT ps_partkey, CAST(v_c AS DOUBLE)/100.0 AS value
         |FROM val, tot
         |WHERE CAST(v_c AS DECIMAL(38,0)) * n_parts > 2 * CAST(t_c AS DECIMAL(38,0))
-        |ORDER BY value DESC, ps_partkey""".stripMargin),
-    "q197_tpch_q16" -> (psSql +
+        |ORDER BY value DESC, ps_partkey""".stripMargin))),
+    QueryDef("q197_tpch_q16", tpchQ16, Some(
+      (psSql +
       """SELECT p_brand, p_type, p_size, count(DISTINCT ps_suppkey) AS supplier_cnt
         |FROM partsupp JOIN part ON p_partkey = ps_partkey
         |WHERE p_brand <> 'Brand#13' AND p_type <> 'PROMO'
         |  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
         |  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
-    "q198_tpch_q20" -> (psSql +
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin))),
+    QueryDef("q198_tpch_q20", tpchQ20, Some(
+      (psSql +
       """SELECT s_name, n_name
         |FROM supplier
         | JOIN nation ON s_nationkey = n_nationkey
@@ -335,6 +332,5 @@ object Tpch3Queries extends graft.QueryModule {
         |        WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
         |          AND l_shipdate >= TIMESTAMP '1996-01-01'
         |          AND l_shipdate < TIMESTAMP '1997-01-01'))
-        |ORDER BY s_name""".stripMargin),
-  )
+        |ORDER BY s_name""".stripMargin))))
 }

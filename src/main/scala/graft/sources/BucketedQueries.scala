@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Bucketed-table layout: the storage-side answer to the fact-fact join
@@ -59,15 +59,14 @@ object BucketedQueries extends graft.QueryModule {
         Exact.sumMoney(col("o_totalprice")).as("revenue"))
       .orderBy("c_mktsegment")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q102_bucketed_join" -> (bucketedJoinAgg _))
-
   /** Oracle over the ORIGINAL tables — bucketing must change the plan,
     * never the answer. */
-  val oracle: Map[String, String] = Map(
-    "q102_bucketed_join" ->
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the bucketed write
+    QueryDef("q102_bucketed_join", bucketedJoinAgg, Some(
       """SELECT c_mktsegment, count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true))
 }

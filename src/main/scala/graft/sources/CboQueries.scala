@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Cost-based-optimizer surface: ANALYZE TABLE statistics driving plan
@@ -85,16 +85,14 @@ object CboQueries extends graft.QueryModule {
   def cboStatsJoin(s: SparkSession, dir: String): DataFrame =
     statsJoinPlanned(s, dir, cbo = true)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q203_cbo_stats_join" -> (cboStatsJoin _))
-
   /** Oracle over the ORIGINAL tables — statistics must change the
     * plan, never the answer. */
-  val oracle: Map[String, String] = Map(
-    "q203_cbo_stats_join" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q203_cbo_stats_join", cboStatsJoin, Some(
       """SELECT o_orderpriority, count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS revenue
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true))
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Small-file compaction — the storage-ops primitive next to Z-order
@@ -69,16 +69,15 @@ object CompactionQueries extends graft.QueryModule {
         Exact.sumMoney(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q205_compacted_scan" -> (compactedAgg _))
-
   /** Oracle over the ORIGINAL lineitem: the compacted copy must hold
     * exactly the same rows. */
-  val oracle: Map[String, String] = Map(
-    "q205_compacted_scan" ->
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the compacted copy
+    QueryDef("q205_compacted_scan", compactedAgg, Some(
       """SELECT l_returnflag, count(*) AS n_items,
         | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
         | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS sum_price
         |FROM lineitem
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true))
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Declared query over the JDBC source/sink (SURVEY §2.1 S1/S2),
@@ -47,12 +47,11 @@ object JdbcQueries extends graft.QueryModule {
       .orderBy("c_nationkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q72_jdbc_roundtrip" -> (jdbcRoundtrip _))
-
-  val oracle: Map[String, String] = Map(
-    "q72_jdbc_roundtrip" ->
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the Derby load
+    QueryDef("q72_jdbc_roundtrip", jdbcRoundtrip, Some(
       """SELECT c_nationkey, count(*) AS n_customers,
         | sum(CAST(round(c_acctbal*100) AS BIGINT))/100.0 AS sum_acctbal
-        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)
+        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+      stage = true, lifecycle = true))
 }

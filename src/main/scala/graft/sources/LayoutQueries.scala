@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Declared queries over ParquetLayout-written physical layouts — the
@@ -83,23 +83,21 @@ object LayoutQueries extends graft.QueryModule {
       .orderBy("quarter")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q65_partition_pruning" -> (partitionPrunedScan _),
-    "q77_dynamic_pruning" -> (dynamicPartitionPruning _))
-
   /** Oracle runs on the ORIGINAL orders table — partitioning must not
     * change the answer, only the IO. */
-  val oracle: Map[String, String] = Map(
-    "q77_dynamic_pruning" ->
-      """SELECT '1995-Q2' AS quarter, count(*) AS n_orders,
-        | sum(CAST(round(o_totalprice*100) AS BIGINT))/100.0 AS sum_total
-        |FROM orders
-        |WHERE strftime(o_orderdate, '%Y-%m') IN ('1995-04', '1995-05', '1995-06')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q65_partition_pruning" ->
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the partitioned layout write
+    QueryDef("q65_partition_pruning", partitionPrunedScan, Some(
       """SELECT strftime(o_orderdate, '%Y-%m') AS o_month, count(*) AS n_orders,
         | sum(CAST(round(o_totalprice*100) AS BIGINT))/100.0 AS sum_total
         |FROM orders
         |WHERE strftime(o_orderdate, '%Y-%m') BETWEEN '1995-01' AND '1995-03'
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true),
+    QueryDef("q77_dynamic_pruning", dynamicPartitionPruning, Some(
+      """SELECT '1995-Q2' AS quarter, count(*) AS n_orders,
+        | sum(CAST(round(o_totalprice*100) AS BIGINT))/100.0 AS sum_total
+        |FROM orders
+        |WHERE strftime(o_orderdate, '%Y-%m') IN ('1995-04', '1995-05', '1995-06')
+        |GROUP BY 1 ORDER BY 1""".stripMargin)))
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Z-order (Morton-curve) clustering — multi-column data skipping.
@@ -127,15 +127,14 @@ object ZOrderQueries extends graft.QueryModule {
         Exact.sumMoney(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q104_zorder_skipping" -> (zorderBoxQuery _))
-
-  val oracle: Map[String, String] = Map(
-    "q104_zorder_skipping" ->
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the z-order layout write
+    QueryDef("q104_zorder_skipping", zorderBoxQuery, Some(
       """SELECT l_returnflag, count(*) AS n_rows,
         | CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
         | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS sum_price
         |FROM lineitem
         |WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 8
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true))
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Atomic CTAS / RTAS (q241) and declared write sort order (q242) —
@@ -263,16 +263,12 @@ object CtasQueries extends graft.QueryModule {
          |GROUP BY f.ckey ORDER BY f.ckey""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q241_ctas_rtas" -> (ctasRead _),
-    "q242_sorted_write_skipping" -> (sortedRead _),
-    "q244_sorted_bucket_join" -> (sortedJoinRead _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // raw customers, blind to the CTAS/RTAS lifecycle: the rollup arm
     // must equal the RTAS output and the 'v1:all' arm the PRE-replace
     // content — correct only if the swap was atomic and lossless
-    "q241_ctas_rtas" ->
+    // staged: the CTAS → poisoned-CTAS → RTAS lifecycle
+    QueryDef("q241_ctas_rtas", ctasRead, Some(
       """SELECT concat('now:', c_mktsegment) AS grp, count(*) AS n_cust,
         | CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS balance
@@ -282,10 +278,12 @@ object CtasQueries extends graft.QueryModule {
         | CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS balance
         |FROM customer
-        |ORDER BY grp""".stripMargin,
+        |ORDER BY grp""".stripMargin),
+      stage = true),
     // raw orders, blind to the sorted layout: stats skipping must be
     // pure pruning, never a row lost or invented
-    "q242_sorted_write_skipping" ->
+    // staged: the sorted-table ingest (range-distributed write of all orders)
+    QueryDef("q242_sorted_write_skipping", sortedRead, Some(
       """SELECT count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_price,
@@ -293,15 +291,17 @@ object CtasQueries extends graft.QueryModule {
         | max(CAST(o_orderdate AS STRING)) AS last_day
         |FROM orders
         |WHERE CAST(round(o_totalprice*100) AS BIGINT) >= 1000000
-        | AND CAST(round(o_totalprice*100) AS BIGINT) < 1100000""".stripMargin,
+        | AND CAST(round(o_totalprice*100) AS BIGINT) < 1100000""".stripMargin),
+      stage = true),
     // the raw join, blind to the sorted bucket layout: the
     // zero-exchange zero-sort plan must change NOTHING about the answer
-    "q244_sorted_bucket_join" ->
+    QueryDef("q244_sorted_bucket_join", sortedJoinRead, Some(
       """SELECT o.o_custkey AS ckey, count(*) AS n_orders,
         | CAST(sum(CAST(round(o.o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_price,
         | min(CAST(o.o_orderdate AS STRING)) AS first_day,
         | max(c.c_name) AS cname
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY o.o_custkey ORDER BY ckey""".stripMargin)
+        |GROUP BY o.o_custkey ORDER BY ckey""".stripMargin),
+      stage = true))
 }

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 import GraftLakeStore.{PendingEq, TableHandle}
 
@@ -140,9 +140,8 @@ object EqUpsertQueries extends graft.QueryModule {
          |FROM $tbl ORDER BY c_custkey""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q233_eq_delete_upsert" -> (eqUpsertRead _))
-
-  val oracle: Map[String, String] = Map(
-    "q233_eq_delete_upsert" -> graft.operators.CdcOps.oracle("q97_cdc_merge"))
+  val defs: Seq[QueryDef] = Seq(
+    // staged: the equality-delete upsert
+    QueryDef("q233_eq_delete_upsert", eqUpsertRead,
+      Some(graft.operators.CdcOps.oracle("q97_cdc_merge")), stage = true))
 }

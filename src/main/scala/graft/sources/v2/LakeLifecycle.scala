@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Second wave of lake-table lifecycle operators, all over the
@@ -554,100 +554,97 @@ object LakeLifecycle extends graft.QueryModule {
          |FROM $tbl ORDER BY n_nationkey""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q227_column_mapping" -> (columnMappingRead _),
-    "q228_manifest_count" -> (manifestCount _),
-    "q229_tagged_read" -> (taggedRead _),
-    "q230_metadata_tables" -> (metadataTables _),
-    "q231_call_maintenance" -> (callMaintenance _),
-    "q216_change_feed_consumer" -> (changeFeedConsumer _),
-    "q223_streaming_lake_sink" -> (streamingLakeSink _),
-    "q224_lake_zorder" -> (zorderedLakeScan _),
-    "q217_snapshot_expiration" -> (snapshotExpiration _),
-    "q218_lake_compaction" -> (lakeCompaction _),
-    "q219_schema_evolution" -> (schemaEvolutionRead _),
-    "q220_partitioned_lake" -> (partitionedLakeScan _),
-    "q221_lake_data_skipping" -> (dataSkippingScan _),
-    "q222_lake_history" -> (lakeHistory _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // both eras surface `era` through the mapping; the re-added n_name
     // is NULL everywhere (dropped data must not resurrect)
-    "q227_column_mapping" ->
+    QueryDef("q227_column_mapping", columnMappingRead, Some(
       """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey,
         | CASE WHEN n_nationkey < 12 THEN 'era1' ELSE 'era2' END AS era,
         | CAST(NULL AS STRING) AS n_name
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+      stage = true),
     // the manifest accounting must equal the data: per-month counts
     // recomputed from raw orders
-    "q228_manifest_count" ->
+    QueryDef("q228_manifest_count", manifestCount, Some(
       """SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS o_month,
         | count(*) AS n_orders
         |FROM orders
         |WHERE substring(CAST(o_orderdate AS STRING), 1, 7)
         |  BETWEEN '1995-01' AND '1995-06'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // the tag-pinned snapshot = the seed, read by NAME after the
+    // expiration that would have collected it: q209's oracle verbatim
+    QueryDef("q229_tagged_read", taggedRead,
+      Some(MergeQueries.oracle("q209_time_travel")), stage = true),
+    // manifests' accounting vs the data: per-month live rows from raw
+    // orders; one file per month by the staging's hash-routing contract
+    QueryDef("q230_metadata_tables", metadataTables, Some(
+      """SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS o_month,
+        | CAST(1 AS BIGINT) AS n_files, count(*) AS n_orders
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // the statement-created tag pins v1 (the seed): its row count is
+    // the raw customer count
+    QueryDef("q231_call_maintenance", callMaintenance, Some(
+      """SELECT 'seed' AS tag, CAST(1 AS INT) AS version,
+        | (SELECT count(*) FROM customer) AS n_rows""".stripMargin),
+      stage = true),
     // the feed-reconstructed state must equal the post-MERGE batch
     // truth: q97's oracle verbatim (q208 shares it the same way)
-    "q216_change_feed_consumer" -> graft.operators.CdcOps.oracle("q97_cdc_merge"),
+    // staged: the change-feed stream run
+    QueryDef("q216_change_feed_consumer", changeFeedConsumer,
+      Some(graft.operators.CdcOps.oracle("q97_cdc_merge")), stage = true, lifecycle = true),
     // the streamed-in table must hold exactly the source: same rollup
     // over raw events
-    "q223_streaming_lake_sink" ->
+    QueryDef("q223_streaming_lake_sink", streamingLakeSink, Some(
       """SELECT count(*) AS n_events,
         | count(DISTINCT user_id) AS n_users,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_value
-        |FROM events""".stripMargin,
-    // expiration moved no data: the retained latest = the seed
-    // (rollback restored it), q209's oracle verbatim
-    "q217_snapshot_expiration" -> MergeQueries.oracle("q209_time_travel"),
-    // the tag-pinned snapshot = the seed, read by NAME after the
-    // expiration that would have collected it: q209's oracle verbatim
-    "q229_tagged_read" -> MergeQueries.oracle("q209_time_travel"),
-    // manifests' accounting vs the data: per-month live rows from raw
-    // orders; one file per month by the staging's hash-routing contract
-    "q230_metadata_tables" ->
-      """SELECT substring(CAST(o_orderdate AS STRING), 1, 7) AS o_month,
-        | CAST(1 AS BIGINT) AS n_files, count(*) AS n_orders
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the statement-created tag pins v1 (the seed): its row count is
-    // the raw customer count
-    "q231_call_maintenance" ->
-      """SELECT 'seed' AS tag, CAST(1 AS INT) AS version,
-        | (SELECT count(*) FROM customer) AS n_rows""".stripMargin,
-    // q205's multiset-identity shape: compaction changes layout only
-    "q218_lake_compaction" ->
-      """SELECT l_returnflag, count(*) AS n_items,
-        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q219_schema_evolution" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        | CASE WHEN n_nationkey >= 12 THEN 'v2' END AS ingest_tag,
-        | (SELECT count(*) FROM nation i WHERE (i.n_nationkey >= 12) =
-        |   (o.n_nationkey >= 12)) AS cohort_size
-        |FROM nation o ORDER BY n_nationkey""".stripMargin,
-    // q65's oracle verbatim: partitioning must not change the answer
-    "q220_partitioned_lake" ->
-      graft.sources.LayoutQueries.oracle("q65_partition_pruning"),
+        |FROM events""".stripMargin),
+      stage = true, lifecycle = true),
     // the z-ordered rewrite changes layout only: same box over raw rows
-    "q224_lake_zorder" ->
+    QueryDef("q224_lake_zorder", zorderedLakeScan, Some(
       """SELECT count(*) AS n_items,
         | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS sum_price
         |FROM lineitem
-        |WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 8""".stripMargin,
+        |WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 8""".stripMargin)),
+    // expiration moved no data: the retained latest = the seed
+    // (rollback restored it), q209's oracle verbatim
+    // staged: the expiration
+    QueryDef("q217_snapshot_expiration", snapshotExpiration,
+      Some(MergeQueries.oracle("q209_time_travel")), stage = true),
+    // q205's multiset-identity shape: compaction changes layout only
+    // staged: the compaction
+    QueryDef("q218_lake_compaction", lakeCompaction, Some(
+      """SELECT l_returnflag, count(*) AS n_items,
+        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE) AS sum_price
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true),
+    // staged: the evolution
+    QueryDef("q219_schema_evolution", schemaEvolutionRead, Some(
+      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
+        | CASE WHEN n_nationkey >= 12 THEN 'v2' END AS ingest_tag,
+        | (SELECT count(*) FROM nation i WHERE (i.n_nationkey >= 12) =
+        |   (o.n_nationkey >= 12)) AS cohort_size
+        |FROM nation o ORDER BY n_nationkey""".stripMargin),
+      stage = true),
+    // q65's oracle verbatim: partitioning must not change the answer
+    // staged: the partitioned ingest
+    QueryDef("q220_partitioned_lake", partitionedLakeScan,
+      Some(graft.sources.LayoutQueries.oracle("q65_partition_pruning")), stage = true),
     // skipping must not change the answer: same range over raw orders
-    "q221_lake_data_skipping" ->
+    QueryDef("q221_lake_data_skipping", dataSkippingScan, Some(
       """SELECT count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS sum_total
-        |FROM orders WHERE o_orderkey BETWEEN 100 AND 1000""".stripMargin,
+        |FROM orders WHERE o_orderkey BETWEEN 100 AND 1000""".stripMargin)),
     // each version's manifest row count recomputed from the raw
     // tables: v1 = the seed, v2 = seed − deletes + inserts under q97's
     // change-set (matched-D = 1995-order customers whose max status is
     // F; inserted = the %97 key space)
-    "q222_lake_history" ->
+    QueryDef("q222_lake_history", lakeHistory, Some(
       """SELECT CAST(0 AS INT) AS version, 'create' AS operation,
         | CAST(0 AS BIGINT) AS n_rows
         |UNION ALL
@@ -661,5 +658,5 @@ object LakeLifecycle extends graft.QueryModule {
         |        AND o_orderdate < DATE '1996-01-01'
         |      GROUP BY o_custkey HAVING max(o_orderstatus) = 'F'))
         | + (SELECT count(*) FROM customer WHERE c_custkey % 97 = 0)
-        |ORDER BY version""".stripMargin)
+        |ORDER BY version""".stripMargin)))
 }

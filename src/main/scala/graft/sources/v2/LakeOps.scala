@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Lake-table LIFECYCLE operators on top of [[GraftLakeCatalog]] — the
@@ -251,33 +251,34 @@ object LakeOps extends graft.QueryModule {
          |GROUP BY destination ORDER BY destination""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q210_mv_incremental" -> (mvIncremental _),
-    "q212_snapshot_diff" -> (snapshotDiff _),
-    "q213_version_rollback" -> (rollback _),
-    "q215_write_audit_publish" -> (writeAuditPublish _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // full recompute over the ENTIRE base: the incremental path must
     // answer exactly what a from-scratch rebuild answers
-    "q210_mv_incremental" ->
+    // staged: the MV build
+    QueryDef("q210_mv_incremental", mvIncremental, Some(
       """SELECT substr(CAST(o_orderdate AS STRING), 1, 7) AS ym,
         | count(*) AS cnt,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_price
-        |FROM orders GROUP BY ym ORDER BY ym""".stripMargin,
+        |FROM orders GROUP BY ym ORDER BY ym""".stripMargin),
+      stage = true),
     // q105's oracle verbatim: the snapshot-read diff and the
     // recompute-based diff must name the identical change-set
-    "q212_snapshot_diff" -> graft.operators.CdcOps.oracle("q105_table_diff"),
+    QueryDef("q212_snapshot_diff", snapshotDiff,
+      Some(graft.operators.CdcOps.oracle("q105_table_diff"))),
     // q209's oracle verbatim: rollback restores the seed exactly
-    "q213_version_rollback" -> MergeQueries.oracle("q209_time_travel"),
+    // staged: the rollback
+    QueryDef("q213_version_rollback", rollback,
+      Some(MergeQueries.oracle("q209_time_travel")), stage = true),
     // the routed tables must partition the source exactly: same
     // predicate, grouped over raw lineitem
-    "q215_write_audit_publish" ->
+    // staged: the WAP routing
+    QueryDef("q215_write_audit_publish", writeAuditPublish, Some(
       """SELECT CASE WHEN l_quantity <= 30 AND l_discount >= 0 AND l_discount <= 0.10
         |  THEN 'published' ELSE 'quarantined' END AS destination,
         | count(*) AS n_rows,
         | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_price
-        |FROM lineitem GROUP BY destination ORDER BY destination""".stripMargin)
+        |FROM lineitem GROUP BY destination ORDER BY destination""".stripMargin),
+      stage = true))
 }

@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 import GraftLakeStore.{PendingFile, TableHandle}
 
@@ -108,15 +108,14 @@ object LakeTxn extends graft.QueryModule {
          |ORDER BY d.od""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q232_txn_consistent_ingest" -> (txnConsistentIngest _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // plain rollup over raw orders: reproduced ONLY if the summary and
     // the facts committed as one — a torn pair drops join rows
-    "q232_txn_consistent_ingest" ->
+    // staged: the multi-table transactional ingest
+    QueryDef("q232_txn_consistent_ingest", txnConsistentIngest, Some(
       """SELECT CAST(o_orderdate AS STRING) AS od, count(*) AS cnt,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_price
-        |FROM orders GROUP BY od ORDER BY od""".stripMargin)
+        |FROM orders GROUP BY od ORDER BY od""".stripMargin),
+      stage = true))
 }

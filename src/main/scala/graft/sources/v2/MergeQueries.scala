@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** SQL DML front door: a real `MERGE INTO` statement executed against a
@@ -189,27 +189,25 @@ object MergeQueries extends graft.QueryModule {
          |FROM $tbl GROUP BY ckey % 10 ORDER BY decile""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q208_sql_merge_into" -> (sqlMergeInto _),
-    "q209_time_travel" -> (timeTravelRead _),
-    "q243_merge_sync_by_source" -> (mergeSyncRead _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // q97's oracle verbatim (CdcOps.scala): statement path and
     // DataFrame path must agree to the byte
-    "q208_sql_merge_into" -> graft.operators.CdcOps.oracle("q97_cdc_merge"),
+    // staged: CREATE + seed + MERGE of the lake table q209/q212 also read
+    QueryDef("q208_sql_merge_into", sqlMergeInto,
+      Some(graft.operators.CdcOps.oracle("q97_cdc_merge")), stage = true),
     // v1 == the base table with cents-rounded balances
-    "q209_time_travel" ->
+    QueryDef("q209_time_travel", timeTravelRead, Some(
       """SELECT c_custkey, c_name,
         | CAST(CAST(round(c_acctbal*100) AS BIGINT) / 100.0 AS DOUBLE) AS c_acctbal
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin)),
     // the synced dim must equal the raw source EXACTLY (drift repaired
     // by all three MERGE clause families), so the oracle is blind to
     // the drift construction entirely
-    "q243_merge_sync_by_source" ->
+    QueryDef("q243_merge_sync_by_source", mergeSyncRead, Some(
       """SELECT c_custkey % 10 AS decile, count(*) AS n_cust,
         | CAST(sum(CAST(round(c_acctbal*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS balance,
         | min(c_custkey) AS min_key
-        |FROM customer GROUP BY c_custkey % 10 ORDER BY decile""".stripMargin)
+        |FROM customer GROUP BY c_custkey % 10 ORDER BY decile""".stripMargin),
+      stage = true))
 }

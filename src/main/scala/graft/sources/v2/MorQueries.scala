@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.Staged
+import graft.{QueryDef, Staged}
 
 /** Merge-on-read DML as a declared surface (round 9, second wave):
   * the SAME q97 change-set MERGE that q208 runs copy-on-write, executed
@@ -105,23 +105,23 @@ object MorQueries extends graft.QueryModule {
       .orderBy("c_custkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q225_mor_merge" -> (morMergeRead _),
-    "q226_mor_change_audit" -> (morChangeAudit _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // q97's oracle verbatim: copy-on-write (q208), merge-on-read
     // (q225), and the hand-built join (q97) must all agree
-    "q225_mor_merge" -> graft.operators.CdcOps.oracle("q97_cdc_merge"),
+    // staged: the delta-write MERGE that q226's change feed reads
+    QueryDef("q225_mor_merge", morMergeRead,
+      Some(graft.operators.CdcOps.oracle("q97_cdc_merge")), stage = true),
     // the deleted pre-images = every customer the change-set matched
     // (both the DELETE rows and the delete half of updates), at their
     // SEED balances
-    "q226_mor_change_audit" ->
+    // staged: the row-level change-feed run over q225's table
+    QueryDef("q226_mor_change_audit", morChangeAudit, Some(
       """SELECT c_custkey, c_name,
         | CAST(CAST(round(c_acctbal*100) AS BIGINT) / 100.0 AS DOUBLE) AS c_acctbal
         |FROM customer WHERE c_custkey IN (
         |  SELECT o_custkey FROM orders
         |  WHERE o_orderdate >= DATE '1995-01-01'
         |    AND o_orderdate < DATE '1996-01-01')
-        |ORDER BY c_custkey""".stripMargin)
+        |ORDER BY c_custkey""".stripMargin),
+      stage = true, lifecycle = true))
 }

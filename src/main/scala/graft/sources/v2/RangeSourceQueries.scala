@@ -3,6 +3,7 @@ package graft.sources.v2
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Exact
+import graft.QueryDef
 
 /** Declared query over the custom DSv2 source — the proof that the
   * connector's pushdown contracts actually fire in a real plan. */
@@ -27,13 +28,10 @@ object RangeSourceQueries extends graft.QueryModule {
         Exact.sumMoney(col("val")).as("sum_val"))
       .orderBy("m7")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_dsv2_source" -> (rangeSourceAgg _))
-
-  val oracle: Map[String, String] = Map(
-    "q101_dsv2_source" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q101_dsv2_source", rangeSourceAgg, Some(
       """SELECT id % 7 AS m7, count(*) AS n, CAST(sum(id) AS BIGINT) AS sum_id,
         | CAST(CAST(sum(id*37 % 10000) AS BIGINT) / 100.0 AS DOUBLE) AS sum_val
         |FROM generate_series(250000, 749999) t(id)
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin)))
 }

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Staged, Tables}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Partition-spec evolution (q234) — the one lake-format migration a
@@ -242,16 +242,11 @@ object SpecEvolutionQueries extends graft.QueryModule {
     df
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q234_partition_evolution" -> (specEvolutionRead _),
-    "q237_transform_partitioning" -> (transformPartitionRead _),
-    "q238_calendar_partitioning" -> (calendarPartitionRead _),
-    "q239_storage_partitioned_join" -> (spjRead _))
-
-  val oracle: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // plain rollup over raw orders, blind to partitioning: correct only
     // if BOTH eras read completely and correctly across the spec change
-    "q234_partition_evolution" ->
+    // staged: the mid-history re-partitioned table (two eras, two specs)
+    QueryDef("q234_partition_evolution", specEvolutionRead, Some(
       """SELECT o_orderstatus AS status, o_orderpriority AS prio,
         | count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
@@ -259,11 +254,13 @@ object SpecEvolutionQueries extends graft.QueryModule {
         |FROM orders
         |WHERE o_orderdate >= '1995-01-01' AND o_orderdate < '1997-01-01'
         | AND o_orderstatus = 'F'
-        |GROUP BY status, prio ORDER BY status, prio""".stripMargin,
+        |GROUP BY status, prio ORDER BY status, prio""".stripMargin),
+      stage = true),
     // the staged universe is H2-1995; the range arm narrows to Q4 and
     // the point arm reads one key — hidden partitioning must change
     // NOTHING about the answer (the transforms live only in the layout)
-    "q237_transform_partitioning" ->
+    // staged: the hidden-partitioned (bucket + truncate) ingest
+    QueryDef("q237_transform_partitioning", transformPartitionRead, Some(
       """SELECT concat('month:', substr(CAST(o_orderdate AS STRING), 1, 7)) AS grp,
         | count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
@@ -278,10 +275,12 @@ object SpecEvolutionQueries extends graft.QueryModule {
         |FROM orders
         |WHERE o_custkey = 42
         | AND o_orderdate >= '1995-07-01' AND o_orderdate < '1996-01-01'
-        |ORDER BY grp""".stripMargin,
+        |ORDER BY grp""".stripMargin),
+      stage = true),
     // raw orders, blind to the month layout: hidden partitioning must
     // change NOTHING about the answer
-    "q238_calendar_partitioning" ->
+    // staged: the months(DATE) calendar table
+    QueryDef("q238_calendar_partitioning", calendarPartitionRead, Some(
       """SELECT concat('range:',
         |  substr(CAST(CAST(o_orderdate AS DATE) AS STRING), 1, 7)) AS grp,
         | count(*) AS n_orders,
@@ -295,14 +294,17 @@ object SpecEvolutionQueries extends graft.QueryModule {
         |  AS total_price
         |FROM orders
         |WHERE o_orderdate >= '1997-03-01' AND o_orderdate < '1997-04-01'
-        |ORDER BY grp""".stripMargin,
+        |ORDER BY grp""".stripMargin),
+      stage = true),
     // the raw join, blind to the bucket layout: the exchange-free plan
     // must change NOTHING about the answer
-    "q239_storage_partitioned_join" ->
+    // staged: the bucket(16) SPJ pair
+    QueryDef("q239_storage_partitioned_join", spjRead, Some(
       """SELECT o.o_custkey AS ckey, count(*) AS n_orders,
         | CAST(sum(CAST(round(o.o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS total_price,
         | max(c.c_name) AS cname
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY o.o_custkey ORDER BY ckey""".stripMargin)
+        |GROUP BY o.o_custkey ORDER BY ckey""".stripMargin),
+      stage = true))
 }

@@ -197,8 +197,8 @@ object Dev {
     * Counting rules match PlanSpec: AQE's initialPlan (inputPlan predates
     * EnsureRequirements and has no exchanges), shuffles deduplicated by
     * canonicalized form (stage reuse executes canonically-equal
-    * exchanges once). Streaming/JDBC-lifecycle queries are excluded for
-    * the same reason as in SqlParitySpec.
+    * exchanges once). The `lifecycle = true` defs (streaming/JDBC) are
+    * excluded for the same reason as in SqlParitySpec.
     */
   private def census(spark: SparkSession, sfDir: String, out: String): Unit = {
     // AQE off for the census: with AQE, CollapseCodegenStages and

@@ -16,8 +16,8 @@ package graft
   * arithmetic, so the mode must surround both). Divergences check
   * against a CLOSED exemption list — currently EMPTY: nothing in the
   * declared surface is allowed to depend on the mode. The streaming /
-  * JDBC lifecycle family is excluded by the shared
-  * `nonRelationalLifecycle` list (gated end-to-end in their own specs;
+  * JDBC lifecycle family, the `lifecycle = true` defs, is excluded
+  * (gated end-to-end in their own specs;
   * re-spinning checkpointed engines per mode re-tests the lifecycle,
   * not the arithmetic).
   */

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the COMMITTED plan-census artifact to the declared query
   * surface — the round-6 verdict's one integrity finding was exactly
   * this staleness class (a query landed after the census sweep and
-  * appeared in neither the table nor the exclusion list, and the
-  * existing require() on `nonRelationalLifecycle` can't see it: that
-  * guard validates excluded names exist, not that every declared name
-  * is censused-or-excluded).
+  * appeared in neither the table nor the exclusion list; the exclusion
+  * set comes from the `lifecycle = true` defs, so its names always
+  * exist, but nothing there checks that every declared name is
+  * censused-or-excluded).
   *
   * This is the inverse completeness check, run against the committed
   * PLANS.md instead of inside the generator (`Dev census` already

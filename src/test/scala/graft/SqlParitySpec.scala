@@ -20,11 +20,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   * floor pins how much of the surface must stay Spark-replayable so
   * silent erosion fails loudly.
   *
-  * The streaming family is excluded by name: their DataFrame side spins
-  * the real StreamExecution engine (checkpoints, RocksDB state) and is
+  * The `lifecycle = true` defs are excluded. The streaming ones spin
+  * the real StreamExecution engine (checkpoints, RocksDB state) and are
   * gated end-to-end in streaming specs; replaying their batch oracle
   * SQL here would only re-test the batch planner at several seconds per
-  * query. Same for the JDBC round-trip (q72, embedded Derby lifecycle).
+  * query. The other is the JDBC round-trip (q72, embedded Derby
+  * lifecycle).
   */
 class SqlParitySpec extends SparkSpec {
 

@@ -4,17 +4,17 @@ import graft.SparkSpec
 import graft.util.StageResult
 import java.nio.file.{Files, Paths}
 
-/** CandyDag against the reference's dataset_22: the four-stage chain
-  * produces the full artifact set, and a re-run is all marker-skips.
+/** CandyDag on the seeded CandyFixture: the four-stage chain produces
+  * the full artifact set, and a re-run is all marker-skips.
   */
 class CandyDagSpec extends SparkSpec {
 
-  private val refData = "/root/reference/data/dataset_22"
+  private lazy val data = CandyFixture.write()
 
   test("load >> process >> forecast >> cleanup produces all artifacts; rerun skips") {
     val out = Files.createTempDirectory("candy_dag_out").toString
     val dag = CandyDag.build(spark,
-      s"$refData/products.csv", s"$refData/transactions_*.json", out)
+      s"$data/products.csv", s"$data/transactions_*.json", out)
     val r1 = dag.run().toMap
     assert(r1.values.forall(_ === StageResult.Ran), r1.toString)
     Seq("daily_summary.csv", "sales_profit_forecast.csv", "forecast_metrics.csv")
@@ -23,15 +23,19 @@ class CandyDagSpec extends SparkSpec {
       }
     // second run: resume logic finds every stage done
     val r2 = CandyDag.build(spark,
-      s"$refData/products.csv", s"$refData/transactions_*.json", out).run().toMap
+      s"$data/products.csv", s"$data/transactions_*.json", out).run().toMap
     assert(r2.values.forall(_ === StageResult.SkippedDone), r2.toString)
   }
 
   test("a bad input fails load_data and skips the whole chain") {
     val out = Files.createTempDirectory("candy_dag_bad").toString
-    val r = CandyDag.build(spark,
-      s"$refData/products.csv", s"$out/no_such_*.json", out).run().toMap
-    assert(r("load_data").isInstanceOf[StageResult.Failed])
+    val txns = s"$out/no_such_*.json"
+    val r = CandyDag.build(spark, s"$data/products.csv", txns, out).run().toMap
+    // the products exist: load_data must fail on the transactions glob
+    r("load_data") match {
+      case StageResult.Failed(e) => assert(e.getMessage.contains(txns), e.getMessage)
+      case other => fail(s"load_data: $other")
+    }
     assert(r("process_data") === StageResult.SkippedUpstreamFailed)
     assert(r("generate_forecast") === StageResult.SkippedUpstreamFailed)
     assert(r("cleanup") === StageResult.SkippedUpstreamFailed)

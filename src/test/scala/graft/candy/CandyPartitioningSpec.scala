@@ -3,8 +3,6 @@ package graft.candy
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import java.nio.file.Files
-import scala.util.Random
 
 /** The candy pipeline's partitioning must not follow
   * `spark.sql.shuffle.partitions`. Every suite runs under graft.Session,
@@ -27,44 +25,11 @@ class CandyPartitioningSpec extends SparkSpec {
 
   private lazy val slots = spark.sparkContext.defaultParallelism
 
-  // --- fixture --------------------------------------------------------
-  // 12 products with small stocks (exhaustion mid-day), an unknown
-  // product id 13, null quantities, repeated products within an order,
-  // 4 days × 60 transactions; seeded, so both copies are identical.
-  private lazy val files: Seq[(String, String)] = {
-    val rnd = new Random(7)
-    val products = (1 to 12).map { p =>
-      val price = 1 + rnd.nextInt(900) / 100.0
-      f"$p,P$p,Cat,Sub,Std,$price%.2f,${price / 2}%.2f,${5 + rnd.nextInt(30)}"
-    }
-    val header = "product_id,product_name,product_category,product_subcategory," +
-      "product_shape,sales_price,cost_to_make,stock"
-    val days = (1 to 4).map { day =>
-      val txns = (1 to 60).map { i =>
-        val items = (1 to 1 + rnd.nextInt(4)).map { _ =>
-          val p = 1 + rnd.nextInt(13)
-          val qty = if (rnd.nextInt(10) == 0) "null" else (1 + rnd.nextInt(6)).toString
-          s"""{"product_id": $p, "product_name": "P$p", "qty": $qty}"""
-        }
-        f"""{"transaction_id": ${day * 1000 + i}, "customer_id": ${1 + rnd.nextInt(20)}, """ +
-          f""""timestamp": "2024-01-0${day}T${i / 6}%02d:${i % 60}%02d:00.${i}%06d", """ +
-          s""""items": [${items.mkString(", ")}]}"""
-      }
-      s"transactions_2024010$day.json" -> txns.mkString("[\n", ",\n", "\n]")
-    }
-    ("products.csv" -> (header +: products).mkString("", "\n", "\n")) +: days
-  }
-
   // one copy per session: the cache manager is shared by the context's
   // sessions, and a plan over the same files would reuse the other
   // session's cached frames instead of building its own
-  private def fixture(): String = {
-    val d = Files.createTempDirectory("candy_partitioning")
-    files.foreach { case (name, body) => Files.writeString(d.resolve(name), body) }
-    d.toString
-  }
-  private lazy val narrowDir = fixture()
-  private lazy val wideDir = fixture()
+  private lazy val narrowDir = CandyFixture.write()
+  private lazy val wideDir = CandyFixture.write()
 
   private def run(s: SparkSession, dir: String, cfg: CandyConfig): CandyOutputs =
     CandyPipeline.run(s, s"$dir/products.csv", s"$dir/transactions_*.json", cfg)

@@ -2,19 +2,19 @@ package graft.candy
 
 import graft.SparkSpec
 import scala.io.Source
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Scheduled-rerun behavior: a scheduler (cron/Airflow/dagster) that
   * fires `process` then `forecast` repeatedly — including into the SAME
   * output directory — must get identical outputs every time, with no
   * state leaking between runs (the reference DAG re-runs its whole
   * pipeline per task, candy_dag.py:80-126; our stages must be safely
-  * re-runnable for that schedule to be correct).
+  * re-runnable for that schedule to be correct). Runs on the seeded
+  * CandyFixture.
   */
 class CandyRerunSpec extends SparkSpec {
 
-  private val refData = "/root/reference/data/dataset_22"
-  private def available: Boolean = Files.isDirectory(Paths.get(refData))
+  private lazy val data = CandyFixture.write()
 
   private def lines(p: String): Vector[String] = {
     val src = Source.fromFile(p)
@@ -22,10 +22,9 @@ class CandyRerunSpec extends SparkSpec {
   }
 
   test("process → forecast reruns into the same directory are byte-identical") {
-    assume(available)
     val out = Files.createTempDirectory("candy_rerun").toString
-    val args = List("all", s"$refData/products.csv",
-      s"$refData/transactions_*.json", out)
+    val args = List("all", s"$data/products.csv",
+      s"$data/transactions_*.json", out)
 
     CandyMain.run(spark, args)
     val first = Seq("orders.csv", "order_line_items.csv", "daily_summary.csv",

@@ -32,7 +32,8 @@ object CandyDag {
         // fail fast (before any compute) if inputs are missing/garbled
         require(spark.read.option("header", "true").csv(products).columns
           .nonEmpty, s"unreadable products csv at $products")
-        require(!spark.read.option("multiLine", "true").json(txns).isEmpty,
+        // explicit schema: no inference pass over every file
+        require(!CandySources.readTransactions(spark, txns).isEmpty,
           s"no transactions matched $txns")
       }
       .stage("process_data", "load_data") {

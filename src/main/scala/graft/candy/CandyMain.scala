@@ -1,6 +1,6 @@
 package graft.candy
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.forecast.Forecaster
 
 /** CLI entry point covering the reference's orchestration surface
@@ -21,6 +21,10 @@ import graft.forecast.Forecaster
   * the knowingly non-scalable path); the default uses exact
   * integer-cents sums, which can differ from the reference by one
   * trailing cent on rounding-boundary days.
+  *
+  * `all` writes the four exports and the forecast concurrently (see
+  * CandyPipeline.concurrently) and fits the forecast on the in-memory
+  * daily summary; `forecast` alone reads daily_summary.csv.
   */
 object CandyMain {
 
@@ -45,10 +49,12 @@ object CandyMain {
         if (flags.nonEmpty)
           throw new IllegalArgumentException(
             s"forecast takes no flags (got $flags)")
-        forecast(spark, summaryCsv, out, horizon(rest))
+        val h = horizon(rest) // before the summary is read
+        forecast(CandySources.readDailySummary(spark, summaryCsv), out, h)
       case "all" :: products :: txns :: out :: Nil =>
-        process(spark, products, txns, out, cfg)
-        forecast(spark, s"$out/daily_summary.csv", out, 1)
+        val o = CandyPipeline.run(spark, products, txns, cfg)
+        CandyPipeline.concurrently(CandyPipeline.exports(o, out) :+
+          ("forecast" -> (() => forecast(o.dailySummary, out, 1))))
       case other =>
         throw new IllegalArgumentException(s"unknown command: $other")
     }
@@ -69,10 +75,9 @@ object CandyMain {
       out: String, cfg: CandyConfig): Unit =
     CandyPipeline.save(CandyPipeline.run(spark, products, txns, cfg), out)
 
-  private def forecast(spark: SparkSession, summaryCsv: String, out: String,
-      horizon: Int): Unit = {
-    val r = Forecaster.forecastWithMetrics(
-      CandySources.readDailySummary(spark, summaryCsv), horizon)
+  private def forecast(summary: DataFrame, out: String, horizon: Int): Unit = {
+    val spark = summary.sparkSession
+    val r = Forecaster.forecastWithMetrics(summary, horizon)
     SingleFileCsv.write(r.forecast, out, "sales_profit_forecast.csv")
     // in-sample fit metrics, reported per model like the reference's
     // training log (data_processor.py:118-142) and persisted next to

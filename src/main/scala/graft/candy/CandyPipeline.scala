@@ -2,6 +2,7 @@ package graft.candy
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.{ExecutionException, FutureTask}
 
 /** Variant flags for the semantics forks documented in SURVEY.md §5:
   * the golden outputs were produced by (skipEmptyOrders=true,
@@ -50,6 +51,12 @@ case class CandyOutputs(
   * the shape that survives 10⁶+ orders/day); strict mode reproduces
   * the reference's per-day accumulation order for byte-parity
   * experiments and is the one knowingly non-scalable path.
+  *
+  * Spark work per run: the transactions are scanned once in the
+  * default (skip-empty) variant, since orders derive from the cached
+  * line items; no driver action runs before the exports; each export is
+  * sorted inside its single output partition; and `save` writes the four
+  * exports concurrently.
   */
 object CandyPipeline {
 
@@ -82,40 +89,45 @@ object CandyPipeline {
     // A1 per-order rollup. total_amount folds line totals in item (pos)
     // order = the reference's accumulation order; cancelled items
     // contribute 0.0 exactly as in the loop.
-    val perOrderAgg = lineItems
-      .groupBy(col("order_id"))
+    def perOrder(keys: String*): DataFrame = lineItems
+      .groupBy(keys.map(col): _*)
       .agg(
         foldInOrder(sort_array(collect_list(struct(col("pos"), col("line_total")))),
           "line_total").as("total_amount"),
         foldInOrder(sort_array(collect_list(struct(col("pos"), col("line_profit")))),
           "line_profit").as("order_profit"),
-        count(when(col("fulfilled"), 1)).cast("int").as("num_items"),
-        count(lit(1)).cast("int").as("num_line_items"))
+        count(when(col("fulfilled"), 1)).cast("int").as("num_items"))
 
-    // Every transaction yields an order row (all-null / unknown-only
-    // transactions keep total 0.0, num_items 0 — data_processor.py
-    // 457-465), unless the golden skip variant drops fulfilled-nothing
-    // transactions (the commented block at 454-456).
-    val ordersAll = transactions
-      .select(col("transaction_id").as("order_id"), col("customer_id"),
-        col("timestamp").as("order_datetime"), col("day"), col("seq"))
-      .join(perOrderAgg, Seq("order_id"), "left")
-      .select(col("order_id"), col("order_datetime"), col("customer_id"),
-        coalesce(col("total_amount"), lit(0.0)).as("total_amount"),
-        coalesce(col("order_profit"), lit(0.0)).as("order_profit"),
-        coalesce(col("num_items"), lit(0)).as("num_items"),
-        coalesce(col("num_line_items"), lit(0)).as("num_line_items"),
-        col("day"), col("seq"))
+    // The golden skip variant keeps only orders that fulfilled an item
+    // (the commented block at data_processor.py:454-456), and every such
+    // order has line items, which carry their transaction's columns: the
+    // orders come from the cached line items, and the transactions are
+    // scanned once. Otherwise every transaction yields an order row
+    // (all-null / unknown-only transactions keep total 0.0, num_items 0
+    // — data_processor.py 457-465), so the transactions are joined back.
+    val ordersAll =
+      if (config.skipEmptyOrders)
+        perOrder("order_id", "customer_id", "order_datetime", "day", "seq")
+          .filter(col("num_items") > 0)
+      else
+        transactions
+          .select(col("transaction_id").as("order_id"), col("customer_id"),
+            col("timestamp").as("order_datetime"), col("day"), col("seq"))
+          .join(perOrder("order_id"), Seq("order_id"), "left")
+          .select(col("order_id"), col("customer_id"), col("order_datetime"),
+            col("day"), col("seq"),
+            coalesce(col("total_amount"), lit(0.0)).as("total_amount"),
+            coalesce(col("order_profit"), lit(0.0)).as("order_profit"),
+            coalesce(col("num_items"), lit(0)).as("num_items"))
 
     // Cached for the daily summary and the orders output. Its plan ends
-    // in the transactions ⋈ per-order join's shuffle, which, cached, AQE
-    // would leave at spark.sql.shuffle.partitions: coalesce to the
-    // replay's count, defaultParallelism (spark.default.parallelism on a
-    // deployment).
-    val orders =
-      (if (config.skipEmptyOrders) ordersAll.filter(col("num_items") > 0) else ordersAll)
-        .coalesce(spark.sparkContext.defaultParallelism)
-        .cache()
+    // in a shuffle (the per-order aggregate's, or the join's), which,
+    // cached, AQE would leave at spark.sql.shuffle.partitions: coalesce
+    // to the replay's count, defaultParallelism (spark.default.parallelism
+    // on a deployment).
+    val orders = ordersAll
+      .coalesce(spark.sparkContext.defaultParallelism)
+      .cache()
 
     // A2 daily summary. date = date of the day's first emitted order
     // (data_processor.py:478-480); sums fold per-order totals in seq
@@ -143,36 +155,42 @@ object CandyPipeline {
         .withColumn("num_orders", coalesce(col("n_line_items"), lit(0)))
     } else dailyAgg.withColumn("num_orders", col("n_txn_orders")))
       .select("date", "num_orders", "total_sales", "total_profit")
-      .orderBy("date")
+      .coalesce(1).sortWithinPartitions("date")
 
     // A4 products_updated: initial stock minus fulfilled quantity — all
     // days in carryover mode; only the final day's batch in daily-reload
-    // mode (state after the last reload).
-    val lastDay = if (config.reloadInventoryDaily)
-      lineItems.agg(max(col("day"))).first().getString(0)
-    else ""
+    // mode (state after the last reload). The last day joins in as a
+    // broadcast one-row max, so finding it is part of this export's
+    // plan rather than a driver action of its own.
+    val fulfilled = lineItems.filter(col("fulfilled"))
     val consumed = (if (config.reloadInventoryDaily)
-      lineItems.filter(col("day") === lastDay) else lineItems)
-      .filter(col("fulfilled"))
+      fulfilled.join(broadcast(lineItems.agg(max(col("day")).as("last_day"))),
+        col("day") === col("last_day"))
+    else fulfilled)
       .groupBy(col("product_id"))
       .agg(sum(col("quantity")).as("sold"))
     val productsUpdated = products
       .join(consumed, Seq("product_id"), "left")
       .select(col("product_id"), col("product_name"),
         (col("stock") - coalesce(col("sold"), lit(0L))).cast("int").as("current_stock"))
-      .orderBy("product_id")
+      .coalesce(1).sortWithinPartitions("product_id")
 
     // Output projections/formatting (data_processor.py:518-551):
     // format_number 2dp strings for money, raw timestamp string kept.
+    // Each export is sorted inside its one output partition, not by a
+    // global range sort (a sampling job plus a shuffle, only to be
+    // coalesced into one file). An order that lists a product twice
+    // keeps its items in pos order: the tie-break is in the sort, not
+    // left to the sorter's stability.
     val ordersOut = orders
+      .coalesce(1).sortWithinPartitions("order_id")
       .select(col("order_id"), col("order_datetime"), col("customer_id"),
         format_number(col("total_amount"), 2).as("total_amount"), col("num_items"))
-      .orderBy("order_id")
 
     val lineItemsOut = lineItems
+      .coalesce(1).sortWithinPartitions("order_id", "product_id", "pos")
       .select(col("order_id"), col("product_id"), col("quantity"), col("unit_price"),
         format_number(col("line_total"), 2).as("line_total"))
-      .orderBy("order_id", "product_id")
 
     CandyOutputs(ordersOut, lineItemsOut, dailySummary, productsUpdated,
       () => lineItems.filter(!col("fulfilled")).count())
@@ -194,11 +212,38 @@ object CandyPipeline {
       .orderBy("order_id")
 
   /** Write the four output tables as single-file CSVs (reference
-    * save_to_csv, data_processor.py:572-614). */
-  def save(out: CandyOutputs, outputDir: String): Unit = {
-    SingleFileCsv.write(out.orders, outputDir, "orders.csv")
-    SingleFileCsv.write(out.orderLineItems, outputDir, "order_line_items.csv")
-    SingleFileCsv.write(out.dailySummary, outputDir, "daily_summary.csv")
-    SingleFileCsv.write(out.productsUpdated, outputDir, "products_updated.csv")
+    * save_to_csv, data_processor.py:572-614), concurrently. */
+  def save(out: CandyOutputs, outputDir: String): Unit =
+    concurrently(exports(out, outputDir))
+
+  /** The four exports of `save`, one branch each. */
+  private[candy] def exports(out: CandyOutputs, outputDir: String): Seq[(String, () => Unit)] =
+    Seq(out.orders -> "orders.csv", out.orderLineItems -> "order_line_items.csv",
+      out.dailySummary -> "daily_summary.csv", out.productsUpdated -> "products_updated.csv")
+      .map { case (df, file) => file -> (() => SingleFileCsv.write(df, outputDir, file)) }
+
+  /** Run every branch on a thread of its own, wait for all of them, then
+    * rethrow the first failure in branch order (the others suppressed).
+    * Each small export runs mostly single-task stages, so side by side
+    * they fill the cores one after another would leave idle; branches
+    * that reach a cached frame still being built wait on its block locks
+    * rather than build it again. The threads are created per call, as
+    * Bench.runConcurrent's are, so each inherits the caller's Spark local
+    * properties (job group, scheduler pool); a pooled thread would keep
+    * those of whichever caller first created it. */
+  private[candy] def concurrently(branches: Seq[(String, () => Unit)]): Unit = {
+    val tasks = branches.map { case (name, body) =>
+      val task = new FutureTask[Unit](() => body())
+      new Thread(task, s"candy-$name").start()
+      task
+    }
+    val failures = tasks.flatMap { t =>
+      try { t.get(); None }
+      catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

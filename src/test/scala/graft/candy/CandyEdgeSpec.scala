@@ -175,6 +175,32 @@ class CandyEdgeSpec extends SparkSpec {
     assert(joined.count() === 0)
   }
 
+  test("an order that lists one product twice writes its line items in pos order") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    val data = CandyFixture.write()
+    val (products, txns) = (s"$data/products.csv", s"$data/transactions_*.json")
+    val out = CandyPipeline.run(spark, products, txns, CandyConfig())
+    // oracle: the replay's line items, sorted on the driver with pos as
+    // the tie-break
+    val replayed = InventoryReplay.replay(
+      InventoryReplay.itemEvents(CandySources.readTransactions(spark, txns),
+        CandySources.readProducts(spark, products)), reloadDaily = true).collect().toSeq
+    val expected = replayed.sortBy(l => (l.order_id, l.product_id, l.pos))
+      .map(l => Seq(l.order_id.toString, l.product_id.toString, l.quantity.toString,
+        l.unit_price.toString))
+    // the fixture has repeated products whose item order shows in the rows
+    val repeats = expected.groupBy(_.take(2)).values.filter(_.size > 1)
+    assert(repeats.exists(g => g != g.reverse), "fixture has no telling repeated product")
+    assert(csvRows(out.orderLineItems).map(_.take(4)) === expected)
+    // The sorter is stable and reads the replay's pos-ordered rows, so at
+    // fixture size the rows would come out right without pos in the sort;
+    // a partition sort that spills merges its runs with no such
+    // guarantee. The tie-break must be in the plan.
+    val sortKeys = out.orderLineItems.queryExecution.optimizedPlan
+      .collect { case s: Sort => s.order.flatMap(_.references.map(_.name)) }
+    assert(sortKeys === Seq(Seq("order_id", "product_id", "pos")), sortKeys)
+  }
+
   test("CLI flag parsing: unknown flags and forecast-stage flags are rejected") {
     intercept[IllegalArgumentException](
       CandyMain.run(spark, List("--bogus", "process", "p.csv", "t*.json", "/tmp/x")))

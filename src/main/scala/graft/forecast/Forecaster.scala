@@ -131,8 +131,9 @@ object Forecaster {
     * (data_processor.py:118-142 via time_series.py get_metrics). */
   def forecastWithMetrics(dailySummary: DataFrame, horizon: Int = 1): Result = {
     val spark = dailySummary.sparkSession
+    // one row per day: sorted on the driver, not by a range-sort job
     val rows = dailySummary.select("date", "total_sales", "total_profit")
-      .orderBy("date").collect()
+      .collect().sortBy(_.getDate(0).toLocalDate.toEpochDay)
     require(rows.nonEmpty, "empty daily summary")
     val dates = rows.map(_.getDate(0).toLocalDate)
     val sales = rows.map(_.getDouble(1))

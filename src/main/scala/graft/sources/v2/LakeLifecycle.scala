@@ -315,8 +315,7 @@ object LakeLifecycle extends graft.QueryModule {
       val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.events_sink$id"
       ss.sql(s"CREATE TABLE $tbl (event_id BIGINT, user_id BIGINT, value_cents BIGINT)")
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = ss.read.parquet(s"$dir/events.parquet").schema
+      val schema = graft.Tables.eventsSchema(ss, dir)
       val chk = graft.util.TempDirs.create(s"graft_lake_sinkchk$id" + "_").toString
       val q = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)

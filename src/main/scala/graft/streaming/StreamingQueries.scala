@@ -96,11 +96,10 @@ object StreamingQueries extends graft.QueryModule {
     * here the full-history complete mode is what makes the final table
     * comparable to the batch oracle. */
   def streamingDaily(s: SparkSession, dir: String): DataFrame = {
-    // events.ts physical shape varies by fixture generation: same conf +
-    // normalization contract as graft.Tables (the schema probe below
-    // relies on the conf being set before the read)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    // events.ts physical shape varies by fixture generation: the stream
+    // declares the file's raw schema (eventsSchema also sets the conf
+    // its reads rely on) and normalizes like graft.Tables
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, 8) {
     val events = s.readStream.schema(schema).parquet(stageDir(s, dir))
       .transform(graft.Tables.normalizeEventTs)
@@ -237,8 +236,7 @@ object StreamingQueries extends graft.QueryModule {
     * overlap), so the oracle uses >=, unlike q21's strictly-greater
     * lag formulation. */
   def streamingSessions(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, 8) {
     val events = s.readStream.schema(schema).parquet(stageDirWithSentinel(s, dir))
       .transform(graft.Tables.normalizeEventTs)
@@ -278,8 +276,7 @@ object StreamingQueries extends graft.QueryModule {
     * gate then aggregates the emitted rows per day and must equal the
     * batch truth over the ORIGINAL (single-copy) events table. */
   def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, 8) {
     val events = s.readStream.schema(schema).parquet(stageDirDuplicated(s, dir))
       .transform(graft.Tables.normalizeEventTs)
@@ -341,8 +338,7 @@ object StreamingQueries extends graft.QueryModule {
   }
 
   def streamingPairJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, pairJoinStatePartitions(dir)) {
     val stream = () => s.readStream.schema(schema).parquet(stageDir(s, dir))
       .transform(graft.Tables.normalizeEventTs)
@@ -408,9 +404,8 @@ object StreamingQueries extends graft.QueryModule {
     * strictly monotone per user) must equal the batch per-user
     * aggregate, which is the DuckDB oracle. */
   def streamingRunningTotals(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = stageDirSplit(s, dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, 8) {
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
@@ -447,9 +442,8 @@ object StreamingQueries extends graft.QueryModule {
     * values below 2^52), so accumulation order — which a streaming
     * sink never guarantees — cannot move the result. */
   def streamingForeachBatch(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = stageDirSplit(s, dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, 8) {
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
@@ -479,8 +473,7 @@ object StreamingQueries extends graft.QueryModule {
     * only for the downstream aggregation. Inner join keeps the
     * unmatched-stream-row semantics identical to the batch oracle. */
   def streamingStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     withStatePartitions(s, 8) {
     val stream = s.readStream.schema(schema).parquet(stageDir(s, dir))
     val dim = broadcast(graft.Tables(s, dir, "customer")
@@ -517,9 +510,8 @@ object StreamingQueries extends graft.QueryModule {
     * untouched — provider choice is pinned into each stream's
     * checkpoint at first run). */
   def streamingTransformWithState(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = stageDirSplit(s, dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val oldProv = s.conf.getOption(provKey)
     s.conf.set(provKey,
@@ -574,9 +566,8 @@ object StreamingQueries extends graft.QueryModule {
     * PERSISTENCE (the memory-sink gates only check emissions; this
     * checks what RocksDB actually holds after the final commit). */
   def streamingStateStoreRead(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = stageDirSplit(s, dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val oldProv = s.conf.getOption(provKey)
     s.conf.set(provKey,
@@ -645,9 +636,8 @@ object StreamingQueries extends graft.QueryModule {
     * session closes via timer; inline gap closures also occur), which
     * the per-user rollup the gate sees necessarily erases. */
   private[streaming] def closedSessionsRaw(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = stageDirTimeSplitWithSentinel(s, dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.eventsSchema(s, dir)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val oldProv = s.conf.getOption(provKey)
     s.conf.set(provKey,
@@ -698,9 +688,8 @@ object StreamingQueries extends graft.QueryModule {
     * [[StreamingOps.replayGuarded]], same contract as q118. */
   private[streaming] def ensureStreamingMv(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "stream.mv") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = stageDirSplit(s, dir)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      val schema = graft.Tables.eventsSchema(s, dir)
       val tbl = s"graft_lake.lake.events_mv_${runId.incrementAndGet()}"
       val catConf = "spark.sql.catalog.graft_lake"
       val catCls = classOf[graft.sources.v2.GraftLakeCatalog].getName

@@ -30,8 +30,9 @@ import org.apache.spark.sql.functions._
   *    cosines, up to shared flips) are preserved, cross-copy cosines
   *    decorrelate to ≈0.
   *
-  * events.ts is read RAW in whatever physical shape the fixture has
-  * (int64 nanos under nanosAsLong for TIMESTAMP(NANOS) fixtures;
+  * events.ts is read RAW in whatever physical shape the fixture has,
+  * under [[Tables.eventsSchema]] (int64 nanos under nanosAsLong for
+  * TIMESTAMP(NANOS) fixtures;
   * TIMESTAMP_NTZ for TIMESTAMP(US) ones) and written back untouched —
   * graft.Tables.normalizeEventTs handles either shape on read.
   *
@@ -105,8 +106,7 @@ object ScaleGen {
     // would interleave 10 copies of each user's history over the SAME
     // time range, growing q96's per-user 10-minute pair count ~100×
     // per decade: a quadratic replication artifact, not a workload.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = read("events")
+    val events = spark.read.schema(Tables.eventsSchema(spark, src)).parquet(s"$src/events.parquet")
     val eSpan = span(events, "event_id")
     val uSpan = span(events, "user_id")
     write(replicate(events)(i => df =>

@@ -94,10 +94,12 @@ object LayoutQueries extends graft.QueryModule {
         |WHERE strftime(o_orderdate, '%Y-%m') BETWEEN '1995-01' AND '1995-03'
         |GROUP BY 1 ORDER BY 1""".stripMargin),
       stage = true),
+    // staged: the calendar dim (the partitioned orders are q65's)
     QueryDef("q77_dynamic_pruning", dynamicPartitionPruning, Some(
       """SELECT '1995-Q2' AS quarter, count(*) AS n_orders,
         | sum(CAST(round(o_totalprice*100) AS BIGINT))/100.0 AS sum_total
         |FROM orders
         |WHERE strftime(o_orderdate, '%Y-%m') IN ('1995-04', '1995-05', '1995-06')
-        |GROUP BY 1 ORDER BY 1""".stripMargin)))
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      stage = true))
 }

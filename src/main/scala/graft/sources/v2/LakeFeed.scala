@@ -2,11 +2,13 @@ package graft.sources.v2
 
 import java.util
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -66,6 +68,29 @@ object LakeFeed {
     StructType(tableSchema.fields.toSeq ++ Seq(
       StructField(ChangeTypeCol, StringType, nullable = false),
       StructField(CommitVersionCol, IntegerType, nullable = false)))
+
+  /** Drain lake table `table`'s feed (under the default lake root) to
+    * its end through the real engine (AvailableNow), each micro-batch
+    * written as a `b<batchId>` parquet dir in a fresh temp dir
+    * (overwrite-by-batchId: the q118/q214 idempotent-replay guard).
+    * Returns that dir; read the batches back as `$dir/b*`. */
+  private[v2] def drainToParquet(ss: SparkSession, table: String): String = {
+    val acc = graft.util.TempDirs.create(s"graft_feed_${table}_").toString
+    val q = ss.readStream
+      .format(classOf[LakeFeedProvider].getName)
+      .option("root", GraftLakeStore.defaultRoot)
+      .option("table", table)
+      .load()
+      .writeStream
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        df.write.mode("overwrite").parquet(s"$acc/b$batchId")
+      }
+      .option("checkpointLocation", s"$acc/_chk")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    acc
+  }
 }
 
 private[v2] class LakeFeedTable(handle: TableHandle, schema0: StructType)

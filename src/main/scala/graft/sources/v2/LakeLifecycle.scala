@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
+import graft.streaming.StreamingQueries
 
 /** Second wave of lake-table lifecycle operators, all over the
   * file-backed [[GraftLakeStore]] (round 9): incremental change-feed
@@ -52,28 +53,11 @@ object LakeLifecycle extends graft.QueryModule {
 
   // ---- q216: change-feed consumer ----------------------------------
 
-  /** Runs the feed over q208's staged table once per (app, dir),
-    * accumulating each micro-batch as `b<batchId>` parquet dirs
-    * (overwrite-by-batchId: the q118/q214 idempotent-replay guard). */
+  /** Runs the feed over q208's staged table once per (app, dir). */
   private def ensureFeedAcc(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "lake.feed") {
-      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = MergeQueries.ensureStaged(s, dir).stripPrefix("graft_lake.")
-      val acc = graft.util.TempDirs.create(s"graft_lake_feed$id" + "_").toString
-      val feed = ss.readStream
-        .format(classOf[LakeFeedProvider].getName)
-        .option("root", GraftLakeStore.defaultRoot)
-        .option("table", tbl)
-        .load()
-      val q = feed.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.write.mode("overwrite").parquet(s"$acc/b$batchId")
-        }
-        .option("checkpointLocation", s"$acc/_chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      acc
+      LakeFeed.drainToParquet(MergeQueries.lakeSession(s), tbl)
     }
 
   /** q216: reconstruct the table's current state from the change feed
@@ -281,26 +265,6 @@ object LakeLifecycle extends graft.QueryModule {
 
   // ---- q223: native streaming APPEND sink ---------------------------
 
-  /** Stage the events source as three files so maxFilesPerTrigger=1
-    * yields three genuine micro-batches (the q115 split-3 device). */
-  private def ensureEventsSplit(s: SparkSession, dir: String): String =
-    Staged.once(s, dir, "lake.events_split") {
-      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
-      ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val out = graft.util.TempDirs.create(s"graft_lake_evsplit$id" + "_")
-      val ev = ss.read.parquet(s"$dir/events.parquet")
-      (0 until 3).foreach { i =>
-        val part = graft.util.TempDirs.create(s"graft_lake_evpart$i" + "_")
-        ev.filter(col("event_id") % 3 === i).coalesce(1)
-          .write.mode("overwrite").parquet(part.toString)
-        val l = java.nio.file.Files.list(part)
-        val f = try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally l.close()
-        java.nio.file.Files.move(f, out.resolve(s"events_$i.parquet"))
-      }
-      out.toString
-    }
-
   /** Staging: `writeStream.toTable` straight into a lake table — the
     * catalog's native STREAMING_WRITE path, no foreachBatch. Each
     * micro-batch epoch commits as one snapshot carrying its (queryId,
@@ -308,17 +272,16 @@ object LakeLifecycle extends graft.QueryModule {
     * (LakeFeedSpec pins the dedup and the 3-epoch history). With the
     * change-feed source (q216) this closes the loop: streams in and
     * out of the lake, both through the real engine. The stream's source
-    * is the three-file events split, staged first. */
+    * is the split-3 events staging the streaming queries share
+    * (q115's device: three files, one micro-batch each). */
   private def ensureStreamSink(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "lake.stream_sink") {
-      val src = ensureEventsSplit(s, dir)
       val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
       val tbl = s"graft_lake.lake.events_sink$id"
       ss.sql(s"CREATE TABLE $tbl (event_id BIGINT, user_id BIGINT, value_cents BIGINT)")
-      val schema = graft.Tables.eventsSchema(ss, dir)
       val chk = graft.util.TempDirs.create(s"graft_lake_sinkchk$id" + "_").toString
-      val q = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val q = StreamingQueries.eventsStream(ss, dir, StreamingQueries.stageDirSplit(s, dir),
+          oneFilePerTrigger = true)
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"),
           Exact.cents(col("value")).as("value_cents"))
@@ -594,6 +557,7 @@ object LakeLifecycle extends graft.QueryModule {
       Some(graft.operators.CdcOps.oracle("q97_cdc_merge")), stage = true, lifecycle = true),
     // the streamed-in table must hold exactly the source: same rollup
     // over raw events
+    // staged: the sink stream run, over the streaming queries' split-3 copy
     QueryDef("q223_streaming_lake_sink", streamingLakeSink, Some(
       """SELECT count(*) AS n_events,
         | count(DISTINCT user_id) AS n_users,
@@ -602,12 +566,14 @@ object LakeLifecycle extends graft.QueryModule {
         |FROM events""".stripMargin),
       stage = true, lifecycle = true),
     // the z-ordered rewrite changes layout only: same box over raw rows
+    // staged: the random then z-ordered lake writes
     QueryDef("q224_lake_zorder", zorderedLakeScan, Some(
       """SELECT count(*) AS n_items,
         | CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS sum_price
         |FROM lineitem
-        |WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 8""".stripMargin)),
+        |WHERE l_partkey BETWEEN 50 AND 150 AND l_suppkey BETWEEN 2 AND 8""".stripMargin),
+      stage = true),
     // expiration moved no data: the retained latest = the seed
     // (rollback restored it), q209's oracle verbatim
     // staged: the expiration
@@ -634,11 +600,13 @@ object LakeLifecycle extends graft.QueryModule {
     QueryDef("q220_partitioned_lake", partitionedLakeScan,
       Some(graft.sources.LayoutQueries.oracle("q65_partition_pruning")), stage = true),
     // skipping must not change the answer: same range over raw orders
+    // staged: the range-clustered ingest
     QueryDef("q221_lake_data_skipping", dataSkippingScan, Some(
       """SELECT count(*) AS n_orders,
         | CAST(sum(CAST(round(o_totalprice*100) AS BIGINT)) / 100.0 AS DOUBLE)
         |  AS sum_total
-        |FROM orders WHERE o_orderkey BETWEEN 100 AND 1000""".stripMargin)),
+        |FROM orders WHERE o_orderkey BETWEEN 100 AND 1000""".stripMargin),
+      stage = true),
     // each version's manifest row count recomputed from the raw
     // tables: v1 = the seed, v2 = seed − deletes + inserts under q97's
     // change-set (matched-D = 1995-order customers whose max status is

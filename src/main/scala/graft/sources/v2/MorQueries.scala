@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.{QueryDef, Staged}
 
 /** Merge-on-read DML as a declared surface (round 9, second wave):
@@ -68,29 +67,13 @@ object MorQueries extends graft.QueryModule {
          |FROM $tbl ORDER BY c_custkey""".stripMargin)
   }
 
-  /** Tail the merge-on-read table's change feed once per (app, dir),
-    * accumulating micro-batches as parquet (the q216 device). The feed
-    * reads the commits of q225's staged table, so that staging runs
-    * first. */
+  /** Tail the merge-on-read table's change feed once per (app, dir)
+    * (the q216 device). The feed reads the commits of q225's staged
+    * table, so that staging runs first. */
   private def ensureMorFeed(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "lake.mor_feed") {
       val tbl = ensureMorStaged(s, dir).stripPrefix("graft_lake.")
-      val (ss, id) = (MergeQueries.lakeSession(s), nextId.incrementAndGet())
-      val acc = graft.util.TempDirs.create(s"graft_mor_feed$id" + "_").toString
-      val q = ss.readStream
-        .format(classOf[LakeFeedProvider].getName)
-        .option("root", GraftLakeStore.defaultRoot)
-        .option("table", tbl)
-        .load()
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.write.mode("overwrite").parquet(s"$acc/b$batchId")
-        }
-        .option("checkpointLocation", s"$acc/_chk")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      acc
+      LakeFeed.drainToParquet(MergeQueries.lakeSession(s), tbl)
     }
 
   /** q226: the MERGE commit's delete stream — exactly the matched

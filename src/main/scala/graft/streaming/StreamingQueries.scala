@@ -1,13 +1,14 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.{QueryDef, Staged}
+import graft.{QueryDef, Staged, Tables}
 import graft.operators.Exact
 
 /** Declared queries that run through the REAL StreamExecution engine —
@@ -17,10 +18,111 @@ import graft.operators.Exact
   * these make the streaming path itself a first-class CORRECTNESS row:
   * the oracle is the equivalent batch SQL, and a streaming run over
   * bounded input MUST converge to it exactly.
+  *
+  * Every query is built from the same parts: a staged copy of the
+  * events file, read back by [[eventsStream]]; stream-scoped session
+  * confs set by [[withConfs]]; and, for memory-sink queries, [[drain]].
   */
 object StreamingQueries extends graft.QueryModule {
 
   private val runId = new AtomicInteger()
+
+  // ---- running a bounded stream -------------------------------------
+
+  /** Run `body` with the session confs `kvs` set, then put each key
+    * back as it was: its prior value, or unset if it was unset. Every
+    * conf a stream sets is STREAM-scoped (pinned into its checkpoint at
+    * first run), so batch queries in the same session are untouched. */
+  private[streaming] def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll // explicitly set keys only: no defaults
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** An explicitly-sized state-store count, for [[withConfs]].
+    *
+    * A stateful streaming operator creates one state-store instance per
+    * shuffle partition, and EVERY store pays a per-micro-batch commit
+    * (snapshot + maintenance) regardless of how little state it holds —
+    * so the store count is a fixed per-batch cost, not free parallelism.
+    * Inheriting the batch shuffle setting (32 here) makes tiny local
+    * state pay 32 commits/batch: measured 9.5 s → 3.5 s on the
+    * stream-stream join at sf0.1 by sizing it to 8. On a cluster this
+    * is the same knob a production job sets per-stream (to executors ×
+    * cores, or to state volume / target-partition-size) — the point is
+    * that it is a STREAM-scoped decision pinned into the checkpoint at
+    * first run, never an inherited batch default. */
+  private def statePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
+
+  /** The RocksDB state-store provider, for [[withConfs]]: the
+    * transformWithState queries run on it, while HDFS-backed stores
+    * elsewhere are untouched. */
+  private val rocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `stream` to completion (AvailableNow drains the bounded input)
+    * into a freshly named memory sink in output `mode`, and return
+    * `project` of the sink's table as a local DataFrame. The sink's temp
+    * view is dropped however the run ends: repeated invocations in one
+    * session (warmup + bench + tests) must not accumulate result copies
+    * in the driver for the JVM's lifetime, and a failed stream must not
+    * leave its partial rows behind. */
+  private[streaming] def drain(stream: DataFrame, mode: String)(
+      project: DataFrame => DataFrame): DataFrame = {
+    val s = stream.sparkSession
+    val name = s"graft_stream_${runId.incrementAndGet()}"
+    try {
+      val q = stream.writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+      val result = project(s.table(name))
+      s.createDataFrame(java.util.Arrays.asList(result.collect(): _*), result.schema)
+    } finally s.catalog.dropTempView(name)
+  }
+
+  // ---- staging the events source ------------------------------------
+
+  /** A file stream over `src`, a staged copy of $dir/events.parquet. It
+    * declares the file's raw schema ([[Tables.eventsSchema]] also sets
+    * the conf its reads rely on) and normalizes `ts` like [[Tables]];
+    * `oneFilePerTrigger` replays a multi-file staging as one micro-batch
+    * per file. */
+  private[graft] def eventsStream(s: SparkSession, dir: String, src: String,
+      oneFilePerTrigger: Boolean = false): DataFrame = {
+    val r = s.readStream.schema(Tables.eventsSchema(s, dir))
+    (if (oneFilePerTrigger) r.option("maxFilesPerTrigger", "1") else r)
+      .parquet(src)
+      .transform(Tables.normalizeEventTs)
+  }
+
+  /** The events file as a batch frame in its raw physical shape (the
+    * shape the staged slices must keep: a stream reads them all under
+    * one declared schema). */
+  private def rawEvents(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(Tables.eventsSchema(s, dir)).parquet(s"$dir/events.parquet")
+
+  /** Write `df` as ONE parquet file at `dst` (a staged slice must be a
+    * single file in the stream's source dir, not a Spark output
+    * directory). The write goes through a temp dir that is deleted
+    * however the write ends. */
+  private def writeSingleFile(df: DataFrame, dst: Path): Unit = {
+    val tmp = Files.createTempDirectory("graft_single_file")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val l = Files.list(tmp)
+      val part = try l.filter(_.toString.endsWith(".parquet")).findFirst().get() finally l.close()
+      Files.move(part, dst)
+    } finally graft.util.TempDirs.delete(tmp)
+  }
 
   /** Copy $dir/events.parquet into a staging dir under `prefix` —
     * handling BOTH layouts: the driver testdata's single file, and a
@@ -29,7 +131,7 @@ object StreamingQueries extends graft.QueryModule {
     * the result silently drains zero rows — the streaming queries
     * would "pass" on nothing. Directory streams are closed (they hold
     * an fd until GC otherwise). */
-  private def copyEvents(dir: String, dst: java.nio.file.Path, prefix: String): Unit = {
+  private def copyEvents(dir: String, dst: Path, prefix: String): Unit = {
     val src = Paths.get(s"$dir/events.parquet")
     if (Files.isDirectory(src)) {
       val s = Files.list(src)
@@ -55,28 +157,6 @@ object StreamingQueries extends graft.QueryModule {
       p.toString
     }
 
-  /** Run a streaming query with an explicitly-sized state-store count.
-    *
-    * A stateful streaming operator creates one state-store instance per
-    * shuffle partition, and EVERY store pays a per-micro-batch commit
-    * (snapshot + maintenance) regardless of how little state it holds —
-    * so the store count is a fixed per-batch cost, not free parallelism.
-    * Inheriting the batch shuffle setting (32 here) makes tiny local
-    * state pay 32 commits/batch: measured 9.5 s → 3.5 s on the
-    * stream-stream join at sf0.1 by sizing it to 8. On a cluster this
-    * is the same knob a production job sets per-stream (to executors ×
-    * cores, or to state volume / target-partition-size) — the point is
-    * that it is a STREAM-scoped decision pinned into the checkpoint at
-    * first run, never an inherited batch default. Restores the session
-    * conf afterwards so batch queries in the same session are untouched.
-    */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, old)
-  }
-
   /** Staging dir holding events.parquet TWICE (distinct file names) —
     * the at-least-once-delivery fixture for the streaming dedup query. */
   private def stageDirDuplicated(s: SparkSession, dir: String): String =
@@ -87,64 +167,20 @@ object StreamingQueries extends graft.QueryModule {
       p.toString
     }
 
-  /** Daily rollup executed as a Structured Streaming job: micro-batched
-    * file source, event-time tumbling window, exact integer-cents sums
-    * (order-independent — a streaming engine gives no fold-order
-    * guarantees across micro-batches), AvailableNow trigger draining
-    * the bounded input, memory sink in complete mode. At cluster scale
-    * the same dataflow runs unbounded with a watermark bounding state;
-    * here the full-history complete mode is what makes the final table
-    * comparable to the batch oracle. */
-  def streamingDaily(s: SparkSession, dir: String): DataFrame = {
-    // events.ts physical shape varies by fixture generation: the stream
-    // declares the file's raw schema (eventsSchema also sets the conf
-    // its reads rely on) and normalizes like graft.Tables
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, 8) {
-    val events = s.readStream.schema(schema).parquet(stageDir(s, dir))
-      .transform(graft.Tables.normalizeEventTs)
-    val agg = events
-      .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(
-        count(lit(1)).as("num_events"),
-        (sum(Exact.cents(col("value"))) / 100.0).cast("double").as("total_value"))
-      .select(to_date(col("w.start")).as("event_date"),
-        col("num_events"), col("total_value"))
-    val name = s"graft_stream_daily_${runId.incrementAndGet()}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // materialize the final table and DROP the memory sink's temp view —
-    // repeated invocations in one session (warmup + bench + tests) must
-    // not accumulate result copies in the driver for the JVM's lifetime
-    val result = s.table(name).orderBy("event_date")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
-    }
-  }
-
-  /** Staging dir = events.parquet + a one-row far-future SENTINEL file.
-    * Append-mode emission of session windows requires the watermark to
-    * pass each session's END; a bounded input's final sessions would
-    * otherwise never flush (the watermark stops at max(ts) - delay).
-    * The sentinel (user_id = -1, filtered from output) pushes the
-    * frontier past every real session — the standard flush pattern for
-    * draining an event-time stream to completion. */
   /** Write the watermark-flushing sentinel row (user −1, event time
-    * far past every real event) into staging dir `p` — factored so the
-    * single-batch (q95) and time-split (q200) stagings share one
-    * sentinel definition. The sentinel file must carry the SAME
-    * physical ts type as the real event files (the stream reads both
-    * under one probe schema). */
-  private def writeSentinel(s: SparkSession, dir: String, p: java.nio.file.Path): Unit = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = s.read.parquet(s"$dir/events.parquet")
-    val maxTsMicros = graft.Tables.normalizeEventTs(ev)
+    * far past every real event) into staging dir `p` as
+    * zz_sentinel.parquet — shared by the single-batch (q95) and
+    * time-split (q200) stagings. Append-mode emission of session
+    * windows requires the watermark to pass each session's END; a
+    * bounded input's final sessions would otherwise never flush (the
+    * watermark stops at max(ts) - delay). The sentinel (filtered from
+    * output) pushes the frontier past every real session — the
+    * standard flush pattern for draining an event-time stream to
+    * completion. It carries the SAME physical ts type as the real event
+    * files (the stream reads both under one declared schema). */
+  private def writeSentinel(s: SparkSession, dir: String, p: Path): Unit = {
+    val ev = rawEvents(s, dir)
+    val maxTsMicros = Tables.normalizeEventTs(ev)
       .agg(max(unix_micros(col("ts")))).collect().head.getLong(0)
     // past max + gap(30 m) + watermark delay(1 h) + margin(1 h)
     val sentinelMicros = maxTsMicros + 9000L * 1000000L
@@ -157,20 +193,10 @@ object StreamingQueries extends graft.QueryModule {
       .withColumn("ts", sentinelTs)
       .withColumn("user_id", lit(-1L))
       .withColumn("event_type", lit("sentinel"))
-    val tmp = Files.createTempDirectory("graft_sentinel_write")
-    row.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = {
-      val l = Files.list(tmp)
-      try l.filter(f => f.toString.endsWith(".parquet")).findFirst().get()
-      finally l.close()
-    }
-    Files.copy(part, p.resolve("zz_sentinel.parquet"))
-    val w = Files.walk(tmp)
-    try w.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => { Files.deleteIfExists(f); () })
-    finally w.close()
+    writeSingleFile(row, p.resolve("zz_sentinel.parquet"))
   }
 
+  /** Staging dir = events.parquet + the sentinel file. */
   private def stageDirWithSentinel(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "stream.sentinel") {
       val p = graft.util.TempDirs.create("graft_stream_events_sn")
@@ -192,8 +218,7 @@ object StreamingQueries extends graft.QueryModule {
   private def stageDirTimeSplitWithSentinel(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "stream.timesplit") {
       val p = graft.util.TempDirs.create("graft_stream_events_tt")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = rawEvents(s, dir)
       // raw-shape slice key: monotone in event time for every physical
       // ts shape the fixtures have shipped (int64 nanos / NTZ / TZ)
       val tsKey = ev.schema("ts").dataType match {
@@ -204,25 +229,54 @@ object StreamingQueries extends graft.QueryModule {
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val w = (hi - lo) / 3 + 1
       (0 until 3).foreach { i =>
-        val part = graft.util.TempDirs.create(s"graft_stream_tpart$i")
-        ev.filter(tsKey >= lo + i * w && tsKey < lo + (i + 1) * w)
-          .coalesce(1).write.mode("overwrite").parquet(part.toString)
-        val f = {
-          val l = Files.list(part)
-          try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally l.close()
-        }
-        val dst = Paths.get(s"$p/events_$i.parquet")
-        Files.move(f, dst)
+        val dst = p.resolve(s"events_$i.parquet")
+        writeSingleFile(ev.filter(tsKey >= lo + i * w && tsKey < lo + (i + 1) * w), dst)
         Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + i * 2000L))
+          FileTime.fromMillis(System.currentTimeMillis() + i * 2000L))
       }
       writeSentinel(s, dir, p)
       Files.setLastModifiedTime(p.resolve("zz_sentinel.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() + 10000L))
+        FileTime.fromMillis(System.currentTimeMillis() + 10000L))
       p.toString
+    }
+
+  /** Staging dir holding events.parquet split into THREE files so
+    * maxFilesPerTrigger=1 produces multiple micro-batches — the
+    * fixture that actually exercises state CARRY between batches
+    * (a single-file source would fold everything in batch 0 and the
+    * state machine would never resume). Split by event_id mod 3, each
+    * slice one file. Shared by q115, q118, q184, q185, q214 and the
+    * lake's streaming sink (q223). */
+  private[graft] def stageDirSplit(s: SparkSession, dir: String): String =
+    Staged.once(s, dir, "stream.split3") {
+      val p = graft.util.TempDirs.create("graft_stream_events_3")
+      val ev = rawEvents(s, dir)
+      (0 until 3).foreach { i =>
+        writeSingleFile(ev.filter(col("event_id") % 3 === i), p.resolve(s"events_$i.parquet"))
+      }
+      p.toString
+    }
+
+  // ---- the declared streaming queries -------------------------------
+
+  /** Daily rollup executed as a Structured Streaming job: micro-batched
+    * file source, event-time tumbling window, exact integer-cents sums
+    * (order-independent — a streaming engine gives no fold-order
+    * guarantees across micro-batches), AvailableNow trigger draining
+    * the bounded input, memory sink in complete mode. At cluster scale
+    * the same dataflow runs unbounded with a watermark bounding state;
+    * here the full-history complete mode is what makes the final table
+    * comparable to the batch oracle. */
+  def streamingDaily(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8)) {
+      val agg = eventsStream(s, dir, stageDir(s, dir))
+        .groupBy(window(col("ts"), "1 day").as("w"))
+        .agg(
+          count(lit(1)).as("num_events"),
+          (sum(Exact.cents(col("value"))) / 100.0).cast("double").as("total_value"))
+        .select(to_date(col("w.start")).as("event_date"),
+          col("num_events"), col("total_value"))
+      drain(agg, "complete")(_.orderBy("event_date"))
     }
 
   /** Gap-based sessionization through the REAL streaming engine:
@@ -235,33 +289,18 @@ object StreamingQueries extends graft.QueryModule {
     * gap is >= the duration (windows [t, t+gap) merge only on
     * overlap), so the oracle uses >=, unlike q21's strictly-greater
     * lag formulation. */
-  def streamingSessions(s: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, 8) {
-    val events = s.readStream.schema(schema).parquet(stageDirWithSentinel(s, dir))
-      .transform(graft.Tables.normalizeEventTs)
-      .withWatermark("ts", "1 hour")
-    val agg = events
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n"))
-    val name = s"graft_stream_sessions_${runId.incrementAndGet()}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val result = s.table(name)
-      .filter(col("user_id") >= 0) // drop the sentinel's own session
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
-      .orderBy("user_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+  def streamingSessions(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8)) {
+      val agg = eventsStream(s, dir, stageDirWithSentinel(s, dir))
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n"))
+      drain(agg, "append")(_
+        .filter(col("user_id") >= 0) // drop the sentinel's own session
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
+        .orderBy("user_id"))
     }
-  }
 
   /** Streaming exactly-once dedup under at-least-once delivery: the
     * staged source contains every event TWICE (a redelivered file —
@@ -275,44 +314,19 @@ object StreamingQueries extends graft.QueryModule {
     * still catches any redelivery inside the lateness window. The
     * gate then aggregates the emitted rows per day and must equal the
     * batch truth over the ORIGINAL (single-copy) events table. */
-  def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, 8) {
-    val events = s.readStream.schema(schema).parquet(stageDirDuplicated(s, dir))
-      .transform(graft.Tables.normalizeEventTs)
-      .withWatermark("ts", "1 day")
-      .dropDuplicatesWithinWatermark("event_id")
-    val name = s"graft_stream_dedup_${runId.incrementAndGet()}"
-    val q = events.select("event_id", "ts", "value").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val result = s.table(name)
-      .groupBy(to_date(col("ts")).as("event_date"))
-      .agg(
-        count(lit(1)).as("num_events"),
-        (sum(Exact.cents(col("value"))) / 100.0).cast("double").as("total_value"))
-      .orderBy("event_date")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+  def streamingDedup(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8)) {
+      val events = eventsStream(s, dir, stageDirDuplicated(s, dir))
+        .withWatermark("ts", "1 day")
+        .dropDuplicatesWithinWatermark("event_id")
+      drain(events.select("event_id", "ts", "value"), "append")(_
+        .groupBy(to_date(col("ts")).as("event_date"))
+        .agg(
+          count(lit(1)).as("num_events"),
+          (sum(Exact.cents(col("value"))) / 100.0).cast("double").as("total_value"))
+        .orderBy("event_date"))
     }
-  }
 
-  /** Stream-STREAM inner join — the fourth streaming pillar (after
-    * windowed aggregation q71, stateful dedup q92, sessionization
-    * q95): two live streams of the same events joined on user with a
-    * 10-minute follow window, per-user pair counts gated against the
-    * batch self-join. Both sides carry watermarks so the join STATE is
-    * bounded (a buffered row can be dropped once the other side's
-    * frontier passes its maximum match window); emission needs no
-    * sentinel because an inner join emits each match the moment both
-    * rows have arrived. The a_id < b_id condition makes the pair set
-    * well-defined; the oracle is the identical batch predicate. */
   /** State-store count sized to the SOURCE VOLUME, not a constant:
     * the stream-stream join buffers BOTH full sides in state until the
     * watermark passes, so per-store state grows linearly with the
@@ -337,61 +351,32 @@ object StreamingQueries extends graft.QueryModule {
     math.max(8, math.min(32, (bytes / (1L << 20)).toInt))
   }
 
-  def streamingPairJoin(s: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, pairJoinStatePartitions(dir)) {
-    val stream = () => s.readStream.schema(schema).parquet(stageDir(s, dir))
-      .transform(graft.Tables.normalizeEventTs)
-    val a = stream().select(col("event_id").as("a_id"), col("user_id").as("a_user"),
-      col("ts").as("a_ts")).withWatermark("a_ts", "1 hour")
-    val b = stream().select(col("event_id").as("b_id"), col("user_id").as("b_user"),
-      col("ts").as("b_ts")).withWatermark("b_ts", "1 hour")
-    val joined = a.join(b,
-      col("a_user") === col("b_user") &&
-        col("b_ts") >= col("a_ts") &&
-        col("b_ts") <= col("a_ts") + expr("INTERVAL 10 MINUTES") &&
-        col("a_id") < col("b_id"))
-    val name = s"graft_stream_pairs_${runId.incrementAndGet()}"
-    val q = joined.select("a_user").writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val result = s.table(name)
-      .groupBy(col("a_user").as("user_id"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("user_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
-    }
-  }
-
-  /** Staging dir holding events.parquet split into THREE files so
-    * maxFilesPerTrigger=1 produces multiple micro-batches — the
-    * fixture that actually exercises state CARRY between batches
-    * (a single-file source would fold everything in batch 0 and the
-    * state machine would never resume). Split by event_id mod 3, each
-    * slice coalesced to one file. */
-  private def stageDirSplit(s: SparkSession, dir: String): String =
-    Staged.once(s, dir, "stream.split3") {
-      val p = graft.util.TempDirs.create("graft_stream_events_3")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val ev = s.read.parquet(s"$dir/events.parquet")
-      (0 until 3).foreach { i =>
-        val part = graft.util.TempDirs.create(s"graft_stream_part$i")
-        ev.filter(col("event_id") % 3 === i).coalesce(1)
-          .write.mode("overwrite").parquet(part.toString)
-        val f = {
-          val l = Files.list(part)
-          try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally l.close()
-        }
-        Files.move(f, Paths.get(s"$p/events_$i.parquet"))
-      }
-      p.toString
+  /** Stream-STREAM inner join — the fourth streaming pillar (after
+    * windowed aggregation q71, stateful dedup q92, sessionization
+    * q95): two live streams of the same events joined on user with a
+    * 10-minute follow window, per-user pair counts gated against the
+    * batch self-join. Both sides carry watermarks so the join STATE is
+    * bounded (a buffered row can be dropped once the other side's
+    * frontier passes its maximum match window); emission needs no
+    * sentinel because an inner join emits each match the moment both
+    * rows have arrived. The a_id < b_id condition makes the pair set
+    * well-defined; the oracle is the identical batch predicate. */
+  def streamingPairJoin(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(pairJoinStatePartitions(dir))) {
+      val stream = () => eventsStream(s, dir, stageDir(s, dir))
+      val a = stream().select(col("event_id").as("a_id"), col("user_id").as("a_user"),
+        col("ts").as("a_ts")).withWatermark("a_ts", "1 hour")
+      val b = stream().select(col("event_id").as("b_id"), col("user_id").as("b_user"),
+        col("ts").as("b_ts")).withWatermark("b_ts", "1 hour")
+      val joined = a.join(b,
+        col("a_user") === col("b_user") &&
+          col("b_ts") >= col("a_ts") &&
+          col("b_ts") <= col("a_ts") + expr("INTERVAL 10 MINUTES") &&
+          col("a_id") < col("b_id"))
+      drain(joined.select("a_user"), "append")(_
+        .groupBy(col("a_user").as("user_id"))
+        .agg(count(lit(1)).as("n_pairs"))
+        .orderBy("user_id"))
     }
 
   /** Running per-user totals through mapGroupsWithState — the fifth
@@ -403,34 +388,18 @@ object StreamingQueries extends graft.QueryModule {
     * update per user (selected by max event count — the count is
     * strictly monotone per user) must equal the batch per-user
     * aggregate, which is the DuckDB oracle. */
-  def streamingRunningTotals(s: SparkSession, dir: String): DataFrame = {
-    val src = stageDirSplit(s, dir)
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, 8) {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .transform(graft.Tables.normalizeEventTs)
-    val totals = StreamingOps.runningUserTotals(stream)
-      .toDF("user_id", "total_value", "n_events")
-    val name = s"graft_stream_totals_${runId.incrementAndGet()}"
-    val q = totals.writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val result = s.table(name)
-      .groupBy(col("user_id"))
-      .agg(max_by(col("total_value"), col("n_events")).as("total_value"),
-        max(col("n_events")).as("n_events"))
-      .select(col("user_id"), col("n_events"), col("total_value"))
-      .orderBy("user_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+  def streamingRunningTotals(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8)) {
+      val stream = eventsStream(s, dir, stageDirSplit(s, dir), oneFilePerTrigger = true)
+      val totals = StreamingOps.runningUserTotals(stream)
+        .toDF("user_id", "total_value", "n_events")
+      drain(totals, "update")(_
+        .groupBy(col("user_id"))
+        .agg(max_by(col("total_value"), col("n_events")).as("total_value"),
+          max(col("n_events")).as("n_events"))
+        .select(col("user_id"), col("n_events"), col("total_value"))
+        .orderBy("user_id"))
     }
-  }
 
   /** The foreachBatch MERGE sink as a declared query — the sixth
     * streaming pillar (the SINK side: everything else gates
@@ -441,27 +410,22 @@ object StreamingQueries extends graft.QueryModule {
     * integer cents from each partial (round(v·100) is exact for cent
     * values below 2^52), so accumulation order — which a streaming
     * sink never guarantees — cannot move the result. */
-  def streamingForeachBatch(s: SparkSession, dir: String): DataFrame = {
-    val src = stageDirSplit(s, dir)
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, 8) {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .transform(graft.Tables.normalizeEventTs)
-    val target = new ConcurrentHashMap[Long, (Long, Long)]() // user -> (n, cents)
-    StreamingOps.foreachBatchUpsert(stream, (_: Long, partials) =>
-      partials.foreach { case (user, n, v) =>
-        target.merge(user, (n, math.round(v * 100)),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-      })
-    import scala.jdk.CollectionConverters._
-    import s.implicits._
-    target.asScala.toSeq
-      .map { case (u, (n, cents)) => (u, n, cents / 100.0) }
-      .sortBy(_._1)
-      .toDF("user_id", "n_events", "total_value")
+  def streamingForeachBatch(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8)) {
+      val stream = eventsStream(s, dir, stageDirSplit(s, dir), oneFilePerTrigger = true)
+      val target = new ConcurrentHashMap[Long, (Long, Long)]() // user -> (n, cents)
+      StreamingOps.foreachBatchUpsert(stream, (_: Long, partials) =>
+        partials.foreach { case (user, n, v) =>
+          target.merge(user, (n, math.round(v * 100)),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
+        })
+      import scala.jdk.CollectionConverters._
+      import s.implicits._
+      target.asScala.toSeq
+        .map { case (u, (n, cents)) => (u, n, cents / 100.0) }
+        .sortBy(_._1)
+        .toDF("user_id", "n_events", "total_value")
     }
-  }
 
   /** Stream-static enrichment join — the most common production
     * streaming topology: an unbounded fact stream joined to a bounded
@@ -472,30 +436,30 @@ object StreamingQueries extends graft.QueryModule {
     * so the stream side never shuffles for the join — state exists
     * only for the downstream aggregation. Inner join keeps the
     * unmatched-stream-row semantics identical to the batch oracle. */
-  def streamingStaticJoin(s: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.eventsSchema(s, dir)
-    withStatePartitions(s, 8) {
-    val stream = s.readStream.schema(schema).parquet(stageDir(s, dir))
-    val dim = broadcast(graft.Tables(s, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment")))
-    val agg = stream
-      .join(dim, col("user_id") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(Exact.cents(col("value"))) / 100.0).cast("double").as("total_value"))
-    val name = s"graft_stream_static_${runId.incrementAndGet()}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val result = s.table(name).orderBy("c_mktsegment")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+  def streamingStaticJoin(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8)) {
+      val dim = broadcast(Tables(s, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment")))
+      val agg = eventsStream(s, dir, stageDir(s, dir))
+        .join(dim, col("user_id") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_events"),
+          (sum(Exact.cents(col("value"))) / 100.0).cast("double").as("total_value"))
+      drain(agg, "complete")(_.orderBy("c_mktsegment"))
     }
+
+  /** Per-user profiles from [[UserProfileProcessor]] under Spark 4's
+    * `transformWithState`, over the split-3 staging replayed one file
+    * per micro-batch. */
+  private def profiles(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    eventsStream(s, dir, stageDirSplit(s, dir), oneFilePerTrigger = true)
+      .select(col("user_id"), col("event_type"), Exact.cents(col("value")).as("cents"))
+      .as[ProfileEvent]
+      .groupByKey(_.user_id)
+      .transformWithState(new UserProfileProcessor(), TimeMode.None(), OutputMode.Update())
+      .toDF()
   }
 
   /** Per-user profile through Spark 4's `transformWithState` (see
@@ -505,35 +469,10 @@ object StreamingQueries extends graft.QueryModule {
     * micro-batches, update-mode emissions land in the memory sink, and
     * the converged row per user (the emission with the highest
     * n_events — strictly increasing per user, so unique) must equal
-    * the batch aggregate. The provider conf is stream-scoped: set for
-    * this query, restored after (HDFS-backed stores elsewhere are
-    * untouched — provider choice is pinned into each stream's
-    * checkpoint at first run). */
-  def streamingTransformWithState(s: SparkSession, dir: String): DataFrame = {
-    val src = stageDirSplit(s, dir)
-    val schema = graft.Tables.eventsSchema(s, dir)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .transform(graft.Tables.normalizeEventTs)
-      val typed = stream.select(col("user_id"), col("event_type"),
-        Exact.cents(col("value")).as("cents")).as[ProfileEvent]
-      val profiles = typed.groupByKey(_.user_id)
-        .transformWithState(new UserProfileProcessor(),
-          TimeMode.None(), OutputMode.Update())
-      val name = s"graft_stream_tws_${runId.incrementAndGet()}"
-      val q = profiles.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val result = s.table(name)
+    * the batch aggregate. */
+  def streamingTransformWithState(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(8), rocksDb) {
+      drain(profiles(s, dir), "update")(_
         .groupBy(col("user_id"))
         .agg(
           max(col("n_events")).as("n_events"),
@@ -543,17 +482,8 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("user_id"), col("n_events"),
           (col("cents").cast("double") / 100.0).as("total_value"),
           col("n_types"), col("n_errors"))
-        .orderBy("user_id")
-      val rows = result.collect()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(rows: _*), result.schema)
-      s.catalog.dropTempView(name)
-      out
-    } finally oldProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
+        .orderBy("user_id"))
     }
-  }
 
   /** State-store READER (Spark 4's `statestore` batch source) over a
     * transformWithState checkpoint — the ops surface a production
@@ -564,54 +494,33 @@ object StreamingQueries extends graft.QueryModule {
     * through `spark.read.format("statestore")` and must equal the
     * batch per-user aggregate — a full end-to-end pin of state
     * PERSISTENCE (the memory-sink gates only check emissions; this
-    * checks what RocksDB actually holds after the final commit). */
-  def streamingStateStoreRead(s: SparkSession, dir: String): DataFrame = {
-    val src = stageDirSplit(s, dir)
-    val schema = graft.Tables.eventsSchema(s, dir)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // 4 state partitions, not the streaming default 8: this query pays
-    // every store TWICE (once per micro-batch commit, once for the
-    // batch read's store restore) and holds tiny per-user state — the
-    // restore cost is per-STORE, not per-row
-    try withStatePartitions(s, 4) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    * checks what RocksDB actually holds after the final commit). The
+    * emissions themselves are not needed, so the stream writes to the
+    * `noop` sink rather than through [[drain]].
+    *
+    * 4 state partitions, not the streaming default 8: this query pays
+    * every store TWICE (once per micro-batch commit, once for the batch
+    * read's store restore) and holds tiny per-user state — the restore
+    * cost is per-STORE, not per-row. */
+  def streamingStateStoreRead(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(4), rocksDb) {
       val ckpt = graft.util.TempDirs.create("graft_tws_ckpt").toString
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .transform(graft.Tables.normalizeEventTs)
-      val typed = stream.select(col("user_id"), col("event_type"),
-        Exact.cents(col("value")).as("cents")).as[ProfileEvent]
-      val profiles = typed.groupByKey(_.user_id)
-        .transformWithState(new UserProfileProcessor(),
-          TimeMode.None(), OutputMode.Update())
-      val name = s"graft_tws_ckpt_${runId.incrementAndGet()}"
-      val q = profiles.toDF().writeStream.format("memory").queryName(name)
+      val q = profiles(s, dir).writeStream.format("noop")
         .option("checkpointLocation", ckpt)
         .outputMode("update")
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      s.catalog.dropTempView(name)
-      val state = s.read.format("statestore")
+      try q.awaitTermination() finally q.stop()
+      val result = s.read.format("statestore")
         .option("path", ckpt)
         .option("stateVarName", "totals")
         .load()
-      val result = state
         .select(col("key.value").as("user_id"),
           col("value.n").as("n_events"),
           (col("value.cents").cast("double") / 100.0).as("total_value"))
         .orderBy("user_id")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally oldProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
+      s.createDataFrame(java.util.Arrays.asList(result.collect(): _*), result.schema)
     }
-  }
 
   /** Sessionization by EVENT-TIME TIMERS through transformWithState —
     * the TWS feature q184 leaves untouched (it runs TimeMode.None).
@@ -635,43 +544,20 @@ object StreamingQueries extends graft.QueryModule {
     * so StreamingOpsSpec can assert the MECHANISM (every user's final
     * session closes via timer; inline gap closures also occur), which
     * the per-user rollup the gate sees necessarily erases. */
-  private[streaming] def closedSessionsRaw(s: SparkSession, dir: String): DataFrame = {
-    val src = stageDirTimeSplitWithSentinel(s, dir)
-    val schema = graft.Tables.eventsSchema(s, dir)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatePartitions(s, 4) {
+  private[streaming] def closedSessionsRaw(s: SparkSession, dir: String): DataFrame =
+    withConfs(s, statePartitions(4), rocksDb) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .transform(graft.Tables.normalizeEventTs)
+      val sessions = eventsStream(s, dir, stageDirTimeSplitWithSentinel(s, dir),
+          oneFilePerTrigger = true)
         .withWatermark("ts", "1 hour")
-      val typed = stream
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us")).as[SessEvent]
-      val sessions = typed.groupByKey(_.user_id)
+        .groupByKey(_.user_id)
         .transformWithState(new SessionTimerProcessor(),
           TimeMode.EventTime(), OutputMode.Append())
-      val name = s"graft_stream_timers_${runId.incrementAndGet()}"
-      val q = sessions.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val result = s.table(name)
-        .filter(col("user_id") >= 0) // the sentinel's session never closes anyway
-      val rows = result.collect()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(rows: _*), result.schema)
-      s.catalog.dropTempView(name)
-      out
-    } finally oldProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
+      // the sentinel's session never closes anyway
+      drain(sessions.toDF(), "append")(_.filter(col("user_id") >= 0))
     }
-  }
 
   /** Continuous incremental MV maintenance — q210's refresh run by the
     * STREAMING engine: each micro-batch's per-day partial aggregate is
@@ -688,8 +574,7 @@ object StreamingQueries extends graft.QueryModule {
     * [[StreamingOps.replayGuarded]], same contract as q118. */
   private[streaming] def ensureStreamingMv(s: SparkSession, dir: String): String =
     Staged.once(s, dir, "stream.mv") {
-      val src = stageDirSplit(s, dir)
-      val schema = graft.Tables.eventsSchema(s, dir)
+      val stream = eventsStream(s, dir, stageDirSplit(s, dir), oneFilePerTrigger = true)
       val tbl = s"graft_lake.lake.events_mv_${runId.incrementAndGet()}"
       val catConf = "spark.sql.catalog.graft_lake"
       val catCls = classOf[graft.sources.v2.GraftLakeCatalog].getName
@@ -698,9 +583,6 @@ object StreamingQueries extends graft.QueryModule {
         ss.conf.set(catConf, catCls)
         ss.sql(s"CREATE TABLE $tbl (day DATE, n_events BIGINT, cents BIGINT)")
       }
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .transform(graft.Tables.normalizeEventTs)
       val guarded = StreamingOps.replayGuarded[DataFrame] { (batchId, batch) =>
         // the batch frame is bound to the engine's per-batch session;
         // register the catalog there and run the statement — the
@@ -751,7 +633,7 @@ object StreamingQueries extends graft.QueryModule {
   val defs: Seq[QueryDef] = Seq(
     // the streaming-maintained MV must converge to the batch rollup
     // over the whole source, however the engine sliced the stream
-    // staged: the streaming MV; its split-3 source copy is the one q115/q118 share
+    // staged: the streaming MV, over the shared split-3 source copy
     QueryDef("q214_streaming_mv_refresh", streamingMvRefresh, Some(
       """SELECT CAST(ts AS DATE) AS day, count(*) AS n_events,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) / 100.0 AS DOUBLE) AS total_value
@@ -827,14 +709,15 @@ object StreamingQueries extends graft.QueryModule {
       stage = true, lifecycle = true),
     // cumulative state must converge to the plain batch aggregate;
     // cents-exact accumulation makes the double engine-exact
-    // staged: reads q214's split-3 source copy, shared with q118
+    // staged: the shared split-3 source copy (first built by q223's
+    // warm step, which the registry declares earlier)
     QueryDef("q115_streaming_running_totals", streamingRunningTotals, Some(
       """SELECT user_id, count(*) AS n_events,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100.0 AS total_value
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
       stage = true, lifecycle = true),
     // the sink's converged target = the same batch truth as q115
-    // staged: reads q214's split-3 source copy, shared with q115
+    // staged: the shared split-3 source copy, as q115
     QueryDef("q118_streaming_foreachbatch", streamingForeachBatch, Some(
       """SELECT user_id, count(*) AS n_events,
         | CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100.0 AS total_value

@@ -3,6 +3,8 @@ package graft.util
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.control.NonFatal
+
 /** Process-lifetime temp-directory registry: one shutdown hook deletes
   * every registered tree, so repeated Verify/Bench/test runs never
   * accumulate staged copies in /tmp. Deletion is best-effort — a
@@ -12,15 +14,8 @@ object TempDirs {
 
   private val registered = new ConcurrentLinkedQueue[String]()
 
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    registered.forEach { dir =>
-      try {
-        Files.walk(Paths.get(dir))
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      } catch { case _: Throwable => }
-    }
-  }))
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    registered.forEach(dir => delete(Paths.get(dir)))))
 
   /** Create a fresh temp directory cleaned up at JVM exit. */
   def create(prefix: String): Path = {
@@ -31,4 +26,12 @@ object TempDirs {
 
   /** Register an existing directory for exit-time deletion. */
   def register(path: String): String = { registered.add(path); path }
+
+  /** Delete the tree at `p` now, best-effort. */
+  def delete(p: Path): Unit =
+    try {
+      val w = Files.walk(p)
+      try w.sorted(java.util.Comparator.reverseOrder()).forEach(f => { Files.deleteIfExists(f); () })
+      finally w.close()
+    } catch { case NonFatal(_) => }
 }
